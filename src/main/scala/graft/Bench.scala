@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully materialized via a noop
   * datasource write — a plain count() would let Catalyst drop sorts and
-  * projections and under-report the real work.
+  * projections and under-report the real work. A query that throws is
+  * left out of `value` and `queries` and named in `failed`, and the
+  * process then exits 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -22,26 +24,25 @@ object Bench {
 
     def once(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        // operators may persist self-join intermediates; drop them so each
+        // query is measured against a clean executor (no cross-query GC
+        // pressure from accumulated cached frames). clearCache() only
+        // drops catalog-cached tables — eager localCheckpoint RDDs and
+        // async-unpersisting blocks survive it and contaminate every
+        // later query in the same JVM (measured ~3× inflation on
+        // checkpoint-heavy ops), so ALSO unpersist every persistent RDD
+        // synchronously and nudge a GC so block-manager memory is really
+        // back before the next measurement starts.
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
+        System.gc()
       }
-      val t = (System.nanoTime() - t0) / 1e9
-      // operators may persist self-join intermediates; drop them so each
-      // query is measured against a clean executor (no cross-query GC
-      // pressure from accumulated cached frames). clearCache() only
-      // drops catalog-cached tables — eager localCheckpoint RDDs and
-      // async-unpersisting blocks survive it and contaminate every
-      // later query in the same JVM (measured ~3× inflation on
-      // checkpoint-heavy ops), so ALSO unpersist every persistent RDD
-      // synchronously and nudge a GC so block-manager memory is really
-      // back before the next measurement starts.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      t
     }
 
     // Median of N runs per query: a single noisy run (sandbox contention,
@@ -63,12 +64,17 @@ object Bench {
     val warmRun = sys.env.contains("SPARK_GRAFT_BENCH_WARMRUN")
     // (min, median, max): the median is the record; min/max expose the
     // run-to-run spread so a noisy sandbox can't masquerade as a
-    // regression (or hide one).
-    def materialize(name: String): (Double, Double, Double) = {
-      if (warmRun) once(name): Unit
-      val ts = Seq.fill(runs)(once(name)).sorted
-      (ts.head, ts(ts.size / 2), ts.last)
-    }
+    // regression (or hide one). A query that throws on any run gets no
+    // times (None): it is left out of the total and named in "failed".
+    def materialize(name: String): Option[(Double, Double, Double)] =
+      try {
+        if (warmRun) once(name): Unit
+        val ts = Seq.fill(runs)(once(name)).sorted
+        Some((ts.head, ts(ts.size / 2), ts.last))
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
 
     // JVM/session warmup so the first measured query doesn't absorb
     // classloading + codegen bring-up.
@@ -99,7 +105,10 @@ object Bench {
         SparkEntry.queries.keys.toSeq.sorted
       else SparkEntry.headlines.sorted
     warmup(names)
-    val results = names.map(n => n -> materialize(n))
+    val attempted = names.map(n => n -> materialize(n))
+    val results = attempted.collect { case (n, Some(t)) => n -> t }
+    val failed = attempted.collect { case (n, None) => "\"" + n + "\"" }
+      .mkString("[", ",", "]")
     val qs = results.map { case (k, (_, med, _)) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     val spread = results.map { case (k, (min, _, max)) =>
@@ -120,7 +129,8 @@ object Bench {
       s"$host/$boot"
     }
     val warmField = if (warmRun) """"warm":true,""" else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"spread":$spread,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
     spark.stop()
+    if (results.size < names.size) sys.exit(1)
   }
 }

@@ -64,7 +64,10 @@ object Rollup {
                    sets: Seq[Seq[String]]): DataFrame = {
     require(keys.nonEmpty, "keys must be non-empty")
     require(sets.nonEmpty, "sets must be non-empty")
-    require(sets.distinct == sets, s"sets must be distinct, got $sets")
+    // a set is its keys, not their order: permuted copies share one
+    // grouping_id and would double-count the () row's filter
+    require(sets.map(_.toSet).distinct.size == sets.size,
+      s"sets must be distinct (as key sets), got $sets")
     require(sets.forall(_.forall(keys.contains)),
       s"every grouping set must be a subset of keys=$keys")
     val fine = df.groupBy(keys.map(col): _*)

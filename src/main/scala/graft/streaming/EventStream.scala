@@ -19,17 +19,19 @@ import org.apache.spark.sql.types._
   */
 object EventStream {
 
-  /** The engine-internal events shape: ts is int64 epoch ns (SURVEY
-    * §1.2). Driver-shaped parquet (ts TIMESTAMP — the round-7 testdata
-    * physical type) must be normalized to this shape before streaming —
-    * [[graft.tables.Tables.normalizeEventsTs]] is the batch-side
-    * conversion; file-source streams need one declared schema, so mixed
-    * physical types in one directory cannot work.
+  /** The engine-internal events shape: the declared `events` fixture
+    * schema ([[graft.tables.Tables.schemas]]) with ts as int64 epoch ns
+    * (SURVEY §1.2). Driver-shaped parquet (ts TIMESTAMP — the round-7
+    * testdata physical type) must be normalized to this shape before
+    * streaming — [[graft.tables.Tables.normalizeEventsTs]] is the
+    * batch-side conversion; file-source streams need one declared
+    * schema, so mixed physical types in one directory cannot work.
     */
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
+  val eventsSchema: StructType = StructType(
+    graft.tables.Tables.schemas("events").map {
+      case f if f.name == "ts" => f.copy(dataType = LongType)
+      case f => f
+    })
 
   /** File-source stream over a directory of internal-shape events
     * parquet.

@@ -2,21 +2,68 @@ package graft.tables
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** Loaders for the driver testdata (TESTDATA.md): one parquet file per
-  * table under `/root/testdata/sf*`/. Reading is always a plain
-  * `spark.read.parquet` so Catalyst's vectorized reader, predicate
-  * pushdown, and column pruning apply unmodified; at cluster scale the
-  * same call fans out over however many row groups / files the table has.
+  * table under each scale-factor directory `sf*`. Every table's schema
+  * is declared here ([[schemas]]) in footer column order with footer
+  * types, and reading is always `spark.read.schema(schemas(name))
+  * .parquet`: no footer-inference job per read (Shark's
+  * metastore-declared schemas), while Catalyst's vectorized reader,
+  * predicate pushdown, and column pruning apply unmodified. At cluster
+  * scale the same call fans out over however many row groups / files
+  * the table has and skips the footer job across all of them.
+  * TablesSpec pins the declarations to the fixtures' footers.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  private def table(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The fixture catalog: the ten tables' footer schemas. Timestamps
+    * are TIMESTAMP(MICROS, isAdjustedToUTC=false) in every fixture, so
+    * they are `TimestampNTZType`; keys are int32 or int64 as written
+    * (FIXTURES.md §B).
+    */
+  val schemas: Map[String, StructType] = ListMap(
+    "region" -> table("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> table("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> table("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> table("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> table("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType,
+      "p_size" -> IntegerType, "p_retailprice" -> DoubleType),
+    "orders" -> table("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> table("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "events" -> table("event_id" -> LongType, "ts" -> TimestampNTZType,
+      "user_id" -> LongType, "event_type" -> StringType,
+      "value" -> DoubleType, "props" -> StringType),
+    "documents" -> table("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> table("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
+
+  val names: Seq[String] = schemas.keys.toSeq
+
+  /** Reads `name` with its declared schema; an undeclared name fails
+    * before any I/O.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val schema = schemas.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown table '$name'; declared: ${names.mkString(", ")}"))
+    spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -26,13 +73,11 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** `events` with `ts` normalized to the engine's internal int64
-    * epoch-nanoseconds convention (SURVEY §1.2) regardless of the
-    * file's physical type. Early testdata drops wrote parquet
-    * TIMESTAMP(NANOS) — int64 ns under `nanosAsLong` — while the
-    * round-7 regeneration writes TIMESTAMP(MICROS), which Spark reads
-    * as TIMESTAMP_NTZ. The match keeps both working: one codegen'd
-    * projection (`unix_micros · 1000`, exact — µs·1000 cannot overflow
-    * int64 before year 2262), never a data pass. The session timezone
+    * epoch-nanoseconds convention (SURVEY §1.2). The declared schema
+    * reads `ts` as TIMESTAMP_NTZ (the fixtures' TIMESTAMP(MICROS)), so
+    * this is always the conversion branch of [[normalizeEventsTs]]: one
+    * codegen'd projection (`unix_micros · 1000`, exact — µs·1000 cannot
+    * overflow int64 before year 2262), never a data pass. The session timezone
     * is pinned UTC (Sessions.local) so the NTZ→instant cast is
     * identity.
     */
@@ -40,7 +85,11 @@ object Tables {
     normalizeEventsTs(load(s, d, "events"))
 
   /** The `ts` normalization behind [[events]], usable on any
-    * events-shaped frame (spec batch twins read staged copies).
+    * events-shaped frame (spec batch twins read staged copies). The
+    * `LongType` branch serves frames not read through [[load]]: staged
+    * internal-shape copies, or parquet TIMESTAMP(NANOS) read under
+    * `nanosAsLong`. A NANOS fixture read through [[load]] fails instead
+    * (TablesSpec names the drift).
     */
   def normalizeEventsTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {

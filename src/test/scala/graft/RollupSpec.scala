@@ -83,6 +83,8 @@ class RollupSpec extends SparkSpec {
     intercept[IllegalArgumentException](derived(df, Seq.empty))
     intercept[IllegalArgumentException](
       derived(df, Seq(Seq("k1"), Seq("k1"))))
+    intercept[IllegalArgumentException](
+      derived(df, Seq(Seq("k1", "k2"), Seq("k2", "k1"))))
   }
 
   test("property: fromPartials == native ROLLUP and CUBE on random frames") {
