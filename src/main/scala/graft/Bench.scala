@@ -28,21 +28,7 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } finally {
-        // operators may persist self-join intermediates; drop them so each
-        // query is measured against a clean executor (no cross-query GC
-        // pressure from accumulated cached frames). clearCache() only
-        // drops catalog-cached tables — eager localCheckpoint RDDs and
-        // async-unpersisting blocks survive it and contaminate every
-        // later query in the same JVM (measured ~3× inflation on
-        // checkpoint-heavy ops), so ALSO unpersist every persistent RDD
-        // synchronously and nudge a GC so block-manager memory is really
-        // back before the next measurement starts.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-      }
+      } finally Sessions.releaseCached(spark)
     }
 
     // Median of N runs per query: a single noisy run (sandbox contention,

@@ -115,6 +115,24 @@ object Sessions {
       .config("spark.sql.warehouse.dir", warehouseDir)
   }
 
+  /** The cleanup step between two queries in one JVM. Operators may
+    * persist self-join intermediates; drop them so each query starts on
+    * a clean executor (no cross-query GC pressure from accumulated
+    * cached frames). clearCache() only drops catalog-cached tables —
+    * eager localCheckpoint RDDs and async-unpersisting blocks survive it
+    * and contaminate every later query in the same JVM (measured ~3×
+    * inflation on checkpoint-heavy ops), so ALSO unpersist every
+    * persistent RDD synchronously and nudge a GC so block-manager memory
+    * is really back before the next query starts. Session-shared tables
+    * live in the warehouse, not in RDD blocks, so they survive this.
+    */
+  def releaseCached(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
   /** The knob [[graft.pipeline.Bronze.read]] depends on; asserted there,
     * set here.
     */

@@ -502,10 +502,8 @@ object Profiling {
     * Weights must be positive BIGINTs; W·pNum must fit int64.
     */
   private[graft] def lowerQuantileW(v: DataFrame, pNum: Long, pDen: Long,
-                                    buckets: Int = 64,
-                                    persistInput: Boolean = false): DataFrame =
-    lowerQuantilesW(v, Seq(("q0", pNum, pDen)), buckets,
-        persistInput = persistInput)
+                                    buckets: Int = 64): DataFrame =
+    lowerQuantilesW(v, Seq(("q0", pNum, pDen)), buckets)
       .select(col("g"), col("q0"))
 
   /** Several lower p-quantiles per group in ONE bucket pass:
@@ -531,32 +529,10 @@ object Profiling {
   private[graft] def lowerQuantilesW(v: DataFrame,
                                      qs: Seq[(String, Long, Long)],
                                      buckets: Int = 64,
-                                     boundsOpt: Option[DataFrame] = None,
-                                     persistInput: Boolean = false)
+                                     boundsOpt: Option[DataFrame] = None)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // `persistInput` shares ONE materialization of v across the
-    // machinery's passes (bounds, bucket counts, target scan). The
-    // bounds pass is the cache's first and only consumer in its own
-    // job, so its existing action fills the cache with no
-    // parallel-stage race; caller-supplied bounds skip that job, so
-    // fill explicitly. The |G|-sized result is materialized
-    // (selfCleaning) so the cache can be dropped before returning —
-    // callers of a lazy result would otherwise read a dead cache.
-    // MEASURED OFF for the parquet-backed production callers: the
-    // round-15 interleaved A/B (`graft.QcacheAb`, sf1) put the cached
-    // q157 shape at 2.77 s min vs 1.66 uncached and q155 at 2.35 vs
-    // 2.18 — the row-oriented cache write plus the extra fill/
-    // checkpoint job barriers cost more than the two saved COLUMNAR
-    // scans (the q139 persist lesson). The knob exists for callers
-    // whose v is an expensive DERIVED frame, where a re-scan replays
-    // real compute instead of a column-pruned file read.
-    if (persistInput) {
-      val vP = v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (boundsOpt.isDefined) vP.count(): Unit
-      return graft.operators.Dedup.selfCleaning(vP)(
-        lowerQuantilesW(vP, qs, buckets, boundsOpt))
-    }
+    // Never persist v: round-15 QcacheAb put cached q157 at 2.77 s vs 1.66 s uncached.
     require(qs.nonEmpty, "need at least one quantile")
     qs.foreach { case (name, pNum, pDen) =>
       require(pNum >= 1 && pNum <= pDen,

@@ -891,4 +891,63 @@ class AnalyticsOpsSpec extends SparkSpec {
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(bc === sh)
   }
+
+  // ----------------------------------------- exchange-free graph rounds
+
+  /** Shuffle exchanges in `df`'s executed plan, after running it.
+    * ShuffleExchangeExec renders as "Exchange hashpartitioning(...)"
+    * (under AQE as "ShuffleQueryStage"), so matching the class name
+    * would always count 0. ReusedExchange lines embed the reused
+    * child's "Exchange ..." text and would count one shuffle twice, so
+    * they are skipped.
+    */
+  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect(): Unit
+    val pat = "Exchange (hash|range|SinglePartition)|ShuffleQueryStage".r
+    df.queryExecution.executedPlan.toString.linesIterator
+      .filterNot(_.contains("ReusedExchange"))
+      .map(l => pat.findAllIn(l).size).sum
+  }
+
+  test("kCore and LPA broadcast rounds plan no shuffle above a checkpointed hash-partitioned adjacency") {
+    // the premise of GraphOps' broadcast rounds: a repartition(n) +
+    // localCheckpoint LogicalRDD keeps its HashPartitioning(n), so a
+    // round's aggregations by n need no exchange above it. The
+    // checkpoint keeps it only when built with AQE off: under AQE the
+    // repartition's AdaptiveSparkPlanExec reports UnknownPartitioning
+    // (Spark 4.1), so the rounds themselves run under the session's AQE
+    // but the adjacency is built without it.
+    val raw = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L)).toDF("n", "peer")
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqe = spark.conf.get(aqeKey)
+    spark.conf.set(aqeKey, "false")
+    val adj =
+      try raw.repartition(col("n")).localCheckpoint(eager = true)
+      finally spark.conf.set(aqeKey, aqe)
+    def kcoreRound(a: org.apache.spark.sql.DataFrame) = {
+      val keep = a.groupBy("n").agg(count(lit(1)).as("d"))
+        .filter(col("d") >= 1).select("n")
+      a.join(broadcast(keep), Seq("n"), "left_semi")
+        .join(broadcast(keep.withColumnRenamed("n", "peer")), Seq("peer"),
+          "left_semi")
+        .select("n", "peer")
+        .groupBy("n").agg(count(lit(1)).as("deg"))
+    }
+    def lpaRound(a: org.apache.spark.sql.DataFrame) = {
+      val lbl = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node", "lbl")
+      a.join(broadcast(lbl.select(col("node").as("peer"), col("lbl"))), "peer")
+        .groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("cnt"))
+        .groupBy(col("n").as("node"))
+        .agg(min(struct((-col("cnt")).as("neg"), col("lbl")))
+          .getField("lbl").as("lbl"))
+    }
+    try {
+      // the counter is live: the same rounds over the unpartitioned
+      // frame do shuffle
+      assert(shuffleExchanges(kcoreRound(raw)) > 0)
+      assert(shuffleExchanges(lpaRound(raw)) > 0)
+      for (round <- Seq(kcoreRound(adj), lpaRound(adj)))
+        assert(shuffleExchanges(round) === 0, round.queryExecution.executedPlan)
+    } finally adj.unpersist(blocking = true)
+  }
 }

@@ -9,7 +9,7 @@ import graft.tables.Tables
   */
 class TablesSpec extends SparkSpec {
 
-  private val testdata = new java.io.File("/root/testdata")
+  private val testdata = new java.io.File(SparkSpec.testdata)
   private lazy val sfDirs: Seq[String] =
     Option(testdata.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("sf"))
@@ -39,24 +39,11 @@ class TablesSpec extends SparkSpec {
   }
 
   test("declared-schema reads run no Spark job; unknown names fail fast") {
-    val sc = spark.sparkContext
     val dir = sfDirs.head
-    val group = s"tables-zero-job-${System.nanoTime()}"
-    sc.setJobGroup(group, "load and register the fixture catalog")
-    try {
+    assert(jobsStartedBy {
       Tables.names.foreach(n => Tables.load(spark, dir, n))
       Tables.registerAll(spark, dir)
-    } finally sc.clearJobGroup()
-    // the status tracker lags the listener bus: once a later job is
-    // visible, every job submitted before it is too
-    val sentinel = s"$group-sentinel"
-    sc.setJobGroup(sentinel, "listener-bus fence")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (sc.statusTracker.getJobIdsForGroup(sentinel).isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(sentinel).nonEmpty)
-    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    } === 0)
     intercept[IllegalArgumentException](Tables.load(spark, dir, "no_such_table"))
   }
 }
