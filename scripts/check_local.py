@@ -32,9 +32,10 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 def connect(spill_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB capped at half the box's memory, spilling to `spill_dir`.
 
-    Uncapped, DuckDB takes 80 % of RAM before it spills. q161's oracle
-    still runs out of memory on a 15 GB box, capped or not: DuckDB inlines
-    its chained CTEs, and the duplicated plan does not spill.
+    Uncapped, DuckDB takes 80 % of RAM before it spills. Oracles with
+    chained CTEs mark them AS MATERIALIZED (q161, the Classify and BPE
+    oracles): DuckDB otherwise inlines them, and the duplicated plan
+    does not spill.
     """
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     con = duckdb.connect()

@@ -80,7 +80,7 @@ object Sessions {
       // events.ts is parquet TIMESTAMP(NANOS): read as int64 ns (the
       // engine's ns-longs duration/time convention, SURVEY §1.2)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       // scan-split size for THIS local builder only (a cluster deploy
       // owns the knob in spark-submit conf, where the 128m default is
       // right because inputs arrive as thousands of files). Local
@@ -93,15 +93,10 @@ object Sessions {
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // streaming state store: RocksDB (spillable, incremental
-      // checkpoints) is the 100 TB-state choice; the in-memory default
-      // stays for local tests unless opted in — state here is tiny and
-      // HDFSBackedStateStore avoids the native-lib setup cost
+      // streaming state store: HDFSBacked — state here is tiny and it
+      // avoids RocksDB's native-lib setup cost
       .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
       // trust the sort order of bucketed tables at scan time (off by
       // default since 3.0). Safe: Spark only attaches the ordering when
       // a bucket is a SINGLE file, and Skew.bucketed guarantees that by

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(N · doc_len) per document, where one AC scan costs
   * O(doc_len + matches) whatever N is. The automaton is built ONCE on
   * the driver (O(Σ term lengths)), broadcast, and referenced by the
-  * codegen'd [[BlocklistHits]] expression — the [[PrefixGrams]]
-  * broadcast-state idiom.
+  * codegen'd [[BlocklistHits]] expression, which carries the
+  * Broadcast handle as construction state.
   *
   * Matching semantics (pinned by the scalacheck parity spec and the
   * q183 oracle): EVERY occurrence of every term counts — overlapping
@@ -64,8 +64,6 @@ final class AhoCorasick private (
     outCat: Array[Array[Int]],
     outCnt: Array[Array[Long]],
     outLens: Array[Array[Int]]) extends Serializable {
-
-  def nCategories: Int = categories.length
 
   /** goto for a folded char (any value): dense row for ASCII, fail
     * chase over the sparse fallback maps otherwise.
@@ -402,10 +400,9 @@ object BlocklistRedact {
 }
 
 /** `blocklist_hits(text)` → array<long> of per-category term
-  * occurrence counts, automaton carried as broadcast state (the
-  * [[PrefixGrams]] idiom — built via GraftColumnBridge, not the
-  * string registry). Output array index i is category
-  * `ac.categories(i)`.
+  * occurrence counts, automaton carried as broadcast state (built
+  * via GraftColumnBridge, not the string registry). Output array
+  * index i is category `ac.categories(i)`.
   */
 case class BlocklistHits(child: Expression, ac: Broadcast[AhoCorasick])
     extends UnaryExpression {

@@ -52,7 +52,7 @@ object SpanMatchLenKernel {
 }
 
 /** `span_match_len(toksA, posA, toksB, posB)` with the window length
-  * carried as a construction parameter (the [[PrefixGrams]] idiom for
+  * carried as a construction parameter (the [[BlocklistHits]] idiom for
   * non-Expression state; built via GraftColumnBridge, not the string
   * registry). Returns -1 for non-head anchors, else the maximal match
   * length — see [[SpanMatchLenKernel]].

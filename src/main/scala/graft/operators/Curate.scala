@@ -244,8 +244,7 @@ object Curate {
   def corpus(docs: DataFrame, content: Column, id: Column,
              maxHamming: Int = 3, fraction: Double = 0.5): DataFrame =
     corpusCore(docs, content, id, fraction, survivors =>
-      Dedup.simHashClusters(survivors, content, id, maxHamming,
-        pointerDoubling = true))
+      Dedup.simHashClusters(survivors, content, id, maxHamming))
 
   /** [[corpus]] with the near-dup pairing taken from an ALREADY-BUILT
     * full-corpus pair frame ([[Dedup.simHashPairs]] over a superset of
@@ -267,8 +266,7 @@ object Curate {
           .join(ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"),
             "left_semi")
           .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"),
-            "left_semi"),
-        pointerDoubling = true)
+            "left_semi"))
     })
 
   private def corpusCore(docs: DataFrame, content: Column, id: Column,
@@ -280,10 +278,6 @@ object Curate {
     val survivors = Dedup.dropExactDuplicates(docs, content, id)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.selfCleaning(survivors) {
-      // pointerDoubling: the SimHash near-dup graph measures diameter
-      // ~14 at sf0.1 (chained near-dups) — the shortcut join drops the
-      // propagation from 8 to 6 materialized rounds (see q67 in
-      // PLANS.md round-4)
       val reps = clustersOf(survivors)
         .filter(col("doc_id") === col("cluster"))
         .select("doc_id")

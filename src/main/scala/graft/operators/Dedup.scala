@@ -188,20 +188,14 @@ object Dedup {
     * df-order on the strings themselves — different prefix, same final
     * pair set, which is all the gate hashes.
     *
-    * Two physical shapes, same output (spec-asserted equal):
-    *  - `mapSidePrefix = false` (default): explode → shuffle-join df →
-    *    per-doc rank window. All shuffles linear in gram volume, no
-    *    driver-side bound anywhere — the shape that survives any
-    *    corpus size, and also the faster one at local scale (an A/B at
-    *    sf0.1 measured the map-side variant's driver collect +
-    *    broadcast round-trip costing more than these small shuffles).
-    *  - `mapSidePrefix = true`: the df table collects into a broadcast
-    *    hash map and [[graft.expressions.PrefixGrams]] emits each
-    *    doc's prefix MAP-SIDE — zero shuffles of the gram stream; the
-    *    only shuffle left is the candidate equi-join. For corpora
-    *    whose VOCABULARY fits one executor (n-gram vocabularies
-    *    saturate while corpora don't) this removes two full-volume
-    *    shuffles at cluster scale.
+    * One physical shape: explode → shuffle-join df → per-doc rank
+    * window. All shuffles are linear in gram volume and nothing is
+    * bounded by the driver — the shape that survives any corpus size,
+    * and also the faster one at local scale (an A/B at sf0.1 measured a
+    * map-side variant, which collected the df table into a broadcast
+    * hash map to emit each doc's prefix without shuffling the gram
+    * stream, slower: the driver collect + broadcast round-trip cost
+    * more than these small shuffles).
     */
   /** Candidate join from a (doc_id, n_sh, g) prefix stream: equi-join
     * on the gram hash, ordered pair, plus PPJoin's LENGTH FILTER as a
@@ -221,50 +215,32 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
 
-  private def jaccardCandidates(base: DataFrame, threshold: Double,
-                                mapSidePrefix: Boolean): DataFrame = {
+  private def jaccardCandidates(base: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    if (mapSidePrefix) {
-      val spark = base.sparkSession
-      val dfRows = base.select(explode(col("sh")).as("s"))
-        .select(xxhash64(col("s")).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("df"))
-        .collect()
-      val m = new java.util.HashMap[java.lang.Long, java.lang.Long](dfRows.length * 2)
-      dfRows.foreach(r => m.put(r.getLong(0), r.getLong(1)))
-      val bc = spark.sparkContext.broadcast(m)
-      import org.apache.spark.sql.classic.GraftColumnBridge
-      val prefix = base.select(col("doc_id"), col("n_sh"),
-        explode(GraftColumnBridge.column(graft.expressions.PrefixGrams(
-          GraftColumnBridge.expression(col("sh")), threshold, bc))).as("g"))
-      candidateJoin(prefix, threshold)
-    } else {
-      val exploded = base
-        .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), col("n_sh"), xxhash64(col("s")).as("g"))
-      val dfTable = exploded.groupBy("g").agg(count(lit(1)).as("df"))
-      val withDf = exploded.join(dfTable, "g")
-      // floor (not the textbook ceil): one-longer prefix costs a few
-      // extra candidates but is immune to IEEE t·|d| landing a hair
-      // above an integer, which would shorten the prefix below the
-      // recall bound
-      val prefixLen = (col("n_sh") - floor(lit(threshold) * col("n_sh")) + 1)
-      // (df, g) is a deterministic order: a tie means one doc holds two
-      // distinct shingles with equal xxhash64 AND equal df — the two
-      // rows are identical (doc_id, g) tuples after projection, so
-      // whichever row_number picks, the emitted prefix set is the same
-      val prefix = withDf
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
-        .filter(col("rk") <= prefixLen)
-        .select(col("doc_id"), col("n_sh"), col("g"))
-      candidateJoin(prefix, threshold)
-    }
+    val exploded = base
+      .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
+      .select(col("doc_id"), col("n_sh"), xxhash64(col("s")).as("g"))
+    val dfTable = exploded.groupBy("g").agg(count(lit(1)).as("df"))
+    val withDf = exploded.join(dfTable, "g")
+    // floor (not the textbook ceil): one-longer prefix costs a few
+    // extra candidates but is immune to IEEE t·|d| landing a hair
+    // above an integer, which would shorten the prefix below the
+    // recall bound
+    val prefixLen = (col("n_sh") - floor(lit(threshold) * col("n_sh")) + 1)
+    // (df, g) is a deterministic order: a tie means one doc holds two
+    // distinct shingles with equal xxhash64 AND equal df — the two
+    // rows are identical (doc_id, g) tuples after projection, so
+    // whichever row_number picks, the emitted prefix set is the same
+    val prefix = withDf
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
+      .filter(col("rk") <= prefixLen)
+      .select(col("doc_id"), col("n_sh"), col("g"))
+    candidateJoin(prefix, threshold)
   }
 
   def ngramJaccardPairs(docs: DataFrame, content: Column, id: Column,
-                        n: Int = 3, threshold: Double = 0.8,
-                        mapSidePrefix: Boolean = false): DataFrame = {
+                        n: Int = 3, threshold: Double = 0.8): DataFrame = {
     // Persisted once for the 5 consumers (df table, two candidate
     // sides, two verify sides). An A/B tried recompute-per-consumer
     // (the codegen kernel makes each pass cheap, 0.34 s at sf0.1, vs a
@@ -278,7 +254,7 @@ object Dedup {
       .withColumn("n_sh", size(col("sh")).cast(LongType))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     selfCleaning(base) {
-      val cand = jaccardCandidates(base, threshold, mapSidePrefix)
+      val cand = jaccardCandidates(base, threshold)
       val sh = base.select(col("doc_id"), col("sh"), col("n_sh"))
       cand
         .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
@@ -501,14 +477,8 @@ object Dedup {
     * the only shuffle is the final per-doc aggregation. Corpus explode
     * volume is linear in corpus tokens.
     */
-  /** `broadcastProbes = false` is the escape hatch for a probe set too
-    * large for the broadcast budget (the default assumes an eval set,
-    * small by construction): the join falls back to a shuffle on the
-    * gram hash — still linear volume, same values.
-    */
   def contamination(corpus: DataFrame, probes: DataFrame,
-                    content: Column, id: Column, n: Int = 3,
-                    broadcastProbes: Boolean = true): DataFrame = {
+                    content: Column, id: Column, n: Int = 3): DataFrame = {
     // grams travel as 60-bit md5-prefix int64s, never as strings: the
     // broadcast shrinks ~4×, the join probes long keys, and the two
     // COUNT(DISTINCT)s aggregate longs. Collisions are ~(grams)²/2^61 —
@@ -525,7 +495,7 @@ object Dedup {
     // co-aggregated sketches) — instead each distinct count runs as its
     // own partial-deduped branch over the persisted match stream, and
     // the two tiny per-doc results join at the end.
-    val matches = c.join(if (broadcastProbes) broadcast(p) else p, Seq("gh"))
+    val matches = c.join(broadcast(p), Seq("gh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     selfCleaning(matches) {
       val nProbes = matches.select("doc_id", "probe_id").distinct()
@@ -1305,30 +1275,26 @@ object Dedup {
     *
     * Scale shape: each round is one equi-join of the (id, label) frame
     * against the edge list plus a min-aggregate — linear shuffle volume,
-    * no all-pairs anything. Rounds needed = graph diameter; near-dup
-    * graphs are unions of tiny cliques (diameter ≤ 2-3 in practice), so
-    * the loop ends after a handful of rounds. (For adversarial
-    * long-chain graphs the large-star/small-star halving variant bounds
-    * rounds at O(log n); not needed for dedup workloads.) Each round is
-    * checkpointed so the plan stays O(1) deep instead of growing with
-    * the iteration count.
-    */
-  /** `pointerDoubling` — the adversarial-diameter lever: after each
-    * propagation round, also shortcut `label(v) ← min(label(v),
+    * no all-pairs anything. Each round is checkpointed so the plan
+    * stays O(1) deep instead of growing with the iteration count.
+    *
+    * Pointer doubling is the only path: after the propagation hops,
+    * every round also shortcuts `label(v) ← min(label(v),
     * label(label(v)))` (one extra join of the tiny label frame against
     * itself), which bounds rounds at O(log diameter) instead of
     * O(diameter) — a 300-hop chain converges in ~8 rounds instead of
-    * 300. Off by default: near-dup graphs are unions of shallow
-    * cliques, where the shortcut join costs more than the round it
-    * saves. Correctness is unaffected either way — the exit condition
-    * (no label adopted a smaller neighbor label) implies labels are
-    * equal across every edge, hence constant-per-component, and the
-    * component min always keeps its own label.
+    * 300. The shortcut pays on the one real graph: the SimHash near-dup
+    * graph is chained near-dups of diameter ~14, not shallow cliques,
+    * and doubling cut its rounds from 8 to 6 and q67 from ~4.2-5.4 s to
+    * ~3.7-4.3 s at sf0.1 (PLANS.md, "Pointer doubling measured on the
+    * real graph"). Correctness: the exit condition (no label adopted a
+    * smaller label) implies labels are equal across every edge, hence
+    * constant-per-component, and the component min always keeps its
+    * own label.
     */
   def connectedComponents(vertices: DataFrame, idCol: String,
                           edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIters: Int = 50,
-                          pointerDoubling: Boolean = false): DataFrame = {
+                          maxIters: Int = 50): DataFrame = {
     // checkpoint the DIRECTED edges first, then derive both directions
     // from the checkpoint: union(edges, edges.swapped) over the raw
     // frame would re-evaluate the (uncached, typically expensive —
@@ -1360,7 +1326,6 @@ object Dedup {
           least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"))
     }
     while (changed > 0 && rounds < maxIters) {
-      val roundStart = System.nanoTime()
       // TWO hops per materialization: the cost of a round is dominated
       // by the checkpoint+count scheduling, not the tiny joins, so
       // halving the materializations (vs one hop each) cut q67's CC
@@ -1386,19 +1351,12 @@ object Dedup {
       // sound: the shortcut only lowers labels, so `label < old_label`
       // catches hop AND shortcut progress, and changed == 0 still
       // implies the single-hop fixpoint.
-      val stepPlan =
-        if (pointerDoubling) {
-          val parents = two.select(col("id").as("label"), col("label").as("ll"))
-          two.join(parents, Seq("label"), "left")
-            .select(col("id"), col("old_label"),
-              least(col("label"), coalesce(col("ll"), col("label")))
-                .as("label"))
-        } else two
-      val step = stepPlan.localCheckpoint(eager = false)
+      val parents = two.select(col("id").as("label"), col("label").as("ll"))
+      val step = two.join(parents, Seq("label"), "left")
+        .select(col("id"), col("old_label"),
+          least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+        .localCheckpoint(eager = false)
       changed = step.filter(col("label") < col("old_label")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $rounds: changed=$changed " +
-          s"t=${(System.nanoTime() - roundStart) / 1000000} ms")
       labels = step.select(col("id"), col("label"))
       rounds += 1
     }
@@ -1409,8 +1367,7 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds " +
           s"($changed labels still changing); the graph diameter exceeds " +
-          "the round cap — pass pointerDoubling = true (O(log diameter) " +
-          "rounds) or raise maxIters")
+          "the round cap — raise maxIters")
     val isolated = vertices.select(col(idCol).as("id"))
       .join(labels.select("id"), Seq("id"), "left_anti")
       .withColumn("label", col("id"))
@@ -1424,10 +1381,8 @@ object Dedup {
     * cluster representative, drop the rest").
     */
   def simHashClusters(docs: DataFrame, content: Column, id: Column,
-                      maxHamming: Int = 3,
-                      pointerDoubling: Boolean = false): DataFrame =
-    simHashClustersFrom(docs, id,
-      simHashPairs(docs, content, id, maxHamming), pointerDoubling)
+                      maxHamming: Int = 3): DataFrame =
+    simHashClustersFrom(docs, id, simHashPairs(docs, content, id, maxHamming))
 
   /** [[simHashClusters]] over an ALREADY-BUILT pair frame ((doc_a,
     * doc_b, …) — [[simHashPairs]]' output, possibly persisted):
@@ -1435,11 +1390,10 @@ object Dedup {
     * (the train-once economics; the fused operator delegates here, so
     * both paths are value-identical).
     */
-  def simHashClustersFrom(docs: DataFrame, id: Column, pairs: DataFrame,
-                          pointerDoubling: Boolean = false): DataFrame = {
+  def simHashClustersFrom(docs: DataFrame, id: Column,
+                          pairs: DataFrame): DataFrame = {
     val labels = connectedComponents(
-      docs.select(id.as("doc_id")), "doc_id", pairs, "doc_a", "doc_b",
-      pointerDoubling = pointerDoubling)
+      docs.select(id.as("doc_id")), "doc_id", pairs, "doc_a", "doc_b")
     // Sizes via aggregate + join, NOT a count-over-cluster window: a
     // boilerplate mega-cluster is one hot key, and the window form
     // buffers it in a single un-splittable task, while the join form
@@ -1500,10 +1454,8 @@ object Dedup {
     * @return (doc_id, cluster, cluster_size, keep_id, kept 0/1)
     */
   def clusterRepresentatives(docs: DataFrame, content: Column, id: Column,
-                             score: Column, maxHamming: Int = 3,
-                             pointerDoubling: Boolean = false): DataFrame =
-    clusterRepresentativesFrom(
-      simHashClusters(docs, content, id, maxHamming, pointerDoubling),
+                             score: Column, maxHamming: Int = 3): DataFrame =
+    clusterRepresentativesFrom(simHashClusters(docs, content, id, maxHamming),
       docs, id, score)
 
   /** [[clusterRepresentatives]] over an ALREADY-BUILT cluster frame

@@ -356,29 +356,29 @@ object GraphOps {
                  scale: Long = 1000000L): String = {
     val iterCtes = (1 to iters).map { k =>
       val prevH = if (k == 1) "h0" else s"h${k - 1}"
-      s"""rawa$k AS (
+      s"""rawa$k AS MATERIALIZED (
          |  SELECT nodes.node, CAST(COALESCE(s.s, 0) AS BIGINT) AS x
          |  FROM nodes LEFT JOIN (
          |    SELECT e.dst AS node, SUM($prevH.x) AS s
          |    FROM e JOIN $prevH ON e.src = $prevH.node
          |    GROUP BY e.dst) s ON nodes.node = s.node),
-         |qa$k AS (SELECT GREATEST(CAST(SUM(x) AS BIGINT) // $scale, 1) AS q
+         |qa$k AS MATERIALIZED (SELECT GREATEST(CAST(SUM(x) AS BIGINT) // $scale, 1) AS q
          |         FROM rawa$k),
-         |a$k AS (SELECT node, x // q AS x FROM rawa$k CROSS JOIN qa$k),
-         |rawh$k AS (
+         |a$k AS MATERIALIZED (SELECT node, x // q AS x FROM rawa$k CROSS JOIN qa$k),
+         |rawh$k AS MATERIALIZED (
          |  SELECT nodes.node, CAST(COALESCE(s.s, 0) AS BIGINT) AS x
          |  FROM nodes LEFT JOIN (
          |    SELECT e.src AS node, SUM(a$k.x) AS s
          |    FROM e JOIN a$k ON e.dst = a$k.node
          |    GROUP BY e.src) s ON nodes.node = s.node),
-         |qh$k AS (SELECT GREATEST(CAST(SUM(x) AS BIGINT) // $scale, 1) AS q
+         |qh$k AS MATERIALIZED (SELECT GREATEST(CAST(SUM(x) AS BIGINT) // $scale, 1) AS q
          |         FROM rawh$k),
-         |h$k AS (SELECT node, x // q AS x FROM rawh$k CROSS JOIN qh$k)"""
+         |h$k AS MATERIALIZED (SELECT node, x // q AS x FROM rawh$k CROSS JOIN qh$k)"""
         .stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (SELECT DISTINCT src, dst FROM ($edgesSql)),
-       |nodes AS ($nodesSql),
-       |h0 AS (SELECT node, CAST($scale AS BIGINT) AS x FROM nodes),
+    s"""WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ($edgesSql)),
+       |nodes AS MATERIALIZED ($nodesSql),
+       |h0 AS MATERIALIZED (SELECT node, CAST($scale AS BIGINT) AS x FROM nodes),
        |$iterCtes
        |SELECT a$iters.node, a$iters.x AS auth_scaled,
        |  h$iters.x AS hub_scaled
@@ -883,7 +883,6 @@ object GraphOps {
     val ns = takeBounded("hitsBounded",
       nodes.select(col("node").cast(LongType)), maxNodes, "node")
       .map(_.getLong(0))
-    val inNodes = ns.toSet
     val es = takeBounded("hitsBounded",
       edges.select(col("src").cast(LongType), col("dst").cast(LongType))
         .distinct(),

@@ -1058,13 +1058,7 @@ object Similarity {
     */
   final case class IvfadcModel private[operators] (
       coarseDf: DataFrame, booksDf: DataFrame, codes: DataFrame,
-      nCells: Int, searchFrom: Long, m: Int, subLen: Int) {
-    /** Same model with the corpus codes materialized — callers that
-      * serve several probes off one model pay the encode once.
-      */
-    def withMaterializedCodes: IvfadcModel =
-      copy(codes = codes.localCheckpoint(eager = true))
-  }
+      nCells: Int, searchFrom: Long, m: Int, subLen: Int)
 
   /** Train the IVFADC quantizers and encode the corpus (the expensive
     * half of [[ivfadcTopK]], split out so several retrievals share

@@ -608,19 +608,17 @@ object TextAnalysis {
     * per term) + one window; every step is a hash-shuffle on a bounded
     * key, linear at corpus scale.
     */
-  def tfIdfTopTerms(docs: DataFrame, k: Int,
-                    broadcastDf: Boolean = true): DataFrame = {
+  def tfIdfTopTerms(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tok = docs.select(col("doc_id"),
       explode(split(col("text"), "\\s+")).as("term"))
     val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     // df table = the distinct-term vocabulary — broadcast it so tf is
     // never re-shuffled from its (doc,term) partitioning onto term
-    // (the q47 vocabulary-broadcast pattern; pass broadcastDf=false
-    // when the vocabulary outgrows the broadcast budget)
+    // (the q47 vocabulary-broadcast pattern)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.select(countDistinct(col("doc_id")).as("n_docs"))
-    val scored = tf.join(if (broadcastDf) broadcast(dfreq) else dfreq, "term")
+    val scored = tf.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(n))
       .withColumn("idf",
         (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))

@@ -500,7 +500,7 @@ object Extensions {
   private def sharedSimhashClusters(s: SparkSession, d: String): DataFrame =
     sharedTable(s, d, "graft_graph.simhash_clusters") {
       Dedup.simHashClustersFrom(Tables.documents(s, d), col("doc_id"),
-        sharedSimhashPairs(s, d), pointerDoubling = true)
+        sharedSimhashPairs(s, d))
     }
 
   private val q67 = Q("q67_neardup_clusters",
@@ -1032,22 +1032,26 @@ object Extensions {
     * formulation (identical semantics to UNPIVOT on both engines).
     */
   private val q88 = Q("q88_unpivot",
-    // r17: sort BEFORE the unpivot — (l_orderkey, l_linenumber) is a
-    // unique key, so ordering the 1× base rows and emitting the three
-    // measures in alphabetical order per row yields exactly the
-    // ORDER BY (okey, linenumber, measure) total order while the
-    // range sort processes N rows instead of 3N (unpivot's Expand is
-    // narrow and order-preserving). Same bag of rows, same order,
-    // oracle unchanged.
+    // Range-partition the N base rows BEFORE the unpivot, so the
+    // exchange carries N rows instead of 3N, then sort each partition
+    // after it. (l_orderkey, l_linenumber) is NOT unique in the
+    // fixtures (~25 % of sf0.001 keys repeat), so a base-row sort plus
+    // the order-preserving Expand would emit dupA's three measures
+    // before dupB's — out of ORDER BY order. Range partitioning keeps
+    // every key in one partition and the partitions in key order, so
+    // the per-partition sort yields the global order; `value` breaks
+    // ties between duplicate keys, which makes the sequence the same
+    // under any partitioning (QueryOrderSpec). Oracle unchanged.
     (s, d) => Tables.lineitem(s, d)
       .select("l_orderkey", "l_linenumber", "l_quantity",
         "l_extendedprice", "l_discount")
-      .orderBy("l_orderkey", "l_linenumber")
+      .repartitionByRange(col("l_orderkey"), col("l_linenumber"))
       .unpivot(
         ids = Array(col("l_orderkey"), col("l_linenumber")),
         values = Array(col("l_discount"), col("l_extendedprice"), col("l_quantity")),
         variableColumnName = "measure",
-        valueColumnName = "value"),
+        valueColumnName = "value")
+      .sortWithinPartitions("l_orderkey", "l_linenumber", "measure", "value"),
     Some("""SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
                    l_quantity AS value FROM lineitem
             UNION ALL

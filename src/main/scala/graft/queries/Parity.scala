@@ -29,8 +29,6 @@ import graft.tables.Tables
   */
 object Parity {
 
-  private val Dec: DecimalType = DecimalType(38, 6)
-
   type QFn = (SparkSession, String) => DataFrame
 
   /** name → (spark fn, duckdb oracle SQL, include in bench headline set) */

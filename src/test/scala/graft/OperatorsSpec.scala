@@ -284,6 +284,9 @@ class OperatorsSpec extends SparkSpec {
       n = 3, threshold = 0.5).collect()
     assert(pairs.length === 1)
     assert(pairs.head.getAs[Double]("jaccard") === 1.0)
+    // short grams at a low threshold: partial overlaps become pairs too
+    assert(!Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"),
+      n = 2, threshold = 0.3).isEmpty)
   }
 
   test("shingles kernel ≡ the HOF chain it replaced (values AND order)") {
@@ -369,18 +372,6 @@ class OperatorsSpec extends SparkSpec {
         size(array_intersect(col("a"), col("b"))).cast("long").as("c"))
       .filter(col("k") =!= col("c")).count()
     assert(badInt === 0L, "sorted_intersect_count diverges from array_intersect")
-  }
-
-  test("jaccard candidates: map-side PrefixGrams path ≡ shuffle path") {
-    // pairs must be identical through either physical candidate shape
-    val a = Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"),
-      n = 2, threshold = 0.3, mapSidePrefix = false)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val b = Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"),
-      n = 2, threshold = 0.3, mapSidePrefix = true)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(a.nonEmpty)
-    assert(a === b)
   }
 
   private lazy val vecs = spark.createDataFrame(Seq(
@@ -1055,29 +1046,37 @@ class OperatorsSpec extends SparkSpec {
     // min-propagation (O(diameter) rounds)
     val chainE = (0L until 300L).map(i => (i, i + 1)).toDF("src", "dst")
     val chainV = (0L to 300L).toDF("v")
-    // plain propagation at a tight cap must refuse (wrong labels would
-    // otherwise escape silently)...
+    // doubling needs 8 rounds here: a cap below that must refuse (wrong
+    // labels would otherwise escape silently)...
     intercept[IllegalStateException] {
       Dedup.connectedComponents(chainV, "v", chainE, "src", "dst",
-        maxIters = 20)
+        maxIters = 7)
     }
-    // ...while doubling converges well inside it, to the single component
+    // ...while a cap of 20 (far below the diameter) converges to the
+    // single component
     val labels = Dedup.connectedComponents(chainV, "v", chainE, "src", "dst",
-      maxIters = 20, pointerDoubling = true)
+      maxIters = 20)
     assert(labels.select("cluster").distinct().as[Long].collect().toSeq === Seq(0L))
 
-    // equality law on a mixed random graph (cliques + a chain + isolates)
+    // a mixed random graph (cliques + a chain + isolates) against a
+    // driver-side union-find that labels each component by its min id
     val rnd = new scala.util.Random(7)
-    val edges = (
+    val pairs =
       (0 until 40).map(_ => { val a = rnd.nextInt(30); (a.toLong, (a + 1 + rnd.nextInt(5)).toLong) }) ++
       (50L until 70L).map(i => (i, i + 1))
-    ).toDF("src", "dst")
-    val verts = (0L to 80L).toDF("v")
-    def run(pd: Boolean) =
-      Dedup.connectedComponents(verts, "v", edges, "src", "dst",
-        pointerDoubling = pd)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(run(true) === run(false))
+    val ids = 0L to 80L
+    val parent = scala.collection.mutable.Map(ids.map(v => v -> v): _*)
+    def find(v: Long): Long = if (parent(v) == v) v else find(parent(v))
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // union toward the smaller root, so every root is its set's min id
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = ids.map(v => (v, find(v))).toSet
+    val got = Dedup.connectedComponents(ids.toDF("v"), "v", pairs.toDF("src", "dst"),
+        "src", "dst")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === expected)
   }
 
   test("incremental near-dup == full LSH run restricted to cross-set pairs") {

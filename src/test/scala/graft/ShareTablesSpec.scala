@@ -50,7 +50,7 @@ class ShareTablesSpec extends SparkSpec {
   test("q67 (clusters built inside the pairs lock) equals inline simHashClusters") {
     val docs = Tables.documents(spark, mid)
     val inline = rows(Dedup.simHashClusters(docs, col("text"), col("doc_id"),
-        maxHamming = 3, pointerDoubling = true).orderBy("doc_id"))
+        maxHamming = 3).orderBy("doc_id"))
     assert(inline.nonEmpty)
     assert(rows(query("q67_neardup_clusters", mid)) === inline)
   }
