@@ -71,7 +71,7 @@ object Lakehouse {
   def rollbackTo(spark: SparkSession, fqTable: String, version: Int): Unit = {
     require(listVersions(spark, fqTable).contains(version),
       s"$fqTable has no retained version $version")
-    publish(spark, fqTable, version)
+    publish(spark, fqTable, version, liveVersion(spark, fqTable))
   }
 
   /** Collect table + column statistics for the LIVE version of a
@@ -92,15 +92,16 @@ object Lakehouse {
     spark.sql(s"ANALYZE TABLE ${fqTable}__v$v COMPUTE STATISTICS$forCols")
   }
 
-  /** Point the `fqTable` view at version `v`. `cols` (when known)
-    * pins the view's column order to the producing frame's: a
+  /** Point the `fqTable` view at version `v`, recording `prev` (the
+    * version it served until now) as the superseded one. `cols` (when
+    * known) pins the view's column order to the producing frame's: a
     * partitioned `saveAsTable` physically moves partition columns to
     * the end of the stored schema, and the view projection is what
     * restores the declared order (silver's keys-first contract) on the
     * read surface.
     */
   private def publish(spark: SparkSession, fqTable: String, v: Int,
-                      cols: Seq[String] = Nil): Unit = {
+                      prev: Option[Int], cols: Seq[String] = Nil): Unit = {
     val projection =
       if (cols.isEmpty) "*" else cols.map(c => s"`$c`").mkString(", ")
     // the view records which version is live and which one it
@@ -109,7 +110,6 @@ object Lakehouse {
     // must protect and what versionDrift compares against; after a
     // ROLLBACK the numerically-highest version is NOT the
     // previously-serving one, so "max version" is not derivable.
-    val prev = liveVersion(spark, fqTable)
     val props = (Seq(s"'graft.live_version' = '$v'") ++
       prev.filter(_ != v).map(p => s"'graft.prev_version' = '$p'"))
       .mkString(", ")
@@ -127,13 +127,11 @@ object Lakehouse {
           r.getString(1).toInt }
     }.toOption.flatten
 
-  /** The version the live view currently serves. Falls back to the
-    * highest version for pointers published before the property existed
-    * (or recovered via `SELECT *`).
+  /** The version the live view currently serves; `None` when there is
+    * no view.
     */
   def liveVersion(spark: SparkSession, fqTable: String): Option[Int] =
     viewProp(spark, fqTable, "graft.live_version")
-      .orElse(versions(spark, fqTable).maxOption)
 
   /** The version the live pointer superseded (what was serving before
     * the last publish/rollback) — the comparison base for
@@ -147,14 +145,13 @@ object Lakehouse {
     * it — the engine's equivalent of dbt's `CREATE … __dbt_tmp` + swap
     * (transform/target/run/f1_transform/models/silver/laps.sql:6-20),
     * but with a SINGLE catalog operation as the commit point instead of
-    * the reference's (and our previous) rename pair. `CREATE OR REPLACE
-    * VIEW` is one atomic metastore mutation, so there is NO window in
-    * which the live name is missing: readers planning before the
-    * publish resolve the old version, readers planning after resolve
-    * the new one, and a crash at any point leaves the pointer on the
-    * last fully-written version. A failure while writing the new
-    * version (bad data, executor loss, contract breach) never touches
-    * the pointer at all.
+    * the reference's rename pair. `CREATE OR REPLACE VIEW` is one
+    * atomic metastore mutation, so there is NO window in which the live
+    * name is missing: readers planning before the publish resolve the
+    * old version, readers planning after resolve the new one, and a
+    * crash at any point leaves the pointer on the last fully-written
+    * version. A failure while writing the new version (bad data,
+    * executor loss, contract breach) never touches the pointer at all.
     *
     * Superseded version tables are garbage-collected after the publish,
     * keeping the `retainVersions` most recent ones. The pointer flip is
@@ -169,43 +166,29 @@ object Lakehouse {
   def ctasSwap(spark: SparkSession, df: DataFrame, fqTable: String,
                partitionBy: Seq[String] = Nil, retainVersions: Int = 1): Unit = {
     recoverSwap(spark, fqTable)
-    // one-time migration of a pre-view layout: a physical table holding
-    // the live name moves into the version chain, then the view takes
-    // the name (the only path with a non-atomic window, and it is never
-    // re-entered once the layout is views-over-versions)
-    if (spark.catalog.tableExists(fqTable) &&
-        spark.catalog.getTable(fqTable).tableType != "VIEW") {
-      spark.sql(s"ALTER TABLE $fqTable RENAME TO ${fqTable}__v0")
-      publish(spark, fqTable, 0)
-    }
-    val next = versions(spark, fqTable).maxOption.getOrElse(-1) + 1
+    val have = versions(spark, fqTable)
+    val live = liveVersion(spark, fqTable)
+    val next = have.maxOption.getOrElse(-1) + 1
     val writer = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .saveAsTable(s"${fqTable}__v$next")
-    publish(spark, fqTable, next, df.columns.toSeq)    // the commit point
+    publish(spark, fqTable, next, live, df.columns.toSeq)    // the commit point
     // GC superseded + stray versions. The retention window protects the
-    // PREVIOUSLY-LIVE version first (recorded by publish — after a
-    // rollback it is not the numerically-highest one, and it is exactly
-    // the version concurrent readers may still be scanning), then the
-    // most recent others up to retainVersions total.
-    val protect = prevVersion(spark, fqTable).toSeq
-    val others = versions(spark, fqTable)
-      .filter(v => v != next && !protect.contains(v)).sorted
+    // PREVIOUSLY-LIVE version first (after a rollback it is not the
+    // numerically-highest one, and it is exactly the version concurrent
+    // readers may still be scanning), then the most recent others up to
+    // retainVersions total.
+    val protect = live.toSeq
+    val others = have.filter(v => !protect.contains(v)).sorted
     val keepOthers = math.max(0, retainVersions - protect.size)
     (others.dropRight(keepOthers) ++
         (if (retainVersions == 0) protect else Nil))
       .foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${fqTable}__v$v"))
-    spark.sql(s"DROP TABLE IF EXISTS ${fqTable}__tmp") // legacy scaffolding
   }
 
-  /** Recovery for interrupted swaps. With the view-pointer layout the
-    * publish is atomic, so the only states needing repair are (a) the
-    * legacy rename-pair layout's mid-rename crash (live name missing,
-    * previous version stranded under `__backup`) and (b) a crash between
-    * the legacy-migration rename and its publish (live name missing,
-    * version tables present) — both restored here with one catalog op.
-    * Callers that check `tableExists(fqTable)` before rebuilding (e.g.
-    * the streaming merge sink) still call this first; on a healthy
+  /** Recovery for a lost pointer: when the live view is missing (a crash
+    * before the first publish, or a dropped view) but version tables
+    * survive, republish the newest with one catalog op. On a healthy
     * layout it is a metadata no-op.
     *
     * A pointer recovered here projects `SELECT *`, so a PARTITIONED
@@ -216,12 +199,9 @@ object Lakehouse {
     * build restores it.)
     */
   def recoverSwap(spark: SparkSession, fqTable: String): Unit =
-    if (!spark.catalog.tableExists(fqTable)) {
-      if (spark.catalog.tableExists(s"${fqTable}__backup"))
-        spark.sql(s"ALTER TABLE ${fqTable}__backup RENAME TO $fqTable")
-      else versions(spark, fqTable).maxOption
-        .foreach(v => publish(spark, fqTable, v))
-    }
+    if (!spark.catalog.tableExists(fqTable))
+      versions(spark, fqTable).maxOption
+        .foreach(v => publish(spark, fqTable, v, None))
 
   /** Table-managed clustering rewrite — the engine's `OPTIMIZE …
     * ZORDER BY`: rewrite the live version of `fqTable` clustered on

@@ -35,8 +35,8 @@ object Silver {
   }
 
   /** S7 — CTAS materialization of one silver model, via the
-    * transactional tmp-write + rename swap ([[Lakehouse.ctasSwap]]) so a
-    * failed promotion never leaves a half-overwritten table. Partitioning
+    * transactional version-write + view swap ([[Lakehouse.ctasSwap]]) so
+    * a failed promotion never leaves a half-overwritten table. Partitioning
     * the saved table by season keeps dashboard predicates prunable at
     * scale (an improvement over the reference's unpartitioned DuckDB
     * tables; SURVEY §4 row 1).

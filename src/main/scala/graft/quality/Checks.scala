@@ -29,54 +29,31 @@ object Checks {
     }
   }
 
-  /** dbt's `unique` generic test, semantics matched exactly: NULL keys
-    * are excluded before grouping (dbt compiles `where field is not
-    * null` — two NULL-keyed rows do NOT fail), and failures = the
-    * number of DUPLICATED VALUES (one failure row per `group by …
-    * having count(*) > 1` result), not the extra-row count.
+  /** Reads a one-row `(check_name, failures)` frame of the `…Df`
+    * forms below as a scalar result.
     */
-  def unique(df: DataFrame, table: String, columns: Seq[String]): CheckResult = {
-    val nonNullKeys = columns.map(col(_).isNotNull).reduce(_ && _)
-    val dupValues = df.filter(nonNullKeys)
-      .groupBy(columns.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .count()
-    CheckResult(table, columns.mkString("(", ",", ")"), dupValues)
-  }
+  private def scalar(checkDf: DataFrame, table: String, column: String): CheckResult =
+    CheckResult(table, column, checkDf.head().getLong(1))
 
-  /** dbt's `accepted_values` generic test: rows whose column value is
-    * outside the allowed set (NULLs pass, as in dbt — not_null is the
-    * separate probe for those).
-    */
+  /** dbt's `unique` generic test ([[uniqueDf]]). */
+  def unique(df: DataFrame, table: String, columns: Seq[String]): CheckResult =
+    scalar(uniqueDf(df, table, columns), table, columns.mkString("(", ",", ")"))
+
+  /** dbt's `accepted_values` generic test ([[acceptedValuesDf]]). */
   def acceptedValues(df: DataFrame, table: String, column: String,
-                     allowed: Seq[String]): CheckResult = {
-    val failures = df
-      .filter(col(column).isNotNull && !col(column).isin(allowed: _*))
-      .count()
-    CheckResult(table, column, failures)
-  }
+                     allowed: Seq[String]): CheckResult =
+    scalar(acceptedValuesDf(df, table, column, allowed), table, column)
 
-  /** dbt's `relationships` generic test: every non-NULL foreign-key
-    * value in `df.column` must exist in `to.toColumn` (dbt compiles a
-    * `left join … where parent is null` probe; the anti-join is the
-    * same plan with the child side streamed and the parent key set
-    * broadcast when small — the dimension is never shuffled).
-    * NULL children pass, as in dbt.
-    */
+  /** dbt's `relationships` generic test ([[relationshipsDf]]). */
   def relationships(df: DataFrame, table: String, column: String,
-                    to: DataFrame, toColumn: String): CheckResult = {
-    val failures = df.filter(col(column).isNotNull)
-      .join(to.select(col(toColumn).as(column)).distinct(), Seq(column), "left_anti")
-      .count()
-    CheckResult(table, column, failures)
-  }
+                    to: DataFrame, toColumn: String): CheckResult =
+    scalar(relationshipsDf(df, table, column, to, toColumn), table, column)
 
-  /** DataFrame-returning check variants (round 5): one row per check,
+  /** DataFrame-returning check variants: one row per check,
     * `(check_name, failures)` — NO driver collect, so a whole DQ suite
     * composes into one lazily-planned union the engine schedules as
     * independent single-row aggregates (and the t2 oracle can replay).
-    * The scalar variants above remain for imperative gate code.
+    * The scalar variants above read these for imperative gate code.
     */
   def notNullDf(df: DataFrame, table: String, columns: Seq[String]): DataFrame = {
     val wide = df.agg(
@@ -88,6 +65,12 @@ object Checks {
     wide.select(explode(array(rows: _*)).as("r")).select("r.*")
   }
 
+  /** dbt's `unique`, semantics matched exactly: NULL keys are excluded
+    * before grouping (dbt compiles `where field is not null` — two
+    * NULL-keyed rows do NOT fail), and failures = the number of
+    * DUPLICATED VALUES (one failure row per `group by … having
+    * count(*) > 1` result), not the extra-row count.
+    */
   def uniqueDf(df: DataFrame, table: String, columns: Seq[String]): DataFrame = {
     val nonNullKeys = columns.map(col(_).isNotNull).reduce(_ && _)
     df.filter(nonNullKeys)
@@ -99,6 +82,10 @@ object Checks {
         .as("check_name"), col("failures"))
   }
 
+  /** dbt's `accepted_values`: rows whose column value is outside the
+    * allowed set (NULLs pass, as in dbt — not_null is the separate
+    * probe for those).
+    */
   def acceptedValuesDf(df: DataFrame, table: String, column: String,
                        allowed: Seq[String]): DataFrame =
     df.filter(col(column).isNotNull && !col(column).isin(allowed: _*))
@@ -106,6 +93,13 @@ object Checks {
       .select(lit(s"accepted_values:$table.$column").as("check_name"),
         col("failures"))
 
+  /** dbt's `relationships`: every non-NULL foreign-key value in
+    * `df.column` must exist in `to.toColumn` (dbt compiles a `left join
+    * … where parent is null` probe; the anti-join is the same plan with
+    * the child side streamed and the parent key set broadcast when
+    * small — the dimension is never shuffled). NULL children pass, as
+    * in dbt.
+    */
   def relationshipsDf(df: DataFrame, table: String, column: String,
                       to: DataFrame, toColumn: String): DataFrame =
     df.filter(col(column).isNotNull)
@@ -114,20 +108,6 @@ object Checks {
       .agg(count(lit(1)).as("failures"))
       .select(lit(s"relationships:$table.$column").as("check_name"),
         col("failures"))
-
-  /** The reference's full 17-test contract. */
-  def contract(
-      silverLaps: DataFrame, silverWeather: DataFrame, silverResults: DataFrame,
-      dss: DataFrame, tes: DataFrame): Seq[CheckResult] = {
-    val keys = Seq("season", "round", "grand_prix")
-    notNull(silverLaps, "silver.laps", keys) ++
-      notNull(silverWeather, "silver.weather", keys) ++
-      notNull(silverResults, "silver.results", keys) ++
-      notNull(dss, "gold.driver_session_summary",
-        Seq("season", "round", "grand_prix", "driver")) ++
-      notNull(tes, "gold.team_event_summary",
-        Seq("season", "round", "grand_prix", "team"))
-  }
 
   def assertAll(results: Seq[CheckResult]): Unit = {
     val failed = results.filterNot(_.passed)

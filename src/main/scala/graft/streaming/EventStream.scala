@@ -223,16 +223,16 @@ object EventStream {
               .filter(col("__rn") === 1).drop("__rn")
           case None => batch.toDF().dropDuplicates(keys)
         }
-        // a previous run killed inside the swap's rename window leaves
-        // the live name missing — restore from __backup BEFORE the
-        // exists check, or this batch would rebuild from scratch
+        // a dropped view with surviving versions is republished BEFORE
+        // the exists check, or this batch would restart the table from
+        // its own delta
         graft.pipeline.Lakehouse.recoverSwap(spark, fqTable)
-        if (spark.catalog.tableExists(fqTable))
-          graft.pipeline.Lakehouse.ctasSwap(spark,
-            graft.operators.Merge.upsert(spark.table(fqTable), deduped, keys),
-            fqTable, retainVersions = retainVersions)
-        else deduped.write.mode("overwrite").saveAsTable(fqTable)
-        ()
+        val merged =
+          if (spark.catalog.tableExists(fqTable))
+            graft.operators.Merge.upsert(spark.table(fqTable), deduped, keys)
+          else deduped
+        graft.pipeline.Lakehouse.ctasSwap(spark, merged, fqTable,
+          retainVersions = retainVersions)
       }
       .start()
 

@@ -297,6 +297,28 @@ class PipelineSpec extends SparkSpec {
     assert(kept.length === 2, s"expected live + 1 retained, got $kept")
   }
 
+  test("ctasSwap: a steady-state publish runs a pinned number of SQL executions") {
+    import graft.pipeline.Lakehouse
+    spark.sql("CREATE DATABASE IF NOT EXISTS t_budget")
+    def build(tag: String) = spark.range(5).select(col("id"), lit(tag).as("tag"))
+    Lakehouse.ctasSwap(spark, build("v0"), "t_budget.t")
+    Lakehouse.ctasSwap(spark, build("v1"), "t_budget.t")
+    // the third swap with the default retention: write, publish, GC
+    val started = sqlExecutionsStartedBy(
+      Lakehouse.ctasSwap(spark, build("v2"), "t_budget.t"))
+    assert(spark.table("t_budget.t").select("tag").distinct().collect()
+      .map(_.getString(0)).toSeq === Seq("v2"))
+    assert(Lakehouse.listVersions(spark, "t_budget.t") === Seq(1, 2))
+    // one version listing and one live-version read (2 executions each:
+    // the command and its collect), the write (3: save, CTAS, insert),
+    // the view publish and one GC drop. Re-listing the versions and
+    // reading the superseded version back after the publish (2 + 2) and
+    // a `__tmp` drop (1) made it 14 before; a new catalog round trip
+    // fails here.
+    val before = 14
+    assert(started.size === before - 5, started.mkString("\n"))
+  }
+
   test("idempotent-write guard detects existing leaves") {
     assert(Bronze.leafExists(spark, bronzeRoot, "laps", 2024, 1, "bahrain-grand-prix", "R"))
     assert(!Bronze.leafExists(spark, bronzeRoot, "laps", 2025, 1, "bahrain-grand-prix", "R"))

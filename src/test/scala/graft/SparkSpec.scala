@@ -27,6 +27,41 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sc.statusTracker.getJobIdsForGroup(sentinel).nonEmpty)
     sc.statusTracker.getJobIdsForGroup(group).length
   }
+
+  /** Root plan node names of the SQL executions started while `body`
+    * runs (commands, writes and actions alike), counted through a job
+    * group.
+    */
+  def sqlExecutionsStartedBy(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"sql-started-by-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          s.jobGroupId.foreach(g => seen.add((g, s.sparkPlanInfo.nodeName)))
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted block")
+      try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the sentinel's start is
+      // seen, every execution started before it has been seen too
+      sc.setJobGroup(sentinel, "listener-bus fence")
+      try spark.sql("SELECT 1").collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def fenced = seen.asScala.exists(_._1 == sentinel)
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq.collect { case (g, d) if g == group => d }
+  }
 }
 
 object SparkSpec {

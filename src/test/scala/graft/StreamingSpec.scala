@@ -278,6 +278,40 @@ class StreamingSpec extends SparkSpec {
     assert(!spark.catalog.tableExists("t_sink.events_merged__tmp"))
   }
 
+  test("mergeSink: every micro-batch publishes a version behind the view") {
+    val srcDir = java.nio.file.Files.createTempDirectory("graft-sink-batches")
+    // move each copy in whole, so the file source never lists a partial file
+    def stage(name: String): Unit = {
+      val tmp = java.nio.file.Files.createTempFile("graft-sink-stage", ".parquet")
+      java.nio.file.Files.copy(normalizedEventsFile, tmp,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.move(tmp, srcDir.resolve(name),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sink-ckpt").toString
+    spark.sql("CREATE DATABASE IF NOT EXISTS t_sink")
+    val table = "t_sink.events_batches"
+    stage("a.parquet")
+    val q = EventStream.mergeSink(
+      spark.readStream.schema(EventStream.eventsSchema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString),
+      table, Seq("event_id"), ckpt)
+    try {
+      q.processAllAvailable()
+      // the first batch already writes version 0 behind the view pointer
+      assert(spark.catalog.getTable(table).tableType === "VIEW")
+      assert(graft.pipeline.Lakehouse.listVersions(spark, table) === Seq(0))
+      stage("b.parquet")
+      q.processAllAvailable()
+    } finally q.stop()
+
+    val distinctIds = spark.read.parquet(s"$srcDir/a.parquet")
+      .select("event_id").distinct().count()
+    // the second batch re-delivers every event: the upsert collapses them
+    assert(spark.table(table).count() === distinctIds)
+    assert(graft.pipeline.Lakehouse.listVersions(spark, table) === Seq(0, 1))
+  }
+
   test("sessionizeStream: watermark timeout flushes parked sessions (≡ batch)") {
     import spark.implicits._
     val srcDir = java.nio.file.Files.createTempDirectory("graft-sess-src")
