@@ -105,15 +105,21 @@ object StandingIndex {
   private def fq(db: String, name: String, v: Int, suffix: String) =
     s"$db.${name}__v${v}__$suffix"
 
-  /** Version numbers with at least one member table present. */
-  private def versions(spark: SparkSession, db: String,
-                       name: String): Seq[Int] = {
+  /** Member tables of every version, as (version, table name), read
+    * from the session catalog directly (no SQL command).
+    */
+  private def versionTables(spark: SparkSession, db: String,
+                            name: String): Seq[(Int, String)] = {
     val re = (Pattern.quote(name) + "__v(\\d+)__.+").r
     if (!spark.catalog.databaseExists(db)) Nil
-    else spark.catalog.listTables(db).collect().toSeq
-      .flatMap(t => re.unapplySeq(t.name).flatMap(_.headOption))
-      .map(_.toInt).distinct.sorted
+    else spark.sessionState.catalog.listTables(db, s"${name}__v*")
+      .map(_.table).collect { case t @ re(v) => (v.toInt, t) }
   }
+
+  /** Version numbers with at least one member table present. */
+  private def versions(spark: SparkSession, db: String,
+                       name: String): Seq[Int] =
+    versionTables(spark, db, name).map(_._1).distinct.sorted
 
   /** The live manifest row (version + build parameters), or None if
     * the index has never been committed.
@@ -208,11 +214,8 @@ object StandingIndex {
     val keep = Set(next) ++ prev ++
       prevManifest.map(referencedVersions(name, _)).getOrElse(Set.empty) ++
       referencedVersions(name, spark.table(s"$db.$name").collect().head)
-    versions(spark, db, name).filterNot(keep).foreach { v =>
-      spark.catalog.listTables(db).collect()
-        .filter(_.name.startsWith(s"${name}__v${v}__"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.${t.name}"))
-    }
+    versionTables(spark, db, name).filterNot { case (v, _) => keep(v) }
+      .foreach { case (_, t) => spark.sql(s"DROP TABLE IF EXISTS $db.$t") }
     next
   }
 

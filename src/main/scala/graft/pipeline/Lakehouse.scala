@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import graft.quality.Checks
 
 /** The full lakehouse build — the engine's equivalent of `dbt build`
@@ -30,15 +31,15 @@ object Lakehouse {
     }
 
   /** Version numbers of the physical tables backing `fqTable`
-    * (`<table>__v<N>` naming). Catalog-metadata-only — no data scan.
+    * (`<table>__v<N>` naming). Read from the session catalog directly —
+    * no data scan and no SQL command.
     */
   private def versions(spark: SparkSession, fqTable: String): Seq[Int] = {
     val (db, name) = dbAndName(spark, fqTable)
     val re = (java.util.regex.Pattern.quote(name) + "__v(\\d+)").r
     if (!spark.catalog.databaseExists(db)) Nil
-    else spark.catalog.listTables(db).collect().toSeq
-      .flatMap(t => re.unapplySeq(t.name).flatMap(_.headOption))
-      .map(_.toInt)
+    else spark.sessionState.catalog.listTables(db, s"${name}__v*")
+      .map(_.table).collect { case re(v) => v.toInt }
   }
 
   /** Retained version numbers of `fqTable`, ascending — what
@@ -122,9 +123,10 @@ object Lakehouse {
                        key: String): Option[Int] =
     if (!spark.catalog.tableExists(fqTable)) None
     else scala.util.Try {
-      spark.sql(s"SHOW TBLPROPERTIES $fqTable").collect()
-        .collectFirst { case r if r.getString(0) == key =>
-          r.getString(1).toInt }
+      val (db, name) = dbAndName(spark, fqTable)
+      spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(name, Some(db)))
+        .properties.get(key).map(_.toInt)
     }.toOption.flatten
 
   /** The version the live view currently serves; `None` when there is

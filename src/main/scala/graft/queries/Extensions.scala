@@ -17,33 +17,46 @@ import graft.tables.Tables
   */
 object Extensions {
 
-  /** Data dir each share table was last built from, by table name. */
-  private val sharedBuiltFor = scala.collection.mutable.HashMap.empty[String, String]
+  /** Data dir each session-shared artifact was last built from, by key. */
+  private val artifactBuiltFor =
+    scala.collection.mutable.HashMap.empty[String, String]
 
-  /** Session-shared warehouse table `fqName` ("db.table"), built from
-    * `build` once per data dir and re-built when the dir changes or the
-    * table was dropped; every consumer reads the materialization.
+  /** Build a session-shared artifact (share table, bucketed copy, staged
+    * fragments, standing index, trained model) once per data dir: `build`
+    * runs when `key` was last built from another dir or never, or when
+    * `present` says the artifact is gone (a dropped table or view, a wiped
+    * staging dir, a model trained in another session). Every consumer
+    * reads that one materialization, the way a dbt model is read through
+    * `ref()`.
     *
-    * One reentrant lock for all share tables: the check-then-act plus
-    * overwrite `saveAsTable` is only safe sequentially, and the clusters
-    * build calls the pairs builder from inside the lock. Uncontended in
-    * Bench/Verify's sequential case. Residual race: the returned
-    * `s.table(...)` frame reads LAZILY after the lock is released, so a
-    * truly concurrent harness could still observe a mid-overwrite table;
-    * full protection needs the StandingIndex versioned-name +
-    * manifest-flip pattern, not in-place overwrite. Documented, not
-    * built — no concurrent caller exists, and the share tables are
-    * session-scoped scratch.
+    * One reentrant lock for all artifacts: the check-then-act plus an
+    * overwriting write is only safe sequentially, and the clusters share
+    * table builds the pairs one from inside the lock. Uncontended in
+    * Bench/Verify's sequential case. Residual race: a frame over the
+    * artifact reads LAZILY after the lock is released, so a truly
+    * concurrent harness could still observe a mid-overwrite table; full
+    * protection needs the StandingIndex versioned-name + manifest-flip
+    * pattern, not in-place overwrite. Documented, not built — no
+    * concurrent caller exists, and these artifacts are session-scoped
+    * scratch.
+    */
+  private def buildOnce(d: String, key: String, present: => Boolean)(
+      build: => Unit): Unit =
+    artifactBuiltFor.synchronized {
+      if (!artifactBuiltFor.get(key).contains(d) || !present) {
+        build
+        artifactBuiltFor(key) = d
+      }
+    }
+
+  /** Session-shared warehouse table `fqName` ("db.table"), materialized
+    * from `build` through [[buildOnce]].
     */
   private def sharedTable(s: SparkSession, d: String, fqName: String)(
       build: => DataFrame): DataFrame = {
-    sharedBuiltFor.synchronized {
-      if (!sharedBuiltFor.get(fqName).contains(d) ||
-          !s.catalog.tableExists(fqName)) {
-        s.sql(s"CREATE DATABASE IF NOT EXISTS ${fqName.takeWhile(_ != '.')}")
-        build.write.mode("overwrite").saveAsTable(fqName)
-        sharedBuiltFor(fqName) = d
-      }
+    buildOnce(d, fqName, s.catalog.tableExists(fqName)) {
+      s.sql(s"CREATE DATABASE IF NOT EXISTS ${fqName.takeWhile(_ != '.')}")
+      build.write.mode("overwrite").saveAsTable(fqName)
     }
     s.table(fqName)
   }
@@ -486,10 +499,9 @@ object Extensions {
   /** Session-shared SimHash near-dup graph: q49 reports the pairs,
     * q137 counts its triangles, and q67/q179's clustering builds its
     * components — FOUR queries over one banded self-join build (all
-    * at maxHamming = 3 over the full documents table). The
-    * basket-graph idiom, two tiers: the pair table feeds the cluster
-    * table's build; every oracle keeps replaying the full literal
-    * pipeline per query.
+    * at maxHamming = 3 over the full documents table). Two tiers: the
+    * pair table feeds the cluster table's build; every oracle keeps
+    * replaying the full literal pipeline per query.
     */
   private def sharedSimhashPairs(s: SparkSession, d: String): DataFrame =
     sharedTable(s, d, "graft_graph.simhash_pairs") {
@@ -1123,30 +1135,22 @@ object Extensions {
     * and zero Sort (plan-asserted in ScaleSpec over this same builder
     * via [[bucketedJoinFrame]]); the only shuffle in the query is the
     * small post-join aggregation. Bucketing is purely physical, so the
-    * values are oracled against the plain DuckDB join.
+    * values are oracled against the plain DuckDB join. Bucketing is a
+    * LAYOUT, not a query step — production builds the sorted-bucketed
+    * tables once and amortizes them over every join. Bench medians then
+    * measure what recurs (the zero-Exchange join), with the one-time
+    * build inside the first run.
     */
-  /** Bucketing is a LAYOUT, not a query step — production builds the
-    * sorted-bucketed tables once and amortizes them over every join, so
-    * the tables are (re)built only when this process hasn't built them
-    * for `d` yet. Bench medians then measure what recurs (the
-    * zero-Exchange join), with the one-time build inside the first run.
-    */
-  private val bucketedBuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
   def bucketedJoinFrame(s: SparkSession, d: String):
       org.apache.spark.sql.DataFrame = {
     import graft.operators.Skew
-    s.sql("CREATE DATABASE IF NOT EXISTS bkt_q90")
-    // the dir cache alone is not enough: the tables live in a SESSION's
-    // catalog/warehouse, so a fresh session in the same JVM must rebuild
-    if (bucketedBuiltFor.get != d ||
-        !s.catalog.tableExists("bkt_q90.lineitem_b")) {
+    buildOnce(d, "bkt_q90", s.catalog.tableExists("bkt_q90.lineitem_b") &&
+        s.catalog.tableExists("bkt_q90.orders_b")) {
+      s.sql("CREATE DATABASE IF NOT EXISTS bkt_q90")
       Skew.bucketed(Tables.lineitem(s, d), "bkt_q90.lineitem_b", 8,
         "l_orderkey")
       Skew.bucketed(Tables.orders(s, d), "bkt_q90.orders_b", 8,
         "o_orderkey")
-      bucketedBuiltFor.set(d)
     }
     s.table("bkt_q90.lineitem_b")
       .join(s.table("bkt_q90.orders_b"),
@@ -1407,26 +1411,9 @@ object Extensions {
             FROM events WHERE user_id BETWEEN 100 AND 199
             ORDER BY event_id"""))
 
-  /** Small-file compaction round-trip: customer fragmented into 64 tiny
-    * files, compacted shuffle-free (coalesce over the reader's
-    * bin-packed splits), hashed against the untouched source — byte
-    * content must survive any file-boundary rewrite.
-    */
-  /** The 64-fragment input is a FIXTURE (the small-files layout
-    * compaction exists to fix), not part of the operator — stage it
-    * once per session+dataset (the session-cache idiom) so the
-    * measured query is compact + read-back, matching what the oracle
-    * replays (a plain table read).
-    */
-  private val compactFragFor =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
   /** The staging-side analogue of [[graft.pipeline.Bronze.leafExists]]:
-    * the memo alone is not enough — a wiped staging dir under a live
-    * JVM (cleanup scripts, a re-created warehouse) would leave the
-    * memo pointing at nothing and q102 reading a missing path
-    * (round-15 verdict item 4). Same probe every warehouse-table memo
-    * gets via `catalog.tableExists`.
+    * a wiped staging dir under a live JVM (cleanup scripts, a re-created
+    * warehouse) must trigger a re-stage, not a read of a missing path.
     */
   private def stagedParquetExists(s: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -1435,16 +1422,22 @@ object Extensions {
       new org.apache.hadoop.fs.Path(p, "*.parquet")).nonEmpty
   }
 
+  /** Small-file compaction round-trip: customer fragmented into 64 tiny
+    * files, compacted shuffle-free (coalesce over the reader's
+    * bin-packed splits), hashed against the untouched source — byte
+    * content must survive any file-boundary rewrite. The 64-fragment
+    * input is a FIXTURE (the small-files layout compaction exists to
+    * fix), not part of the operator: it is staged once per dataset, so
+    * the measured query is compact + read-back, matching what the
+    * oracle replays (a plain table read).
+    */
   private val q102 = Q("q102_compaction",
     (s, d) => {
       val frag = graft.Sessions.stagingDir("compact_in")
       val out = graft.Sessions.stagingDir("compact_out")
-      compactFragFor.synchronized {
-        if (compactFragFor.get != d || !stagedParquetExists(s, frag)) {
-          Tables.customer(s, d).repartition(64).write.mode("overwrite")
-            .parquet(frag)
-          compactFragFor.set(d)
-        }
+      buildOnce(d, frag, stagedParquetExists(s, frag)) {
+        Tables.customer(s, d).repartition(64).write.mode("overwrite")
+          .parquet(frag)
       }
       graft.operators.Layout.compact(s, frag, out)
       s.read.parquet(out)
@@ -2570,11 +2563,8 @@ object Extensions {
   /** Shared basket-graph build (q141/q156/q171): the frequent
     * part-pair frame is an expensive self-join pipeline that three
     * queries consume — q141 reports it, q156/q171 run graph rounds
-    * over its edges. The q90 session-cache idiom: materialize it ONCE
-    * per session+dataset as a warehouse table (a layout artifact,
-    * like the bucketed join tables and the standing indexes) and let
-    * every consumer read the materialization; oracles are unchanged —
-    * each query still replays the full literal build DuckDB-side.
+    * over its edges. Oracles are unchanged — each query still replays
+    * the full literal build DuckDB-side.
     */
   private def frequentPairsShared(s: SparkSession, d: String): DataFrame =
     sharedTable(s, d, "graft_graph.pair_edges") {
@@ -3394,30 +3384,31 @@ object Extensions {
       .orderBy("id_a", "id_b"),
     Some(Dedup.hammingPairsOracle(maxHamming = 5)))
 
-  // ---- standing probe indexes (q192-q194): the persisted, bucketed,
-  // manifest-versioned corpus side of the three incremental operators.
-  // Built once per session+dataset (the q90 session-cache idiom — the
-  // tables live in a SESSION's catalog/warehouse) with fixture-sized
-  // bucket counts; every probe then reads the bucketed tables with
-  // zero corpus-side exchange (StandingIndexSpec's plan assertion).
-  private val idxBuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String]()
+  // ---- standing probe indexes (q192-q194, q201-q203, q206, q207,
+  // q215-q219): the persisted, bucketed, manifest-versioned corpus side
+  // of the incremental operators, at fixture-sized bucket counts; every
+  // probe reads the bucketed tables with zero corpus-side exchange
+  // (StandingIndexSpec's plan assertion). Each probe query builds only
+  // its own index.
 
-  private def standingIndexes(s: SparkSession, d: String): Unit =
-    if (idxBuiltFor.get != d || !s.catalog.tableExists("graft_idx.docs_match")) {
-      val docs = Tables.documents(s, d)
-      // q188's split: batch = doc_id % 10 = 0
-      StandingIndex.buildMatchIndex(s, docs.filter(col("doc_id") % 10 =!= 0),
-        col("text"), col("doc_id"), minLen = 20, nBuckets = 8,
-        name = "docs_match")
-      // q116/q106's split: corpus = doc_id % 10 < 8
-      val corpus8 = docs.filter(col("doc_id") % 10 < 8)
-      StandingIndex.buildChunkIndex(s, corpus8, col("text"), col("doc_id"),
-        chunkTokens = 8, nBuckets = 8, name = "docs_chunk")
-      StandingIndex.buildNearDupIndex(s, corpus8, col("text"), col("doc_id"),
-        n = 3, k = 8, bands = 4, nBuckets = 8, name = "docs_neardup")
-      idxBuiltFor.set(d)
-    }
+  /** Standing index `graft_idx.<name>`, built by `build(name)` through
+    * [[buildOnce]] keyed by its manifest view, so the presence check
+    * covers exactly what the probe reads. Returns `name`.
+    */
+  private def indexOnce(s: SparkSession, d: String, name: String)(
+      build: String => Unit): String = {
+    val view = s"graft_idx.$name"
+    buildOnce(d, view, s.catalog.tableExists(view))(build(name))
+    name
+  }
+
+  /** q188's split: corpus = doc_id % 10 != 0, batch = doc_id % 10 = 0. */
+  private def matchCorpus(docs: DataFrame) = docs.filter(col("doc_id") % 10 =!= 0)
+  private def matchBatch(docs: DataFrame) = docs.filter(col("doc_id") % 10 === 0)
+
+  /** q116/q106's split: corpus = doc_id % 10 < 8, batch = doc_id % 10 >= 8. */
+  private def dedupCorpus(docs: DataFrame) = docs.filter(col("doc_id") % 10 < 8)
+  private def dedupBatch(docs: DataFrame) = docs.filter(col("doc_id") % 10 >= 8)
 
   /** q188 through the standing index: same oracle, same output, but
     * the corpus side is the persisted anchor/toks/hot tables — probe
@@ -3425,10 +3416,13 @@ object Extensions {
     */
   private val q192 = Q("q192_index_probe_matches",
     (s, d) => {
-      standingIndexes(s, d)
-      StandingIndex.probeMatches(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
-        col("text"), col("doc_id"), name = "docs_match")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_match") { name =>
+        StandingIndex.buildMatchIndex(s, matchCorpus(docs), col("text"),
+          col("doc_id"), minLen = 20, nBuckets = 8, name = name)
+      }
+      StandingIndex.probeMatches(s, matchBatch(docs), col("text"),
+          col("doc_id"), name = idx)
         .orderBy("batch_id", "pos_b", "corpus_id", "pos_c")
     },
     Some(Dedup.incrementalMaximalMatchesOracle(minLen = 20)))
@@ -3438,10 +3432,13 @@ object Extensions {
     */
   private val q193 = Q("q193_index_probe_chunks",
     (s, d) => {
-      standingIndexes(s, d)
-      StandingIndex.probeChunks(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), name = "docs_chunk")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_chunk") { name =>
+        StandingIndex.buildChunkIndex(s, dedupCorpus(docs), col("text"),
+          col("doc_id"), chunkTokens = 8, nBuckets = 8, name = name)
+      }
+      StandingIndex.probeChunks(s, dedupBatch(docs), col("text"),
+        col("doc_id"), name = idx)
     },
     Some(TextAnalysis.chunkDedupIncrementalOracle(chunkTokens = 8,
       corpusWhere = "doc_id % 10 < 8", batchWhere = "doc_id % 10 >= 8")))
@@ -3451,10 +3448,13 @@ object Extensions {
     */
   private val q194 = Q("q194_index_probe_neardups",
     (s, d) => {
-      standingIndexes(s, d)
-      StandingIndex.probeNearDups(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), threshold = 0.8, name = "docs_neardup")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_neardup") { name =>
+        StandingIndex.buildNearDupIndex(s, dedupCorpus(docs), col("text"),
+          col("doc_id"), n = 3, k = 8, bands = 4, nBuckets = 8, name = name)
+      }
+      StandingIndex.probeNearDups(s, dedupBatch(docs), col("text"),
+          col("doc_id"), threshold = 0.8, name = idx)
         .orderBy("new_id", "dup_of")
     },
     Some(Dedup.incrementalNearDupsOracle(n = 3, k = 8, bands = 4,
@@ -3540,12 +3540,11 @@ object Extensions {
     */
   /** Session-shared exact-L2 truth (q199/q205/q213/q214 all audit
     * against the IDENTICAL bruteForceTopKL2(nQueries=8, k=5,
-    * queryFrom=16) over the same embeddings): computed once per
-    * (session, data dir) into a 40-row table — the sharedIvfadcModel /
-    * classifierReportFrom train-once idiom (r17). Every audit's oracle
-    * keeps replaying the full literal brute-force SQL per query; the
-    * saved frame is value-identical (exact doubles, parquet
-    * round-trip-exact), so the gates prove the share changes nothing.
+    * queryFrom=16) over the same embeddings), a 40-row table. Every
+    * audit's oracle keeps replaying the full literal brute-force SQL
+    * per query; the saved frame is value-identical (exact doubles,
+    * parquet round-trip-exact), so the gates prove the share changes
+    * nothing.
     */
   private def sharedBruteTruthL2(s: SparkSession, d: String): DataFrame =
     sharedTable(s, d, "graft_ml.brute_truth_l2") {
@@ -3587,71 +3586,19 @@ object Extensions {
   // the incrementally-published version. The oracles are the SAME
   // full-corpus SQL as q192-q194's — the gate is exactly "a probe
   // cannot tell an incremental publish from a full rebuild".
-  private val idxIncBuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String]()
 
-  private def standingIndexesIncremental(s: SparkSession, d: String): Unit =
-    idxIncBuiltFor.synchronized {
-    if (idxIncBuiltFor.get != d ||
-        !s.catalog.tableExists("graft_idx.docs_match_inc") ||
-        !s.catalog.tableExists("graft_idx.docs_neardup_del") ||
-        !s.catalog.tableExists("graft_idx.docs_chunk_del") ||
-        !s.catalog.tableExists("graft_idx.docs_chunk_ups")) {
-      val docs = Tables.documents(s, d)
-      // match contract (q188/q192): corpus = doc_id % 10 != 0.
-      // Base = 1..5, appended delta = 6..9.
-      StandingIndex.buildMatchIndex(s,
-        docs.filter(col("doc_id") % 10 >= 1 && col("doc_id") % 10 <= 5),
-        col("text"), col("doc_id"), minLen = 20, nBuckets = 8,
-        name = "docs_match_inc")
-      StandingIndex.appendMatchIndex(s,
-        docs.filter(col("doc_id") % 10 >= 6),
-        col("text"), col("doc_id"), name = "docs_match_inc")
-      // chunk/near-dup contract (q116/q106): corpus = doc_id % 10 < 8.
-      // Base = 0..3, appended delta = 4..7.
-      val base4 = docs.filter(col("doc_id") % 10 < 4)
-      val delta4 = docs.filter(col("doc_id") % 10 >= 4 && col("doc_id") % 10 < 8)
-      StandingIndex.buildChunkIndex(s, base4, col("text"), col("doc_id"),
-        chunkTokens = 8, nBuckets = 8, name = "docs_chunk_inc")
-      StandingIndex.appendChunkIndex(s, delta4, col("text"), col("doc_id"),
-        name = "docs_chunk_inc")
-      StandingIndex.buildNearDupIndex(s, base4, col("text"), col("doc_id"),
-        n = 3, k = 8, bands = 4, nBuckets = 8, name = "docs_neardup_inc")
-      StandingIndex.appendNearDupIndex(s, delta4, col("text"), col("doc_id"),
-        name = "docs_neardup_inc")
-      // the delete twin (q216): full-corpus build, then retire the
-      // doc_id ≡ 5 (mod 30) slice as tombstones
-      StandingIndex.buildNearDupIndex(s,
-        docs.filter(col("doc_id") % 10 < 8), col("text"), col("doc_id"),
-        n = 3, k = 8, bands = 4, nBuckets = 8, name = "docs_neardup_del")
-      StandingIndex.deleteFromNearDupIndex(s,
-        docs.filter(col("doc_id") % 10 < 8 && col("doc_id") % 30 === 5)
-          .select("doc_id"),
-        name = "docs_neardup_del")
-      // the chunk delete twin (q218, round 17): same corpus/slice as
-      // the near-dup delete — the refcount machinery must kill
-      // exactly the digests whose referencing docs all retired
-      val chunkCorpus = docs.filter(col("doc_id") % 10 < 8)
-      val chunkDelSlice = docs
-        .filter(col("doc_id") % 10 < 8 && col("doc_id") % 30 === 5)
-      StandingIndex.buildChunkIndex(s, chunkCorpus, col("text"),
-        col("doc_id"), chunkTokens = 8, nBuckets = 8,
-        name = "docs_chunk_del")
-      StandingIndex.deleteFromChunkIndex(s, chunkDelSlice.select("doc_id"),
-        name = "docs_chunk_del")
-      // the chunk upsert twin (q219): delete the slice, re-append the
-      // SAME docs — generation stamps + dead-fp revival must net to
-      // identity against the plain full oracle
-      StandingIndex.buildChunkIndex(s, chunkCorpus, col("text"),
-        col("doc_id"), chunkTokens = 8, nBuckets = 8,
-        name = "docs_chunk_ups")
-      StandingIndex.deleteFromChunkIndex(s, chunkDelSlice.select("doc_id"),
-        name = "docs_chunk_ups")
-      StandingIndex.appendChunkIndex(s, chunkDelSlice, col("text"),
-        col("doc_id"), name = "docs_chunk_ups")
-      idxIncBuiltFor.set(d)
-    }
-    }
+  /** The chunk/near-dup append split of q116/q106's corpus: base =
+    * doc_id % 10 in 0..3, appended delta = 4..7.
+    */
+  private def dedupBase(docs: DataFrame) = docs.filter(col("doc_id") % 10 < 4)
+  private def dedupDelta(docs: DataFrame) =
+    docs.filter(col("doc_id") % 10 >= 4 && col("doc_id") % 10 < 8)
+
+  /** The delete/upsert twins' slice of q116/q106's corpus: doc_id ≡ 5
+    * (mod 30), retired as tombstones after a full build.
+    */
+  private def dedupRetired(docs: DataFrame) =
+    docs.filter(col("doc_id") % 10 < 8 && col("doc_id") % 30 === 5)
 
   /** q192's probe against an incrementally-published match index —
     * identical oracle, so the append path is hash-gated against the
@@ -3659,10 +3606,19 @@ object Extensions {
     */
   private val q201 = Q("q201_index_append_matches",
     (s, d) => {
-      standingIndexesIncremental(s, d)
-      StandingIndex.probeMatches(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
-        col("text"), col("doc_id"), name = "docs_match_inc")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_match_inc") { name =>
+        // q188's corpus (doc_id % 10 != 0): base = 1..5, delta = 6..9
+        StandingIndex.buildMatchIndex(s,
+          docs.filter(col("doc_id") % 10 >= 1 && col("doc_id") % 10 <= 5),
+          col("text"), col("doc_id"), minLen = 20, nBuckets = 8,
+          name = name)
+        StandingIndex.appendMatchIndex(s,
+          docs.filter(col("doc_id") % 10 >= 6),
+          col("text"), col("doc_id"), name = name)
+      }
+      StandingIndex.probeMatches(s, matchBatch(docs), col("text"),
+          col("doc_id"), name = idx)
         .orderBy("batch_id", "pos_b", "corpus_id", "pos_c")
     },
     Some(Dedup.incrementalMaximalMatchesOracle(minLen = 20)))
@@ -3670,10 +3626,15 @@ object Extensions {
   /** q193's probe against an incrementally-published chunk index. */
   private val q202 = Q("q202_index_append_chunks",
     (s, d) => {
-      standingIndexesIncremental(s, d)
-      StandingIndex.probeChunks(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), name = "docs_chunk_inc")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_chunk_inc") { name =>
+        StandingIndex.buildChunkIndex(s, dedupBase(docs), col("text"),
+          col("doc_id"), chunkTokens = 8, nBuckets = 8, name = name)
+        StandingIndex.appendChunkIndex(s, dedupDelta(docs), col("text"),
+          col("doc_id"), name = name)
+      }
+      StandingIndex.probeChunks(s, dedupBatch(docs), col("text"),
+        col("doc_id"), name = idx)
     },
     Some(TextAnalysis.chunkDedupIncrementalOracle(chunkTokens = 8,
       corpusWhere = "doc_id % 10 < 8", batchWhere = "doc_id % 10 >= 8")))
@@ -3681,11 +3642,15 @@ object Extensions {
   /** q194's probe against an incrementally-published near-dup index. */
   private val q203 = Q("q203_index_append_neardups",
     (s, d) => {
-      standingIndexesIncremental(s, d)
-      StandingIndex.probeNearDups(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), threshold = 0.8,
-        name = "docs_neardup_inc")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_neardup_inc") { name =>
+        StandingIndex.buildNearDupIndex(s, dedupBase(docs), col("text"),
+          col("doc_id"), n = 3, k = 8, bands = 4, nBuckets = 8, name = name)
+        StandingIndex.appendNearDupIndex(s, dedupDelta(docs), col("text"),
+          col("doc_id"), name = name)
+      }
+      StandingIndex.probeNearDups(s, dedupBatch(docs), col("text"),
+          col("doc_id"), threshold = 0.8, name = idx)
         .orderBy("new_id", "dup_of")
     },
     Some(Dedup.incrementalNearDupsOracle(n = 3, k = 8, bands = 4,
@@ -3703,11 +3668,15 @@ object Extensions {
     */
   private val q216 = Q("q216_neardup_delete_probe",
     (s, d) => {
-      standingIndexesIncremental(s, d)
-      StandingIndex.probeNearDups(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), threshold = 0.8,
-        name = "docs_neardup_del")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_neardup_del") { name =>
+        StandingIndex.buildNearDupIndex(s, dedupCorpus(docs), col("text"),
+          col("doc_id"), n = 3, k = 8, bands = 4, nBuckets = 8, name = name)
+        StandingIndex.deleteFromNearDupIndex(s,
+          dedupRetired(docs).select("doc_id"), name = name)
+      }
+      StandingIndex.probeNearDups(s, dedupBatch(docs), col("text"),
+          col("doc_id"), threshold = 0.8, name = idx)
         .orderBy("new_id", "dup_of")
     },
     Some(Dedup.incrementalNearDupsOracle(n = 3, k = 8, bands = 4,
@@ -3729,10 +3698,15 @@ object Extensions {
     */
   private val q218 = Q("q218_chunk_idx_delete_probe",
     (s, d) => {
-      standingIndexesIncremental(s, d)
-      StandingIndex.probeChunks(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), name = "docs_chunk_del")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_chunk_del") { name =>
+        StandingIndex.buildChunkIndex(s, dedupCorpus(docs), col("text"),
+          col("doc_id"), chunkTokens = 8, nBuckets = 8, name = name)
+        StandingIndex.deleteFromChunkIndex(s,
+          dedupRetired(docs).select("doc_id"), name = name)
+      }
+      StandingIndex.probeChunks(s, dedupBatch(docs), col("text"),
+        col("doc_id"), name = idx)
     },
     Some(TextAnalysis.chunkDedupIncrementalOracle(chunkTokens = 8,
       corpusWhere = "doc_id % 10 < 8 AND NOT (doc_id % 30 = 5)",
@@ -3750,10 +3724,17 @@ object Extensions {
     */
   private val q219 = Q("q219_chunk_idx_upsert_probe",
     (s, d) => {
-      standingIndexesIncremental(s, d)
-      StandingIndex.probeChunks(s,
-        Tables.documents(s, d).filter(col("doc_id") % 10 >= 8),
-        col("text"), col("doc_id"), name = "docs_chunk_ups")
+      val docs = Tables.documents(s, d)
+      val idx = indexOnce(s, d, "docs_chunk_ups") { name =>
+        StandingIndex.buildChunkIndex(s, dedupCorpus(docs), col("text"),
+          col("doc_id"), chunkTokens = 8, nBuckets = 8, name = name)
+        StandingIndex.deleteFromChunkIndex(s,
+          dedupRetired(docs).select("doc_id"), name = name)
+        StandingIndex.appendChunkIndex(s, dedupRetired(docs), col("text"),
+          col("doc_id"), name = name)
+      }
+      StandingIndex.probeChunks(s, dedupBatch(docs), col("text"),
+        col("doc_id"), name = idx)
     },
     Some(TextAnalysis.chunkDedupIncrementalOracle(chunkTokens = 8,
       corpusWhere = "doc_id % 10 < 8", batchWhere = "doc_id % 10 >= 8")))
@@ -3762,35 +3743,30 @@ object Extensions {
     * raw vectors): coarse cells + PQ over residuals, nprobe-bounded
     * scan ([[graft.operators.Similarity.ivfadcTopK]]). Same layout
     * split as q199's ground truth (queries 16..23, corpus ≥ 24).
-    */
-  /** Session-shared IVFADC model (q204/q205/q212/q213/q214 all train
-    * nCells=16, m=4, ksub=16, iters=4 on the same embeddings): the
-    * production retrieval shape trains ONCE and serves every probe
+    *
+    * q204/q205/q212/q213/q214 all train nCells=16, m=4, ksub=16,
+    * iters=4 on the same embeddings, so they share one trained model:
+    * the production retrieval shape trains ONCE and serves every probe
     * budget — per-query retraining re-paid the two Lloyd trainings
-    * (~4.4 s of each query's 5-6 s at sf1) five times. Same
-    * train-once idiom as the basket graph / standing indexes; the
-    * oracles replay the full literal train per query, unchanged, and
-    * probes over the model are value-identical to the inline
-    * operators (ivfadcTopK itself delegates through the same split).
+    * (~4.4 s of each query's 5-6 s at sf1) five times. The oracles
+    * replay the full literal train per query, unchanged, and probes
+    * over the model are value-identical to the inline operators
+    * (ivfadcTopK itself delegates through the same split).
     */
-  private val ivfadcModelFor = new java.util.concurrent.atomic
-    .AtomicReference[(String, SparkSession, Similarity.IvfadcModel)]()
+  @volatile private var ivfadcModel: Similarity.IvfadcModel = _
 
   private def sharedIvfadcModel(s: SparkSession, d: String)
       : Similarity.IvfadcModel = {
-    val c = ivfadcModelFor.get
-    if (c != null && c._1 == d && (c._2 eq s)) c._3
-    else {
-      // codes stay LAZY (map-only argmin over the broadcast books):
-      // Bench and Verify sweep every persistent RDD between queries
-      // (Sessions.releaseCached), which would orphan a
-      // localCheckpoint-ed codes frame (truncated lineage, blocks
-      // gone) — the trainings are the expensive part anyway
-      val m = Similarity.ivfadcTrain(Tables.embeddings(s, d), nCells = 16,
-        m = 4, ksub = 16, nQueries = 8, iters = 4)
-      ivfadcModelFor.set((d, s, m))
-      m
+    // codes stay LAZY (map-only argmin over the broadcast books): Bench
+    // and Verify sweep every persistent RDD between queries
+    // (Sessions.releaseCached), which would orphan a localCheckpoint-ed
+    // codes frame (truncated lineage, blocks gone) — the trainings are
+    // the expensive part anyway
+    buildOnce(d, "ivfadc_model", ivfadcModel.codes.sparkSession eq s) {
+      ivfadcModel = Similarity.ivfadcTrain(Tables.embeddings(s, d),
+        nCells = 16, m = 4, ksub = 16, nQueries = 8, iters = 4)
     }
+    ivfadcModel
   }
 
   private val q204 = Q("q204_knn_ivfadc",
@@ -3817,50 +3793,21 @@ object Extensions {
       Similarity.bruteForceTopKL2Oracle(nQueries = 8, k = 5,
         queryFrom = 16))))
 
-  // ---- standing ANN index (q206/q207): the persisted IVFADC corpus
-  // side — trained quantizers + encoded codes; probes are
+  // ---- standing ANN index (q206/q207/q215/q217): the persisted IVFADC
+  // corpus side — trained quantizers + encoded codes; probes are
   // batch-bounded (the q192-q194 economics applied to retrieval).
-  private val annIdxBuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String]()
 
-  private def standingAnnIndexes(s: SparkSession, d: String): Unit =
-    annIdxBuiltFor.synchronized {
-    if (annIdxBuiltFor.get != d ||
-        !s.catalog.tableExists("graft_idx.emb_ann") ||
-        !s.catalog.tableExists("graft_idx.emb_ann_del") ||
-        !s.catalog.tableExists("graft_idx.emb_ann_ups")) {
-      val emb = Tables.embeddings(s, d)
-      // q204's exact layout: seeds < 16, queries 16..23, corpus >= 24
-      StandingIndex.buildAnnIndex(s, emb, nCells = 16, m = 4, ksub = 16,
-        corpusFrom = 24, iters = 4, nBuckets = 8, name = "emb_ann")
-      // the incremental twin: quantizers trained on vec_id < 300 only,
-      // the rest of the corpus frozen-encoded by the append publish
-      StandingIndex.buildAnnIndex(s, emb.filter(col("vec_id") < 300),
-        nCells = 16, m = 4, ksub = 16, corpusFrom = 24, iters = 4,
-        nBuckets = 8, name = "emb_ann_inc")
-      StandingIndex.appendAnnIndex(s, emb.filter(col("vec_id") >= 300),
-        name = "emb_ann_inc")
-      // the delete twin: full build, then retire every 7th corpus
-      // vector as tombstones ([[StandingIndex.deleteFromAnnIndex]] —
-      // codes and quantizers untouched on disk, probes anti-join)
-      StandingIndex.buildAnnIndex(s, emb, nCells = 16, m = 4, ksub = 16,
-        corpusFrom = 24, iters = 4, nBuckets = 8, name = "emb_ann_del")
-      StandingIndex.deleteFromAnnIndex(s,
-        emb.filter(col("vec_id") >= 24 && col("vec_id") % 7 === 3)
-          .select("vec_id"),
-        name = "emb_ann_del")
-      // the upsert twin (q217): delete a slice, re-append the same
-      // vectors — generation-stamped tombstones make the round trip
-      // net to identity (the probe must hash-match the plain oracle)
-      val upsSlice = emb.filter(col("vec_id") >= 24 && col("vec_id") % 7 === 3)
-      StandingIndex.buildAnnIndex(s, emb, nCells = 16, m = 4, ksub = 16,
-        corpusFrom = 24, iters = 4, nBuckets = 8, name = "emb_ann_ups")
-      StandingIndex.deleteFromAnnIndex(s, upsSlice.select("vec_id"),
-        name = "emb_ann_ups")
-      StandingIndex.appendAnnIndex(s, upsSlice, name = "emb_ann_ups")
-      annIdxBuiltFor.set(d)
-    }
-    }
+  /** q204's exact layout: seeds < 16, queries 16..23, corpus >= 24. */
+  private def annQueries(emb: DataFrame) =
+    emb.filter(col("vec_id") >= 16 && col("vec_id") < 24)
+
+  private def buildAnn(s: SparkSession, emb: DataFrame, name: String) =
+    StandingIndex.buildAnnIndex(s, emb, nCells = 16, m = 4, ksub = 16,
+      corpusFrom = 24, iters = 4, nBuckets = 8, name = name)
+
+  /** The delete/upsert twins' slice: every 7th corpus vector. */
+  private def annRetired(emb: DataFrame) =
+    emb.filter(col("vec_id") >= 24 && col("vec_id") % 7 === 3)
 
   /** q204 through the STANDING ANN index: same oracle, same output,
     * but training and corpus encoding happened at build time — the
@@ -3870,11 +3817,10 @@ object Extensions {
     */
   private val q206 = Q("q206_index_probe_ann",
     (s, d) => {
-      standingAnnIndexes(s, d)
-      StandingIndex.probeAnn(s,
-        Tables.embeddings(s, d)
-          .filter(col("vec_id") >= 16 && col("vec_id") < 24),
-        k = 5, nprobe = 2, name = "emb_ann")
+      val emb = Tables.embeddings(s, d)
+      val idx = indexOnce(s, d, "emb_ann")(buildAnn(s, emb, _))
+      StandingIndex.probeAnn(s, annQueries(emb), k = 5, nprobe = 2,
+          name = idx)
         .orderBy("query_id", "rnk")
     },
     Some(Similarity.ivfadcTopKOracle(nCells = 16, m = 4, ksub = 16,
@@ -3890,11 +3836,14 @@ object Extensions {
     */
   private val q207 = Q("q207_ann_append_probe",
     (s, d) => {
-      standingAnnIndexes(s, d)
-      StandingIndex.probeAnn(s,
-        Tables.embeddings(s, d)
-          .filter(col("vec_id") >= 16 && col("vec_id") < 24),
-        k = 5, nprobe = 2, name = "emb_ann_inc")
+      val emb = Tables.embeddings(s, d)
+      val idx = indexOnce(s, d, "emb_ann_inc") { name =>
+        buildAnn(s, emb.filter(col("vec_id") < 300), name)
+        StandingIndex.appendAnnIndex(s, emb.filter(col("vec_id") >= 300),
+          name = name)
+      }
+      StandingIndex.probeAnn(s, annQueries(emb), k = 5, nprobe = 2,
+          name = idx)
         .orderBy("query_id", "rnk")
     },
     Some(Similarity.ivfadcTopKOracle(nCells = 16, m = 4, ksub = 16,
@@ -3915,11 +3864,14 @@ object Extensions {
     */
   private val q215 = Q("q215_ann_delete_probe",
     (s, d) => {
-      standingAnnIndexes(s, d)
-      StandingIndex.probeAnn(s,
-        Tables.embeddings(s, d)
-          .filter(col("vec_id") >= 16 && col("vec_id") < 24),
-        k = 5, nprobe = 2, name = "emb_ann_del")
+      val emb = Tables.embeddings(s, d)
+      val idx = indexOnce(s, d, "emb_ann_del") { name =>
+        buildAnn(s, emb, name)
+        StandingIndex.deleteFromAnnIndex(s, annRetired(emb).select("vec_id"),
+          name = name)
+      }
+      StandingIndex.probeAnn(s, annQueries(emb), k = 5, nprobe = 2,
+          name = idx)
         .orderBy("query_id", "rnk")
     },
     Some(Similarity.ivfadcTopKOracle(nCells = 16, m = 4, ksub = 16,
@@ -3939,11 +3891,15 @@ object Extensions {
     */
   private val q217 = Q("q217_ann_upsert_probe",
     (s, d) => {
-      standingAnnIndexes(s, d)
-      StandingIndex.probeAnn(s,
-        Tables.embeddings(s, d)
-          .filter(col("vec_id") >= 16 && col("vec_id") < 24),
-        k = 5, nprobe = 2, name = "emb_ann_ups")
+      val emb = Tables.embeddings(s, d)
+      val idx = indexOnce(s, d, "emb_ann_ups") { name =>
+        buildAnn(s, emb, name)
+        StandingIndex.deleteFromAnnIndex(s, annRetired(emb).select("vec_id"),
+          name = name)
+        StandingIndex.appendAnnIndex(s, annRetired(emb), name = name)
+      }
+      StandingIndex.probeAnn(s, annQueries(emb), k = 5, nprobe = 2,
+          name = idx)
         .orderBy("query_id", "rnk")
     },
     Some(Similarity.ivfadcTopKOracle(nCells = 16, m = 4, ksub = 16,
@@ -3961,9 +3917,8 @@ object Extensions {
     * IDENTICAL classifier (same corpus, same id-split) — q209's report
     * is a pure rollup of q208's per-doc scores, so refitting for the
     * report doubles the expensive half (tokenize + model aggregate).
-    * The basket/SimHash idiom: materialize the fused
-    * [[graft.operators.Classify.centroidClassifier]] output ONCE per
-    * session+dataset as a warehouse table; q208 reads it, q209 rolls
+    * The fused [[graft.operators.Classify.centroidClassifier]] output
+    * is one share table; q208 reads it, q209 rolls
     * it up through [[graft.operators.Classify.classifierReportFrom]]
     * (the split the fused report delegates through, so paths are
     * value-identical — numerators/denominators are exact integers

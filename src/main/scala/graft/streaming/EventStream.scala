@@ -236,6 +236,21 @@ object EventStream {
       }
       .start()
 
+  /** Start `stream` with every micro-batch passed through `probe` and
+    * appended as parquet to `outDir` — the one sink body the batch-probe
+    * twins share, so each stream reuses its batch operator verbatim.
+    */
+  private def appendEachBatch(stream: DataFrame, outDir: String,
+      checkpointDir: String)(probe: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        probe(batch.toDF()).write.mode("append").parquet(outDir)
+        ()
+      }
+      .start()
+
   /** Online near-duplicate screening: a document stream looked up per
     * micro-batch against a STANDING MinHash-LSH corpus index
     * ([[graft.operators.Dedup.minHashIndex]] — persist its frames
@@ -252,15 +267,10 @@ object EventStream {
                   content: String, id: String, outDir: String,
                   checkpointDir: String, threshold: Double = 0.8)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Dedup.lookupNearDups(index, batch.toDF(),
-            col(content), col(id), threshold)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    appendEachBatch(docsStream, outDir, checkpointDir) { batch =>
+      graft.operators.Dedup.lookupNearDups(index, batch, col(content),
+        col(id), threshold)
+    }
 
   /** Online near-duplicate screening against the PERSISTED standing
     * index ([[graft.operators.StandingIndex]]) — [[nearDupSink]]'s
@@ -283,15 +293,10 @@ object EventStream {
                           db: String = "graft_idx",
                           name: String = "neardup_idx")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.StandingIndex.probeNearDups(batch.sparkSession,
-            batch.toDF(), col(content), col(id), threshold, db, name)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    appendEachBatch(docsStream, outDir, checkpointDir) { batch =>
+      graft.operators.StandingIndex.probeNearDups(batch.sparkSession,
+        batch, col(content), col(id), threshold, db, name)
+    }
 
   /** Online ANN retrieval against the PERSISTED standing IVFADC index
     * (16th stream≡batch twin) — the serving half of
@@ -312,15 +317,10 @@ object EventStream {
                    checkpointDir: String, k: Int = 5, nprobe: Int = 4,
                    db: String = "graft_idx", name: String = "ann_idx")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queriesStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.StandingIndex.probeAnn(batch.sparkSession,
-            batch.toDF(), k, nprobe, db, name)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    appendEachBatch(queriesStream, outDir, checkpointDir) { batch =>
+      graft.operators.StandingIndex.probeAnn(batch.sparkSession, batch, k,
+        nprobe, db, name)
+    }
 
   /** Standing chunk-screening endpoint (the 18th stream≡batch twin):
     * each arriving micro-batch of documents is screened against the
@@ -346,15 +346,10 @@ object EventStream {
                      outDir: String, checkpointDir: String,
                      db: String = "graft_idx", name: String = "chunk_idx")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.StandingIndex.probeChunks(batch.sparkSession,
-            batch.toDF(), col(content), col(id), db, name)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    appendEachBatch(docsStream, outDir, checkpointDir) { batch =>
+      graft.operators.StandingIndex.probeChunks(batch.sparkSession, batch,
+        col(content), col(id), db, name)
+    }
 
   /** Online contamination monitor (15th stream≡batch twin): every
     * micro-batch of an arriving document stream is screened against
@@ -386,15 +381,10 @@ object EventStream {
       .persist()
     evPairs.count() // materialize before batch 0
     startWithCleanup(spark,
-      () => docsStream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Curate.decontaminateAgainst(batch.toDF(), evPairs,
-              col(content), col(id), n, minHits)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start(),
+      () => appendEachBatch(docsStream, outDir, checkpointDir) { batch =>
+        graft.operators.Curate.decontaminateAgainst(batch, evPairs,
+          col(content), col(id), n, minHits)
+      },
       () => { evPairs.unpersist(); () })
   }
 
@@ -471,16 +461,11 @@ object EventStream {
       .fitCentroidModel(train, col(content), col(id), col(label))
       .materialized()
     startWithCleanup(spark,
-      () => docsStream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Classify.scoreWithModel(
-              batch.toDF().filter(col(label).isNotNull),
-              col(content), col(id), col(label), model)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start(),
+      () => appendEachBatch(docsStream, outDir, checkpointDir) { batch =>
+        graft.operators.Classify.scoreWithModel(
+          batch.filter(col(label).isNotNull),
+          col(content), col(id), col(label), model)
+      },
       () => { model.unpersist(); () })
   }
 

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, ProductAnalytics}
 import graft.tables.Tables
 
-/** Lifecycle of the session-shared warehouse tables behind the registry
-  * (`Extensions.sharedTable`): built once per data dir, rebuilt when the
-  * dir changes or the table is dropped, and always equal to the inline
-  * operator they materialize.
+/** Lifecycle of the session-shared artifacts behind the registry (share
+  * tables, bucketed copies, standing indexes — `Extensions.buildOnce`):
+  * built once per data dir, rebuilt when the dir changes or the artifact
+  * is dropped, and always equal to the inline operator they materialize.
   */
 class ShareTablesSpec extends SparkSpec {
 
@@ -34,12 +34,28 @@ class ShareTablesSpec extends SparkSpec {
     assert(rows(query("q141_frequent_pairs", small)) === a)
   }
 
-  test("q141 rebuilds a dropped share table with the same rows") {
-    val before = rows(query("q141_frequent_pairs", mid))
-    spark.sql("DROP TABLE graft_graph.pair_edges")
-    assert(!spark.catalog.tableExists("graft_graph.pair_edges"))
-    assert(rows(query("q141_frequent_pairs", mid)) === before)
-    assert(spark.catalog.tableExists("graft_graph.pair_edges"))
+  /** One row per session-shared artifact: a query that reads it, and a
+    * statement that drops (part of) it behind the memo's back.
+    */
+  private val rebuilds = Seq(
+    "q141_frequent_pairs" -> "DROP TABLE graft_graph.pair_edges",
+    "q90_bucketed_join" -> "DROP TABLE bkt_q90.orders_b",
+    "q193_index_probe_chunks" -> "DROP VIEW graft_idx.docs_chunk",
+    "q202_index_append_chunks" -> "DROP VIEW graft_idx.docs_chunk_inc",
+    "q207_ann_append_probe" -> "DROP VIEW graft_idx.emb_ann_inc")
+
+  test("a dropped shared artifact is rebuilt with the same rows") {
+    rebuilds.foreach { case (q, drop) =>
+      withClue(s"$q after `$drop`: ") {
+        val dropped = drop.split(' ').last
+        val before = rows(query(q, small))
+        assert(before.nonEmpty)
+        spark.sql(drop)
+        assert(!spark.catalog.tableExists(dropped))
+        assert(rows(query(q, small)) === before)
+        assert(spark.catalog.tableExists(dropped))
+      }
+    }
   }
 
   test("a repeat call for the same dir builds its DataFrame with no Spark job") {
