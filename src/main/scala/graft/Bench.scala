@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -7,19 +8,14 @@ import scala.util.control.NonFatal
   * datasource write — a plain count() would let Catalyst drop sorts and
   * projections and under-report the real work. A query that throws is
   * left out of `value` and `queries` and named in `failed`, and the
-  * process then exits 1.
+  * process then exits 1. `compiles` gives, per query, the number of
+  * generated classes compiled during its timed runs.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Sessions.defaultCpus)
-    val spark = Sessions.local("graft-bench", cpus)
-      // 86 queries × 3 runs × (warmup + measured) plans far exceed the
-      // default 100-entry codegen class cache → random mid-run janino
-      // recompiles that show up as roving multi-second outliers
-      // (full-set total 88.5s at 2000 entries vs 66.5s at 10000)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def once(name: String): Double = {
@@ -48,15 +44,21 @@ object Bench {
     // "warm":true so cross-round sums are never silently compared
     // across conventions.
     val warmRun = sys.env.contains("SPARK_GRAFT_BENCH_WARMRUN")
-    // (min, median, max): the median is the record; min/max expose the
-    // run-to-run spread so a noisy sandbox can't masquerade as a
-    // regression (or hide one). A query that throws on any run gets no
-    // times (None): it is left out of the total and named in "failed".
-    def materialize(name: String): Option[(Double, Double, Double)] =
+    // (min, median, max, compiles): the median is the record; min/max
+    // expose the run-to-run spread so a noisy sandbox can't masquerade as
+    // a regression (or hide one). `compiles` counts the generated classes
+    // janino compiled during the timed runs: the first may still compile
+    // where the benched scale plans differently from the warm-up scale,
+    // later ones only if the class cache evicts. A query that throws on
+    // any run gets no record (None): it is left out of the total and
+    // named in "failed".
+    def materialize(name: String): Option[(Double, Double, Double, Long)] =
       try {
         if (warmRun) once(name): Unit
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val ts = Seq.fill(runs)(once(name)).sorted
-        Some((ts.head, ts(ts.size / 2), ts.last))
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+        Some((ts.head, ts(ts.size / 2), ts.last, compiles))
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
@@ -95,11 +97,13 @@ object Bench {
     val results = attempted.collect { case (n, Some(t)) => n -> t }
     val failed = attempted.collect { case (n, None) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
-    val qs = results.map { case (k, (_, med, _)) => "\"" + k + "\":" + med }
+    val qs = results.map { case (k, (_, med, _, _)) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
-    val spread = results.map { case (k, (min, _, max)) =>
+    val spread = results.map { case (k, (min, _, max, _)) =>
       "\"" + k + "\":{\"min\":" + min + ",\"max\":" + max + "}"
     }.mkString("{", ",", "}")
+    val compiles = results.map { case (k, (_, _, _, n)) => "\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
     val total = results.map(_._2._2).sum
     // Box identity (r13 lesson: cross-round comparisons are meaningless
     // across VM migrations/reboots — q161 moved 1.93→3.25 s on IDENTICAL
@@ -115,7 +119,7 @@ object Bench {
       s"$host/$boot"
     }
     val warmField = if (warmRun) """"warm":true,""" else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"spread":$spread,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"spread":$spread,"compiles":$compiles,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
     spark.stop()
     if (results.size < names.size) sys.exit(1)
   }

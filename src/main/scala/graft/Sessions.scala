@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single construction point for every SparkSession in the library's
-  * mains and tests. All engine-wide knobs live HERE and only here —
+  * mains and tests. All engine-wide knobs — the generated-class cache
+  * among them — live HERE and only here —
   * operators and readers must never mutate session config as a side
   * effect (a `spark.conf.set` inside a read flips a global knob for every
   * later query in the session).
@@ -81,6 +82,23 @@ object Sessions {
       // engine's ns-longs duration/time convention, SURVEY §1.2)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      // generated-class cache: a static, JVM-wide conf that CodeGenerator
+      // reads once, when its cache is first built — so it must be set
+      // before the process's first session exists, and a later
+      // `spark.conf.set` does nothing. One headline pass generates more
+      // than 100 classes, so Spark's default of 100 evicts each class
+      // before the next pass asks for it again and every warm pass
+      // recompiles. The full registry needs more than 2,000 (Bench's
+      // full set: 88.5 s at 2,000 entries vs 66.5 s at 10,000); retained
+      // heap follows the number of distinct classes, not this cap.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // the cache is keyed by the generated source, and by default the
+      // class name carries the whole-stage codegen id. AQE numbers stages
+      // in the order their inputs finish, so the same stage can come back
+      // under another id (q33 at sf0.001: 4 fresh classes on a random
+      // later pass) and be compiled again. Without the id in the name one
+      // plan always hits the cache.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // scan-split size for THIS local builder only (a cluster deploy
       // owns the knob in spark-submit conf, where the 128m default is
       // right because inputs arrive as thousands of files). Local

@@ -31,10 +31,6 @@ object Fns {
       .replaceAll("[^a-z0-9]+", "_")
       .replaceAll("^_+|_+$", "")
 
-  /** P1 applied to a whole frame (pure rename — zero runtime cost). */
-  def snakeColumns(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(toSnake).toIndexedSeq: _*)
-
   /** P4 — "keys first, then the remaining columns in original order"
     * star-exclude projection shape (silver/laps.sql:4-9).
     */
@@ -106,14 +102,6 @@ object Fns {
     val lng = when(length(m) > 0, m.cast(LongType))
     when(lng.between(Int.MinValue, Int.MaxValue), lng.cast(IntegerType))
   }
-
-  /** F6 — safe_numeric macro: try_cast to decimal(38,6)
-    * (transform/macros/compat.sql:3).
-    */
-  def safeNumeric(c: Column): Column = c.try_cast(DecimalType(38, 6))
-
-  /** F6 — safe_timestamp macro (transform/macros/compat.sql:4). */
-  def safeTimestamp(c: Column): Column = c.try_cast(TimestampType)
 
   /** F6 — safe_text macro: nullif(trim(cast(x as varchar)), '').
     * compat.sql:6 has a latent `""` identifier bug; we implement the

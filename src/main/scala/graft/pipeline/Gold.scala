@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,23 +15,6 @@ import graft.functions.Fns
   *  [TES] transform/target/compiled/f1_transform/models/gold/team_event_summary.sql
   */
 object Gold {
-
-  /** The 12-column closed schema of [DSS]:44-48. Durations stay int64
-    * nanoseconds end-to-end (SURVEY §1.2).
-    */
-  final case class DriverSessionSummary(
-      season: Option[Int], round: Option[Int],
-      grand_prix: String, session_code: String,
-      driver: String, driver_number: String, team: String,
-      laps_total: Long, laps_on_track: Long, pitstops: Long,
-      best_lap_time: Option[Long], personal_best_laps: Long)
-
-  /** The 8-column closed schema of [TES]:8-14. */
-  final case class TeamEventSummary(
-      season: Option[Int], round: Option[Int],
-      grand_prix: String, session_code: String, team: String,
-      team_laps_on_track: Long, team_pitstops: Long,
-      team_best_lap_time: Option[Long])
 
   private val SessionKeys = Seq("season", "round", "grand_prix", "session_code")
   private val DriverKeys = SessionKeys ++ Seq("driver", "driver_number", "team")
@@ -107,14 +90,4 @@ object Gold {
         sum("laps_on_track").as("team_laps_on_track"),
         sum("pitstops").as("team_pitstops"),
         min("best_lap_time").as("team_best_lap_time"))
-
-  def asDss(df: DataFrame, spark: SparkSession): Dataset[DriverSessionSummary] = {
-    import spark.implicits._
-    df.as[DriverSessionSummary]
-  }
-
-  def asTes(df: DataFrame, spark: SparkSession): Dataset[TeamEventSummary] = {
-    import spark.implicits._
-    df.as[TeamEventSummary]
-  }
 }

@@ -93,12 +93,6 @@ object QueryService {
       .filter(col("distinct_numbers") > 1 || col("distinct_teams") > 1)
       .orderBy("driver")
 
-  /** P10 — per-column null-% over a season slice (notebook). */
-  def nullProfile(df: DataFrame, columns: Seq[String]): DataFrame =
-    df.agg(
-      avg(col(columns.head).isNull.cast("int")).as(columns.head),
-      columns.tail.map(c => avg(col(c).isNull.cast("int")).as(c)): _*)
-
   /** F11 — chart-type heuristic (ai/rag_api/main.py:90-96): numeric
     * second column + small row count → line; medium → bar; else table.
     */
