@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import scala.util.control.NonFatal
 
-/** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Each query is fully materialized via a noop
-  * datasource write — a plain count() would let Catalyst drop sorts and
-  * projections and under-report the real work. A query that throws is
-  * left out of `value` and `queries` and named in `failed`, and the
-  * process then exits 1. `compiles` gives, per query, the number of
-  * generated classes compiled during its timed runs.
+/** Benchmark main: runs the selected SparkEntry queries on
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Arguments are query-name
+  * prefixes ([[SparkEntry.select]]); without any, the headline set runs.
+  * Each query is fully materialized via a noop datasource write — a
+  * plain count() would let Catalyst drop sorts and projections and
+  * under-report the real work. A query that throws is left out of
+  * `value` and `queries` and named in `failed`, as is a prefix that
+  * matches no query; the process then exits 1. `compiles` gives, per
+  * query, the number of generated classes compiled during its timed runs.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -18,21 +21,26 @@ object Bench {
     val spark = Sessions.local("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // Default = the HEADLINE subset: the reference-shaped workload
+    // (BASELINE.md's dbt-build equivalent — scans, aggregates, window,
+    // joins, mart-over-mart, flagship DSS). The near-dup/ANN extension
+    // operators have no baseline counterpart and would dominate the
+    // total; run them with SPARK_GRAFT_BENCH_ALL=1 or by name prefix.
+    val headline = args.isEmpty && !sys.env.contains("SPARK_GRAFT_BENCH_ALL")
+    val (names, unmatched) =
+      if (headline) (SparkEntry.headlines.sorted, Nil) else SparkEntry.select(args.toSeq)
+
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    // build + materialize time; the cleanup step after it is not timed
     def once(name: String): Double = {
       val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } finally Sessions.releaseCached(spark)
+      SparkEntry.run(spark, name, sfDir) { df => noop(df); (System.nanoTime() - t0) / 1e9 }
     }
 
     // Median of N runs per query: a single noisy run (sandbox contention,
     // stray GC) must not decide the round's perf record. The headline set
     // is small enough to afford 5; the full inventory stays at 3.
-    val defaultRuns =
-      if (args.nonEmpty || sys.env.contains("SPARK_GRAFT_BENCH_ALL")) "3" else "5"
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", defaultRuns).toInt
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", if (headline) "5" else "3").toInt
     // SPARK_GRAFT_BENCH_WARMRUN=1: run each query ONCE unmeasured at
     // the benched scale before its timed runs. The standing-index /
     // shared-table queries (q201-q203, q206-q207, q215, q208-q209,
@@ -66,37 +74,21 @@ object Bench {
 
     // JVM/session warmup so the first measured query doesn't absorb
     // classloading + codegen bring-up.
-    spark.range(1000000).selectExpr("sum(id) s").write
-      .format("noop").mode("overwrite").save()
+    noop(spark.range(1000000).selectExpr("sum(id) s"))
 
     // Per-query codegen warmup on the smallest scale factor: identical
     // plan shape generates identical code, so the janino compile is
     // cached and the measured run reflects data-proportional work (the
     // 100 TB-relevant quantity), not one-time JIT.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    def warmup(names: Seq[String]): Unit =
-      if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-        names.foreach { n =>
-          try SparkEntry.queries(n)(spark, warmDir)
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-
-    // Default = the HEADLINE subset: the reference-shaped workload
-    // (BASELINE.md's dbt-build equivalent — scans, aggregates, window,
-    // joins, mart-over-mart, flagship DSS). The near-dup/ANN extension
-    // operators have no baseline counterpart and would dominate the
-    // total; run them with SPARK_GRAFT_BENCH_ALL=1 or by name.
-    val names =
-      if (args.nonEmpty) args.toSeq.filter(SparkEntry.queries.contains)
-      else if (sys.env.contains("SPARK_GRAFT_BENCH_ALL"))
-        SparkEntry.queries.keys.toSeq.sorted
-      else SparkEntry.headlines.sorted
-    warmup(names)
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
+      names.foreach { n =>
+        try SparkEntry.run(spark, n, warmDir)(noop) catch { case NonFatal(_) => () }
+      }
     val attempted = names.map(n => n -> materialize(n))
     val results = attempted.collect { case (n, Some(t)) => n -> t }
-    val failed = attempted.collect { case (n, None) => "\"" + n + "\"" }
-      .mkString("[", ",", "]")
+    val failedNames = unmatched ++ attempted.collect { case (n, None) => n }
+    val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, (_, med, _, _)) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     val spread = results.map { case (k, (min, _, max, _)) =>
@@ -121,6 +113,6 @@ object Bench {
     val warmField = if (warmRun) """"warm":true,""" else ""
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"spread":$spread,"compiles":$compiles,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
     spark.stop()
-    if (results.size < names.size) sys.exit(1)
+    if (failedNames.nonEmpty) sys.exit(1)
   }
 }

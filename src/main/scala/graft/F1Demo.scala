@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Row, SparkSession}
@@ -16,15 +15,12 @@ import graft.serving.QueryService
   */
 object F1Demo {
   def main(args: Array[String]): Unit = {
-    // keep catalog artifacts (warehouse + derby metastore) out of the repo
-    val scratch = Files.createTempDirectory("f1demo-warehouse").toString
-    System.setProperty("derby.system.home", scratch)
-    val spark = Sessions.local("graft-f1demo", "4")
-      .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      .getOrCreate()
+    // the catalog and the bronze both live in the per-process warehouse,
+    // which Sessions removes at exit
+    val spark = Sessions.local("graft-f1demo", "4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val root = Files.createTempDirectory("f1demo-bronze").toString
+    val root = Sessions.stagingDir("f1demo-bronze")
     writeBronze(spark, root)
 
     val silverLaps = Silver.promoteKeys(Bronze.read(spark, root, "laps")).cache()

@@ -8,11 +8,12 @@ import graft.queries.{Extensions, Parity}
   * `queries` carries one entry per implemented operator from SURVEY §2
   * (graft.queries.Parity) plus the beyond-reference training-data
   * operators (graft.queries.Extensions). `oracleSql` carries the DuckDB
-  * equivalent for every SQL-expressible query.
+  * equivalent for every SQL-expressible query. Bench and Verify pick
+  * and run queries only through `select` and `run`.
   */
 object SparkEntry {
 
-  private def registry = Parity.all ++ Extensions.all
+  private lazy val registry = Parity.all ++ Extensions.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The full [DSS] gold-mart shape: filter → window → agg → 7-key-style
@@ -23,16 +24,36 @@ object SparkEntry {
       .fn(spark, "/root/testdata/sf0.001")
 
   /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops →
     * driver records a weaker rows-only check.
     */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 
   /** Headline subset for the benchmark loop. */
-  def headlines: Seq[String] = registry.filter(_.headline).map(_.name)
+  lazy val headlines: Seq[String] = registry.filter(_.headline).map(_.name)
+
+  /** The sorted registered names that start with any of `prefixes` (all
+    * of them when `prefixes` is empty), and the prefixes that match no
+    * name.
+    */
+  def select(prefixes: Seq[String]): (Seq[String], Seq[String]) = {
+    val all = queries.keys.toSeq.sorted
+    if (prefixes.isEmpty) (all, Nil)
+    else (all.filter(n => prefixes.exists(n.startsWith)),
+      prefixes.filterNot(p => all.exists(_.startsWith(p))))
+  }
+
+  /** Builds the registered query `name` over `dir`, hands it to `sink`,
+    * and then — whether or not `sink` threw — runs the cleanup step
+    * between two queries ([[Sessions.releaseCached]]). Nothing is
+    * caught here: each caller keeps its own failure policy.
+    */
+  def run[A](spark: SparkSession, name: String, dir: String)(sink: DataFrame => A): A =
+    try sink(queries(name)(spark, dir))
+    finally Sessions.releaseCached(spark)
 }

@@ -1,31 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected SparkEntry query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare.
+  * Run: graft.Verify <sfDir> <outDir> [prefix…] (no prefix: every query;
+  * [[SparkEntry.select]]). A prefix that matches nothing exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir, prefixes @ _*) = args
+    val (names, unmatched) = SparkEntry.select(prefixes)
+    unmatched.foreach(p => System.err.println(s"[verify] no query matches $p"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Sessions.defaultCpus)
     val spark = Sessions.local("graft-verify", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev convenience: SPARK_GRAFT_ONLY=q108,q109 restricts the dump to
-    // queries whose name starts with one of the prefixes (driver unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter {
-        case (n, _) => ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // every Throwable, not only NonFatal: a StackOverflowError in one
+    // deep plan must not cost the other queries their outputs
+    names.foreach { name =>
+      try SparkEntry.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      Sessions.releaseCached(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -39,10 +34,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = names.flatMap(k => SparkEntry.oracleSql.get(k).map(v => s"${q(k)}: ${q(v)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (unmatched.nonEmpty) sys.exit(1)
   }
 }

@@ -13,7 +13,7 @@ import graft.expressions.GraftFunctions
   * shuffles; per-row score + a per-query top-k window. At 100 TB the
   * same plan holds: broadcast Q, map-side score, window on rank.
   *
-  * Scale path: LSH/IVF bucketing (see `lshBucket`) — candidates are
+  * Scale path: LSH/IVF bucketing (see `lshBucketAt`) — candidates are
   * restricted to the query's bucket, turning the cross product into an
   * equi-join on bucket id.
   *
@@ -444,15 +444,11 @@ object Similarity {
        |ORDER BY s.vec_id""".stripMargin
   }
 
-  /** Sign-LSH bucket id from the first `bits` dimensions: bit j set iff
-    * embedding[j] > 0. Equal vectors land in equal buckets; at scale the
-    * ANN search becomes an equi-join on this id.
-    */
-  def lshBucket(emb: Column, bits: Int): Column = lshBucketAt(emb, bits, 0)
-
-  /** Sign-LSH bucket over `bits` dimensions starting at `offset`: each
-    * table of a multi-table LSH index reads a disjoint dimension slice,
-    * so the tables are independent partitions of the space.
+  /** Sign-LSH bucket over `bits` dimensions starting at `offset`: bit j
+    * set iff embedding[offset + j] > 0. Equal vectors land in equal
+    * buckets, so at scale the ANN search becomes an equi-join on this id.
+    * Each table of a multi-table LSH index reads a disjoint dimension
+    * slice, so the tables are independent partitions of the space.
     */
   def lshBucketAt(emb: Column, bits: Int, offset: Int): Column =
     (0 until bits).map { j =>

@@ -114,9 +114,21 @@ object Lakehouse {
     val props = (Seq(s"'graft.live_version' = '$v'") ++
       prev.filter(_ != v).map(p => s"'graft.prev_version' = '$p'"))
       .mkString(", ")
-    spark.sql(
-      s"CREATE OR REPLACE VIEW $fqTable TBLPROPERTIES ($props) " +
-        s"AS SELECT $projection FROM ${fqTable}__v$v")
+    val body = s"TBLPROPERTIES ($props) AS SELECT $projection FROM ${fqTable}__v$v"
+    // CREATE OR REPLACE VIEW drops the old view before creating the new
+    // one, and a reader resolving the name in between finds nothing: an
+    // existing view is repointed by one alterTable to a side-built one
+    val catalog = spark.sessionState.catalog
+    val (db, name) = dbAndName(spark, fqTable)
+    val side = TableIdentifier(s"${name}__publish", Some(db))
+    if (!catalog.tableExists(TableIdentifier(name, Some(db))))
+      spark.sql(s"CREATE VIEW $fqTable $body")
+    else {
+      spark.sql(s"CREATE OR REPLACE VIEW $db.${side.table} $body")
+      val staged = catalog.getTableMetadata(side)
+      catalog.alterTable(staged.copy(identifier = staged.identifier.copy(table = name)))
+      catalog.dropTable(side, ignoreIfNotExists = true, purge = false)
+    }
   }
 
   private def viewProp(spark: SparkSession, fqTable: String,
@@ -147,8 +159,8 @@ object Lakehouse {
     * it — the engine's equivalent of dbt's `CREATE … __dbt_tmp` + swap
     * (transform/target/run/f1_transform/models/silver/laps.sql:6-20),
     * but with a SINGLE catalog operation as the commit point instead of
-    * the reference's rename pair. `CREATE OR REPLACE VIEW` is one
-    * atomic metastore mutation, so there is NO window in which the live
+    * the reference's rename pair. The repoint is one atomic catalog
+    * `alterTable` (see `publish`), so there is NO window in which the live
     * name is missing: readers planning before the publish resolve the
     * old version, readers planning after resolve the new one, and a
     * crash at any point leaves the pointer on the last fully-written

@@ -14,20 +14,12 @@ object Checks {
     def passed: Boolean = failures == 0L
   }
 
-  /** dbt compiles each not_null test to
-    * `count(*) as failures ... where <col> is null` — same probe here,
-    * but all columns of a table are checked in ONE pass (single scan,
-    * one aggregate row) instead of one query per test.
+  /** dbt's `not_null` generic test ([[notNullDf]]), one result per
+    * column, in column order.
     */
-  def notNull(df: DataFrame, table: String, columns: Seq[String]): Seq[CheckResult] = {
-    val row = df.agg(
-      sum(col(columns.head).isNull.cast("long")).as(columns.head),
-      columns.tail.map(c => sum(col(c).isNull.cast("long")).as(c)): _*)
-      .head()
-    columns.zipWithIndex.map { case (c, i) =>
-      CheckResult(table, c, if (row.isNullAt(i)) 0L else row.getLong(i))
-    }
-  }
+  def notNull(df: DataFrame, table: String, columns: Seq[String]): Seq[CheckResult] =
+    columns.zip(notNullDf(df, table, columns).collect())
+      .map { case (c, row) => CheckResult(table, c, row.getLong(1)) }
 
   /** Reads a one-row `(check_name, failures)` frame of the `…Df`
     * forms below as a scalar result.
@@ -54,6 +46,9 @@ object Checks {
     * composes into one lazily-planned union the engine schedules as
     * independent single-row aggregates (and the t2 oracle can replay).
     * The scalar variants above read these for imperative gate code.
+    * not_null: dbt's `count(*) ... where <col> is null` probe for all
+    * columns in ONE pass (one scan, one aggregate row), exploded to one row
+    * per column in column order.
     */
   def notNullDf(df: DataFrame, table: String, columns: Seq[String]): DataFrame = {
     val wide = df.agg(
