@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import scala.util.control.NonFatal
 
@@ -11,15 +14,19 @@ import scala.util.control.NonFatal
   * plain count() would let Catalyst drop sorts and projections and
   * under-report the real work. A query that throws is left out of
   * `value` and `queries` and named in `failed`, as is a prefix that
-  * matches no query; the process then exits 1. `compiles` gives, per
-  * query, the number of generated classes compiled during its timed runs.
+  * matches no query; the process then exits 1. Each query runs once
+  * unmeasured at the benched scale before its timed runs. `compiles`
+  * gives, per query, the number of generated classes compiled during its
+  * timed runs, and `jobs` the number of Spark jobs a timed run starts
+  * (the median over its runs).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Sessions.defaultCpus)
     val spark = Sessions.local("graft-bench", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    sc.setLogLevel("WARN")
 
     // Default = the HEADLINE subset: the reference-shaped workload
     // (BASELINE.md's dbt-build equivalent — scans, aggregates, window,
@@ -41,30 +48,41 @@ object Bench {
     // stray GC) must not decide the round's perf record. The headline set
     // is small enough to afford 5; the full inventory stays at 3.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", if (headline) "5" else "3").toInt
-    // SPARK_GRAFT_BENCH_WARMRUN=1: run each query ONCE unmeasured at
-    // the benched scale before its timed runs. The standing-index /
-    // shared-table queries (q201-q203, q206-q207, q215, q208-q209,
-    // q87...) amortize a one-time session build into their first run —
-    // with runs=3 a slow window pushes that build into the MEDIAN (the
-    // r15 q203 spread signature: min 0.97 / med 2.28 / max 4.83).
-    // The flag makes "build amortized out of the record" an explicit
-    // convention instead of a spread artifact; records carry
-    // "warm":true so cross-round sums are never silently compared
-    // across conventions.
-    val warmRun = sys.env.contains("SPARK_GRAFT_BENCH_WARMRUN")
+
+    // Jobs started per job group. Each timed run gets its own group; the
+    // listener bus delivers in order, so once the fence group's job is
+    // seen every earlier run's count is final.
+    val jobsByGroup = new ConcurrentHashMap[String, AtomicInteger]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobsByGroup.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
+    })
+    def jobs(group: String): Int = Option(jobsByGroup.get(group)).fold(0)(_.get)
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    def runGroup(name: String, i: Int) = s"bench:$name:$i"
+
+    // One unmeasured run at the benched scale, then the timed runs. The
+    // unmeasured run compiles the plan the timed runs execute (a smaller
+    // scale can plan differently: a scan that is one split there may
+    // span several here) and amortizes the session-shared builds of the
+    // standing-index / shared-table queries (q201-q203, q206-q207, q215,
+    // q208-q209, q87...) out of the record; records carry "warm":true.
     // (min, median, max, compiles): the median is the record; min/max
     // expose the run-to-run spread so a noisy sandbox can't masquerade as
     // a regression (or hide one). `compiles` counts the generated classes
-    // janino compiled during the timed runs: the first may still compile
-    // where the benched scale plans differently from the warm-up scale,
-    // later ones only if the class cache evicts. A query that throws on
-    // any run gets no record (None): it is left out of the total and
-    // named in "failed".
+    // janino compiled during the timed runs, nonzero only if the class
+    // cache evicts or the generated source changes run to run. A query
+    // that throws on any run gets no record (None): it is left out of
+    // the total and named in "failed".
     def materialize(name: String): Option[(Double, Double, Double, Long)] =
       try {
-        if (warmRun) once(name): Unit
+        once(name): Unit
         val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-        val ts = Seq.fill(runs)(once(name)).sorted
+        val ts = (0 until runs).map(i => inGroup(runGroup(name, i))(once(name))).sorted
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
         Some((ts.head, ts(ts.size / 2), ts.last, compiles))
       } catch { case NonFatal(e) =>
@@ -76,17 +94,11 @@ object Bench {
     // classloading + codegen bring-up.
     noop(spark.range(1000000).selectExpr("sum(id) s"))
 
-    // Per-query codegen warmup on the smallest scale factor: identical
-    // plan shape generates identical code, so the janino compile is
-    // cached and the measured run reflects data-proportional work (the
-    // 100 TB-relevant quantity), not one-time JIT.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      names.foreach { n =>
-        try SparkEntry.run(spark, n, warmDir)(noop) catch { case NonFatal(_) => () }
-      }
     val attempted = names.map(n => n -> materialize(n))
     val results = attempted.collect { case (n, Some(t)) => n -> t }
+    inGroup("bench:fence")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (jobs("bench:fence") == 0 && System.nanoTime() < deadline) Thread.sleep(10)
     val failedNames = unmatched ++ attempted.collect { case (n, None) => n }
     val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, (_, med, _, _)) => "\"" + k + "\":" + med }
@@ -96,6 +108,9 @@ object Bench {
     }.mkString("{", ",", "}")
     val compiles = results.map { case (k, (_, _, _, n)) => "\"" + k + "\":" + n }
       .mkString("{", ",", "}")
+    val jobCounts = results.map { case (k, _) =>
+      "\"" + k + "\":" + (0 until runs).map(i => jobs(runGroup(k, i))).sorted.apply(runs / 2)
+    }.mkString("{", ",", "}")
     val total = results.map(_._2._2).sum
     // Box identity (r13 lesson: cross-round comparisons are meaningless
     // across VM migrations/reboots — q161 moved 1.93→3.25 s on IDENTICAL
@@ -110,8 +125,7 @@ object Bench {
                  catch { case _: Throwable => "nob" }
       s"$host/$boot"
     }
-    val warmField = if (warmRun) """"warm":true,""" else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"spread":$spread,"compiles":$compiles,"runs":$runs,$warmField"sf":"$sfDir","box":"$box"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"spread":$spread,"compiles":$compiles,"jobs":$jobCounts,"runs":$runs,"warm":true,"sf":"$sfDir","box":"$box"}""")
     spark.stop()
     if (failedNames.nonEmpty) sys.exit(1)
   }

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Single construction point for every SparkSession in the library's
   * mains and tests. All engine-wide knobs — the generated-class cache
-  * among them — live HERE and only here —
+  * among them — and the session extensions
+  * ([[graft.expressions.GraftExtensions]]: the native functions and the
+  * [[graft.expressions.SingleTaskPlan]] planner rule) live HERE and only
+  * here —
   * operators and readers must never mutate session config as a side
   * effect (a `spark.conf.set` inside a read flips a global knob for every
   * later query in the session).
@@ -75,6 +78,7 @@ object Sessions {
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
+      .withExtensions(new graft.expressions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

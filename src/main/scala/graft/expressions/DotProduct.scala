@@ -70,13 +70,17 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for the engine's native functions — both as a
-  * `spark.sql.extensions` class (cluster deployment path) and as an
-  * idempotent runtime registration (library path).
+/** The engine's session extensions: its native functions and the
+  * [[SingleTaskPlan]] planner rule. Installed by `graft.Sessions.local`
+  * and usable as the `spark.sql.extensions` class of a cluster
+  * deployment, so both get the same planner; the functions also have an
+  * idempotent runtime registration ([[GraftFunctions.ensureRegistered]]).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
+    ext.injectPreCBORule(SingleTaskPlan(_))
+  }
 }
 
 object GraftFunctions {

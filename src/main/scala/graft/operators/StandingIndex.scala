@@ -5,6 +5,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.pipeline.Lakehouse
 
 /** Standing probe indexes — the PERSISTED form of the incremental
   * dedup operators' corpus side. The ad-hoc incremental operators
@@ -47,8 +48,9 @@ import org.apache.spark.sql.types.LongType
   *
   * Versioned exactly-once commit: all member tables of a build are
   * written under `<name>__v<N>__<member>` names first; the COMMIT
-  * POINT is one atomic `CREATE OR REPLACE VIEW <db>.<name>` of the
-  * manifest — a constant one-row view carrying the live version
+  * POINT is one atomic repoint of the manifest view `<db>.<name>`
+  * (`Lakehouse.swapView`, the publish's own catalog swap, so the name
+  * never goes missing) — a constant one-row view carrying the live version
   * number and the build parameters. A crash anywhere before the flip
   * leaves the manifest on the last complete version with every one of
   * its member tables intact (a later rebuild overwrites the orphaned
@@ -208,7 +210,7 @@ object StandingIndex {
     }
     val meta = (Seq(s"$next AS version", s"'$kind' AS kind")
       ++ metaSql(next)).mkString(", ")
-    spark.sql(s"CREATE OR REPLACE VIEW $db.$name AS SELECT $meta")
+    Lakehouse.swapView(spark, db, name, s"AS SELECT $meta")
     // retain the superseded version for in-flight probes, plus every
     // version either manifest still references; GC the rest
     val keep = Set(next) ++ prev ++

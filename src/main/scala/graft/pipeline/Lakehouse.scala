@@ -114,15 +114,24 @@ object Lakehouse {
     val props = (Seq(s"'graft.live_version' = '$v'") ++
       prev.filter(_ != v).map(p => s"'graft.prev_version' = '$p'"))
       .mkString(", ")
-    val body = s"TBLPROPERTIES ($props) AS SELECT $projection FROM ${fqTable}__v$v"
-    // CREATE OR REPLACE VIEW drops the old view before creating the new
-    // one, and a reader resolving the name in between finds nothing: an
-    // existing view is repointed by one alterTable to a side-built one
-    val catalog = spark.sessionState.catalog
     val (db, name) = dbAndName(spark, fqTable)
+    swapView(spark, db, name,
+      s"TBLPROPERTIES ($props) AS SELECT $projection FROM ${fqTable}__v$v")
+  }
+
+  /** Creates the view `db.name` as `body` (what follows the view name in
+    * CREATE VIEW), or repoints an existing one, with no moment in which
+    * the name is missing. CREATE OR REPLACE VIEW drops the old view
+    * before creating the new one, and a reader resolving the name in
+    * between finds nothing; so an existing view is repointed by one
+    * catalog `alterTable` to a side-built `<name>__publish` view.
+    */
+  private[graft] def swapView(spark: SparkSession, db: String, name: String,
+                              body: String): Unit = {
+    val catalog = spark.sessionState.catalog
     val side = TableIdentifier(s"${name}__publish", Some(db))
     if (!catalog.tableExists(TableIdentifier(name, Some(db))))
-      spark.sql(s"CREATE VIEW $fqTable $body")
+      spark.sql(s"CREATE VIEW $db.$name $body")
     else {
       spark.sql(s"CREATE OR REPLACE VIEW $db.${side.table} $body")
       val staged = catalog.getTableMetadata(side)

@@ -35,7 +35,7 @@ class EnvContractSpec extends AnyFunSuite {
     val unnamed = reads.collect { case (f, None) => f.toString }
     assert(unnamed.isEmpty, "env access without a literal variable name")
     val declared = readmeNames
-    assert(declared.nonEmpty, "README.md env-var table not found")
+    assert(declared.size === 6, s"README.md env-var table: $declared")
     assert(reads.flatMap(_._2).toSet === declared)
   }
 }

@@ -9,18 +9,6 @@ class QueryOrderSpec extends SparkSpec {
 
   private val small = s"${SparkSpec.testdata}/sf0.001"
 
-  /** Runs `body` with the given session confs, restoring the old values. */
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val conf = spark.conf
-    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
-    kv.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   test("q88_unpivot emits (l_orderkey, l_linenumber, measure) order under any partitioning") {
     val runs = for {
       parts <- Seq(1, 7, 32)

@@ -94,17 +94,22 @@ class ScaleSpec extends SparkSpec {
     // The 100 TB mechanism: a selective filter on the dim side injects
     // a bloom might_contain predicate into the FACT side's scan, so
     // rows that cannot join never reach the shuffle. Broadcast is
-    // disabled to force the shuffle-join shape where the filter pays.
+    // disabled to force the shuffle-join shape where the filter pays,
+    // and the ~1 MB lineitem file is read in several splits, as a fact
+    // table is at scale (a query whose every scan is one split runs as
+    // one task, with no shuffle join at all).
     val dir = "/root/testdata/sf0.01"
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> conf.get(k))
+      "spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.files.maxPartitionBytes").map(k => k -> conf.get(k))
     try {
       conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1KB")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      conf.set("spark.sql.files.maxPartitionBytes", "256k")
       val li = Tables.lineitem(spark, dir)
       val o = Tables.orders(spark, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -173,17 +178,21 @@ class ScaleSpec extends SparkSpec {
     // String-matched (the pruning-assert pattern): under AQE the node
     // lives inside materialized QueryStages, which node-collect does
     // not traverse. Both the Partial (pre-shuffle) and Final instances
-    // must be present.
+    // must be present. The ~117 KB lineitem file is read in several
+    // splits, as at scale: read as one split, the query runs as one task
+    // with no window shuffle to put a Partial limit before.
     val w = Window.partitionBy("l_orderkey")
       .orderBy(col("l_quantity").desc, col("l_linenumber"))
-    val topk = Tables.lineitem(spark, "/root/testdata/sf0.001")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2)
-    topk.collect()
-    val finalPlan = (topk.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }).toString
+    val finalPlan = withConf("spark.sql.files.maxPartitionBytes" -> "32k") {
+      val topk = Tables.lineitem(spark, "/root/testdata/sf0.001")
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 2)
+      topk.collect()
+      (topk.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).toString
+    }
     assert(finalPlan.contains("WindowGroupLimit") &&
       finalPlan.contains("Partial") && finalPlan.contains("Final"),
       s"rank filter should plan partial+final WindowGroupLimit:\n$finalPlan")

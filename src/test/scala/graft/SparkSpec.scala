@@ -10,6 +10,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Runs `body` with the given session confs, restoring the old values. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** Spark jobs started while `body` runs, counted through a job group. */
   def jobsStartedBy(body: => Unit): Int = {
     val sc = spark.sparkContext

@@ -144,6 +144,26 @@ class StandingIndexSpec extends SparkSpec {
         col("doc_id"))))
   }
 
+  test("a manifest reader never misses the view across repeated refreshes") {
+    def build(): Int = StandingIndex.buildChunkIndex(spark, corpus, col("text"),
+      col("doc_id"), nBuckets = 2, db = db, name = "m_conc")
+    build()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = new Thread(() => {
+      // resolving the name is enough to hit a missing view, and a
+      // resolve-only loop looks far more often than a scan would
+      try while (!stop.get()) spark.table(s"$db.m_conc")
+      catch { case t: Throwable => failure.set(t) }
+    })
+    reader.start()
+    val last = try (1 to 6).map(_ => build()).last
+      finally { stop.set(true); reader.join(30000) }
+    assert(failure.get() == null, s"manifest reader failed: ${failure.get()}")
+    assert(StandingIndex.manifest(spark, db, "m_conc").map(_.getAs[Int]("version")) ===
+      Some(last))
+  }
+
   test("probing a missing or wrong-kind index fails loudly") {
     val e1 = intercept[IllegalArgumentException] {
       StandingIndex.probeMatches(spark, batch, col("text"), col("doc_id"),
