@@ -1,19 +1,25 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.quality.Checks
 
 /** The full lakehouse build — the engine's equivalent of `dbt build`
   * (SURVEY §3.1): read bronze, promote the three silver entities,
   * build both gold marts, materialize everything as catalog tables
-  * (S7 CTAS semantics into the S8 warehouse), and run the not-null
-  * contract as the post-build gate.
+  * (S7 CTAS semantics into the S8 warehouse), and report the not-null
+  * contract.
   *
   * The dbt DAG becomes plain dataflow: silver models are independent
   * (Catalyst/Spark schedule their jobs separately), gold.tes is built
   * FROM gold.dss (the J3 mart-over-mart edge), and the 17-test
-  * contract runs one scan per table instead of 17 probe queries.
+  * contract rides the writes: each table's NULL counts are observed in
+  * the job that writes it, instead of 17 probe queries or a rescan per
+  * table.
   */
 object Lakehouse {
 
@@ -22,7 +28,31 @@ object Lakehouse {
       dssRows: Long, tesRows: Long,
       contract: Seq[Checks.CheckResult])
 
-  private val SilverEntities = Seq("laps", "weather", "results")
+  /** In the order the contract reports them. */
+  private val SilverEntities = Seq("laps", "results", "weather")
+
+  /** How long reading a write's observed metrics may wait for them. */
+  private val ObservedWait = 60.seconds
+
+  /** What one [[ctasSwap]] counted while it wrote `table`: the row count
+    * and dbt's `not_null` result ([[Checks.notNull]]) for each requested
+    * column, in column order. Spark delivers a write's observed metrics
+    * on its listener bus after the write returns, so the first read
+    * waits for them, up to a bound, and fails naming the table rather
+    * than hanging when they never arrive.
+    */
+  final class Published private[pipeline] (val table: String,
+      notNull: Seq[String], observation: Observation) {
+    private lazy val metrics: Row =
+      try Await.result(observation.future, ObservedWait)
+      catch { case _: TimeoutException => throw new IllegalStateException(
+        s"$table: the write's observed metrics did not arrive within $ObservedWait") }
+
+    def rows: Long = metrics.getAs[Long]("rows")
+
+    def contract: Seq[Checks.CheckResult] = notNull.map(c =>
+      Checks.CheckResult(table, c, metrics.getAs[Long](s"null:$c")))
+  }
 
   private def dbAndName(spark: SparkSession, fqTable: String): (String, String) =
     fqTable.split('.') match {
@@ -174,7 +204,22 @@ object Lakehouse {
     * old version, readers planning after resolve the new one, and a
     * crash at any point leaves the pointer on the last fully-written
     * version. A failure while writing the new version (bad data,
-    * executor loss, contract breach) never touches the pointer at all.
+    * executor loss) never touches the pointer at all.
+    *
+    * The write's one job also yields the table's row count and the
+    * NULL count of every `notNull` column (a NULL in a partition column
+    * counts too), observed on the rows as they stream into the writer
+    * ([[Published]]): the contract rides the write, with no rescan of
+    * the table just written. A failing not-null check does not block
+    * the publish: like `dbt build`, which materializes a model and then
+    * tests it, the table goes live and the caller reads the failures
+    * from the result.
+    *
+    * A partitioned write is rebalanced on its partition columns first,
+    * so AQE sizes each partition's files by
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (a small
+    * partition lands as one file, a large one is split) instead of one
+    * file per write task per partition.
     *
     * Superseded version tables are garbage-collected after the publish,
     * keeping the `retainVersions` most recent ones. The pointer flip is
@@ -187,14 +232,20 @@ object Lakehouse {
     * outlive a whole publish cycle.
     */
   def ctasSwap(spark: SparkSession, df: DataFrame, fqTable: String,
-               partitionBy: Seq[String] = Nil, retainVersions: Int = 1): Unit = {
+               partitionBy: Seq[String] = Nil, retainVersions: Int = 1,
+               notNull: Seq[String] = Nil): Published = {
     recoverSwap(spark, fqTable)
     val have = versions(spark, fqTable)
     val live = liveVersion(spark, fqTable)
     val next = have.maxOption.getOrElse(-1) + 1
-    val writer = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .saveAsTable(s"${fqTable}__v$next")
+    val observation = Observation()
+    val observed = df.observe(observation, count(lit(1)).as("rows"),
+      notNull.map(c => Checks.nullCount(col(c)).as(s"null:$c")): _*)
+    val writer =
+      if (partitionBy.isEmpty) observed.write
+      else observed.hint("rebalance", partitionBy.map(col): _*).write
+        .partitionBy(partitionBy: _*)
+    writer.mode("overwrite").saveAsTable(s"${fqTable}__v$next")
     publish(spark, fqTable, next, live, df.columns.toSeq)    // the commit point
     // GC superseded + stray versions. The retention window protects the
     // PREVIOUSLY-LIVE version first (after a rollback it is not the
@@ -207,6 +258,7 @@ object Lakehouse {
     (others.dropRight(keepOthers) ++
         (if (retainVersions == 0) protect else Nil))
       .foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${fqTable}__v$v"))
+    new Published(fqTable, notNull, observation)
   }
 
   /** Recovery for a lost pointer: when the live view is missing (a crash
@@ -255,42 +307,39 @@ object Lakehouse {
     * partitioned by `season` so serving predicates prune at the file
     * level (SURVEY §4 row 1 — the reference's DuckDB tables are
     * unpartitioned; at 100 TB a full-table scan per dashboard query is
-    * not viable). `countRows = false` skips the per-table count()
-    * actions (three extra full scans — at scale take row counts from
-    * the write's committed task metrics instead); counts then report -1.
+    * not viable).
+    *
+    * The contract is the reference's 17 `not_null` tests, taken from
+    * the five writes' observed metrics ([[ctasSwap]]'s `notNull`): one
+    * job per table, no rescan. Results come in a fixed order: silver
+    * laps, results, weather (those present), then DSS, then TES. A
+    * failing check does not stop the build; every table is published
+    * and the failures are reported in `contract`, as `dbt build` does.
+    * Row counts come from the same observations; `countRows = false`
+    * reports them as -1.
     */
   def build(spark: SparkSession, bronzeRoot: String,
             silverDb: String = "silver", goldDb: String = "gold",
             countRows: Boolean = true): BuildResult = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $silverDb")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $goldDb")
-    def rows(df: DataFrame): Long = if (countRows) df.count() else -1L
+    val keyCols = Seq("season", "round", "grand_prix")
 
-    val silverRows = SilverEntities.flatMap { entity =>
+    val silver = SilverEntities.flatMap { entity =>
       val exists = new org.apache.hadoop.fs.Path(s"$bronzeRoot/$entity")
       val fs = exists.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(exists)) None
-      else {
-        Silver.build(Bronze.read(spark, bronzeRoot, entity), s"$silverDb.$entity",
-          partitionBySeason = true)
-        Some(entity -> rows(spark.table(s"$silverDb.$entity")))
-      }
-    }.toMap
+      else Some(entity -> Silver.build(Bronze.read(spark, bronzeRoot, entity),
+        s"$silverDb.$entity", partitionBySeason = true, notNull = keyCols))
+    }
 
-    val silverLaps = spark.table(s"$silverDb.laps")
-    ctasSwap(spark, Gold.driverSessionSummary(silverLaps),
-      s"$goldDb.driver_session_summary")
-    val dss = spark.table(s"$goldDb.driver_session_summary")
-    ctasSwap(spark, Gold.teamEventSummary(dss), s"$goldDb.team_event_summary")
-    val tes = spark.table(s"$goldDb.team_event_summary")
+    val dss = ctasSwap(spark, Gold.driverSessionSummary(spark.table(s"$silverDb.laps")),
+      s"$goldDb.driver_session_summary", notNull = keyCols :+ "driver")
+    val tes = ctasSwap(spark, Gold.teamEventSummary(spark.table(dss.table)),
+      s"$goldDb.team_event_summary", notNull = keyCols :+ "team")
 
-    val keyCols = Seq("season", "round", "grand_prix")
-    val contract =
-      silverRows.keys.toSeq.sorted.map(e =>
-        Checks.notNull(spark.table(s"$silverDb.$e"), s"$silverDb.$e", keyCols)) :+
-        Checks.notNull(dss, s"$goldDb.driver_session_summary", keyCols :+ "driver") :+
-        Checks.notNull(tes, s"$goldDb.team_event_summary", keyCols :+ "team")
-
-    BuildResult(silverRows, rows(dss), rows(tes), contract.flatten)
+    def rows(p: Published): Long = if (countRows) p.rows else -1L
+    BuildResult(silver.map { case (e, p) => e -> rows(p) }.toMap, rows(dss), rows(tes),
+      (silver.map(_._2) :+ dss :+ tes).flatMap(_.contract))
   }
 }

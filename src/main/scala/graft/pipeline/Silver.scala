@@ -39,10 +39,12 @@ object Silver {
     * a failed promotion never leaves a half-overwritten table. Partitioning
     * the saved table by season keeps dashboard predicates prunable at
     * scale (an improvement over the reference's unpartitioned DuckDB
-    * tables; SURVEY §4 row 1).
+    * tables; SURVEY §4 row 1). `notNull` names the columns whose NULLs
+    * the write counts: the silver contract rides the write.
     */
   def build(bronze: DataFrame, fqTableName: String,
-            partitionBySeason: Boolean = false): Unit =
+            partitionBySeason: Boolean = false,
+            notNull: Seq[String] = Nil): Lakehouse.Published =
     Lakehouse.ctasSwap(bronze.sparkSession, promoteKeys(bronze), fqTableName,
-      partitionBy = if (partitionBySeason) Seq("season") else Nil)
+      partitionBy = if (partitionBySeason) Seq("season") else Nil, notNull = notNull)
 }

@@ -1,12 +1,15 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Data-quality contract runner — the reference's 17 `not_null` dbt
-  * tests (transform/models/silver/schema.yml:5-29,
-  * transform/models/gold/schema.yml:5-24) as post-build assertions
-  * (SURVEY §5 item 1, §7 step 8).
+/** Data-quality contract runner — dbt's generic tests as scans of a
+  * frame. The reference's 17 `not_null` tests
+  * (transform/models/silver/schema.yml:5-29,
+  * transform/models/gold/schema.yml:5-24; SURVEY §5 item 1, §7 step 8)
+  * ride the writes in [[graft.pipeline.Lakehouse.build]], which counts
+  * them in the job that writes each table; [[notNull]] is the same
+  * count as a scan, for a table already written.
   */
 object Checks {
 
@@ -52,13 +55,19 @@ object Checks {
     */
   def notNullDf(df: DataFrame, table: String, columns: Seq[String]): DataFrame = {
     val wide = df.agg(
-      sum(col(columns.head).isNull.cast("long")).as(columns.head),
-      columns.tail.map(c => sum(col(c).isNull.cast("long")).as(c)): _*)
+      nullCount(col(columns.head)).as(columns.head),
+      columns.tail.map(c => nullCount(col(c)).as(c)): _*)
     val rows = columns.map(c => struct(
       lit(s"not_null:$table.$c").as("check_name"),
-      coalesce(col(c), lit(0L)).as("failures")))
+      col(c).as("failures")))
     wide.select(explode(array(rows: _*)).as("r")).select("r.*")
   }
+
+  /** The aggregate behind dbt's `not_null`: rows where `c` is NULL (0
+    * over no rows). [[graft.pipeline.Lakehouse.ctasSwap]] observes the
+    * same expression on the frame it writes.
+    */
+  private[graft] def nullCount(c: Column): Column = count(when(c.isNull, 1))
 
   /** dbt's `unique`, semantics matched exactly: NULL keys are excluded
     * before grouping (dbt compiles `where field is not null` — two

@@ -233,6 +233,7 @@ object EventStream {
           else deduped
         graft.pipeline.Lakehouse.ctasSwap(spark, merged, fqTable,
           retainVersions = retainVersions)
+        ()
       }
       .start()
 

@@ -222,6 +222,26 @@ class PipelineSpec extends SparkSpec {
     assert(good.forall(_.passed))
   }
 
+  test("Lakehouse.build starts a pinned list of Spark jobs") {
+    import graft.pipeline.Lakehouse
+    def build(): Unit = Lakehouse.build(spark, bronzeRoot, silverDb = "t_jobs_silver",
+      goldDb = "t_jobs_gold", countRows = false)
+    build()
+    val jobs = jobExecutionsStartedBy(build())
+    // silver.laps: the bronze schema merge (no SQL execution), then the
+    //   write's rebalance shuffle and its write stage (2 jobs of one
+    //   execution);
+    // silver.weather: the same 3 jobs (no results in this bronze);
+    // gold DSS: its shuffle and its write stage (2 jobs of one execution);
+    // gold TES: one single-task job over DSS's one file.
+    // The not-null contract and the row counts ride the writes and start
+    // no job: a rescan of a written table adds a job and an execution.
+    assert(jobs.size === 9, jobs.mkString(", "))
+    assert(jobs.count(_.isEmpty) === 2, jobs.mkString(", "))
+    assert(jobs.flatten.distinct.size === 4, "one SQL execution per written table: " +
+      jobs.mkString(", "))
+  }
+
   test("unique and accepted_values generic tests count failures") {
     import spark.implicits._
     import graft.quality.Checks

@@ -44,35 +44,57 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * runs (commands, writes and actions alike), counted through a job
     * group.
     */
-  def sqlExecutionsStartedBy(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+  def sqlExecutionsStartedBy(body: => Unit): Seq[String] = startedBy(body) {
+    case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+        if s.jobGroupId.isDefined => (s.jobGroupId.get, s.sparkPlanInfo.nodeName)
+  }
+
+  /** The Spark jobs started while `body` runs, in start order, each as
+    * the id of the SQL execution it ran under (`None` for a job outside
+    * any, such as a schema merge), counted through a job group the way
+    * [[sqlExecutionsStartedBy]] counts executions.
+    */
+  def jobExecutionsStartedBy(body: => Unit): Seq[Option[Long]] = startedBy(body) {
+    case j: org.apache.spark.scheduler.SparkListenerJobStart
+        if j.properties != null && j.properties.getProperty("spark.jobGroup.id") != null =>
+      (j.properties.getProperty("spark.jobGroup.id"),
+        Option(j.properties.getProperty("spark.sql.execution.id")).map(_.toLong))
+  }
+
+  /** What `pick` takes, as (job group, value), from the listener events
+    * that `body` causes, in delivery order. `body` runs in a fresh job
+    * group; a fence (a SQL execution and a job in a second group) runs
+    * after it, and the listener bus delivers in order, so once a fence
+    * event is seen every event of `body` has been seen too.
+    */
+  private def startedBy[A](body: => Unit)(
+      pick: PartialFunction[org.apache.spark.scheduler.SparkListenerEvent, (String, A)]): Seq[A] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val group = s"sql-started-by-${System.nanoTime()}"
+    val group = s"started-by-${System.nanoTime()}"
     val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, A)]()
     val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          s.jobGroupId.foreach(g => seen.add((g, s.sparkPlanInfo.nodeName)))
-        case _ =>
-      }
+      private def offer(e: SparkListenerEvent): Unit = pick.lift(e).foreach(seen.add)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = offer(e)
+      override def onJobStart(e: SparkListenerJobStart): Unit = offer(e)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "counted block")
       try body finally sc.clearJobGroup()
-      // the listener bus delivers in order: once the sentinel's start is
-      // seen, every execution started before it has been seen too
       sc.setJobGroup(sentinel, "listener-bus fence")
-      try spark.sql("SELECT 1").collect() finally sc.clearJobGroup()
+      try {
+        spark.sql("SELECT 1").collect()
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000000000L
       def fenced = seen.asScala.exists(_._1 == sentinel)
       while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
       assert(fenced)
     } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.collect { case (g, d) if g == group => d }
+    seen.asScala.toSeq.collect { case (g, a) if g == group => a }
   }
 }
 
