@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -46,19 +44,19 @@ import graft.pipeline.Lakehouse
   * `Skew.bucketed` rule) and sorted on the join keys, so sort-merge
   * probes read the buckets as-is.
   *
-  * Versioned exactly-once commit: all member tables of a build are
-  * written under `<name>__v<N>__<member>` names first; the COMMIT
-  * POINT is one atomic repoint of the manifest view `<db>.<name>`
-  * (`Lakehouse.swapView`, the publish's own catalog swap, so the name
-  * never goes missing) — a constant one-row view carrying the live version
+  * Versioned exactly-once commit: an index publishes through the same
+  * versioned commit as a table (`Lakehouse.commitVersion`). All member
+  * tables of a build are written under `<name>__v<N>__<member>` names
+  * first; the COMMIT POINT is one atomic repoint of the manifest view
+  * `<db>.<name>` — a constant one-row view carrying the live version
   * number and the build parameters. A crash anywhere before the flip
   * leaves the manifest on the last complete version with every one of
-  * its member tables intact (a later rebuild overwrites the orphaned
-  * `__v<N>` members); probes resolve the version through the manifest
-  * and can never observe a half-built index. After the flip the
-  * previous version's members are retained for one publish cycle
-  * (concurrent probes planned against them drain; the ctasSwap
-  * retention argument, `Lakehouse.ctasSwap`), older ones are dropped.
+  * its member tables intact (the next commit skips and drops the
+  * orphaned `__v<N>` members); probes resolve the version through the
+  * manifest and can never observe a half-built index. After the flip
+  * the commit keeps the new version, the one it superseded (concurrent
+  * probes planned against it drain) and every version either manifest
+  * names; it drops the rest.
   *
   * Refresh semantics: a rebuild is a full re-derivation from the
   * corpus frame passed in; probes between publishes see the old
@@ -107,22 +105,6 @@ object StandingIndex {
   private def fq(db: String, name: String, v: Int, suffix: String) =
     s"$db.${name}__v${v}__$suffix"
 
-  /** Member tables of every version, as (version, table name), read
-    * from the session catalog directly (no SQL command).
-    */
-  private def versionTables(spark: SparkSession, db: String,
-                            name: String): Seq[(Int, String)] = {
-    val re = (Pattern.quote(name) + "__v(\\d+)__.+").r
-    if (!spark.catalog.databaseExists(db)) Nil
-    else spark.sessionState.catalog.listTables(db, s"${name}__v*")
-      .map(_.table).collect { case t @ re(v) => (v.toInt, t) }
-  }
-
-  /** Version numbers with at least one member table present. */
-  private def versions(spark: SparkSession, db: String,
-                       name: String): Seq[Int] =
-    versionTables(spark, db, name).map(_._1).distinct.sorted
-
   /** The live manifest row (version + build parameters), or None if
     * the index has never been committed.
     */
@@ -152,73 +134,65 @@ object StandingIndex {
     * fully-qualified name in any of its string fields — the leveled
     * appends (chunk/neardup/ann) carry older versions' level tables
     * forward instead of rewriting them, and the GC must treat those
-    * as live. Scanning every string meta field for the
-    * `name__v<N>__` pattern keeps the contract generic: any future
-    * cross-version reference is GC-safe by construction.
+    * as live. Every string meta field is searched for the tables it
+    * names (`Lakehouse.namedVersions`), which keeps the contract
+    * generic: any future cross-version reference is GC-safe by
+    * construction.
     */
-  private def referencedVersions(name: String, m: Row): Set[Int] = {
-    val re = (Pattern.quote(name) + "__v(\\d+)__").r
+  private def referencedVersions(name: String, m: Row): Set[Int] =
     (0 until m.length).flatMap(i => m.get(i) match {
-      case s: String => re.findAllMatchIn(s).map(_.group(1).toInt).toSeq
+      case s: String => Lakehouse.namedVersions(name, s)
       case _ => Nil
     }).toSet
-  }
 
-  /** Comma-joined FQ level-table list from a `levels`-style manifest
-    * field; empty when the field is absent (pre-leveled manifests).
+  /** The comma-joined FQ tables of manifest field `field` (a level
+    * list, or one quantizer table). Every build, append, delete and
+    * compaction writes its kind's fields, so a missing one is a broken
+    * manifest and fails naming the field.
     */
   private def levelTables(m: Row, field: String): Seq[String] =
     metaString(m, field)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+      .filter(_.nonEmpty)
+      .getOrElse(throw new IllegalStateException(
+        s"${m.getAs[String]("kind")} index manifest v${m.getAs[Int]("version")} " +
+          s"has no `$field` tables"))
 
-  private def commit(spark: SparkSession, db: String, name: String,
-                     kind: String, members: Seq[Member],
-                     metaSql: Seq[String]): Int =
-    commitVersioned(spark, db, name, kind, members, _ => metaSql)
-
-  /** Write every member at version N, flip the manifest view (THE
-    * commit), GC versions that are neither live, superseded-but-
-    * draining, nor referenced by the live or superseded manifest
-    * (leveled appends reference older versions' tables by FQ name in
-    * their meta). `metaSql` sees the version number so level lists
-    * can name the tables being committed.
+  /** Write every member at version N and flip the manifest view to a
+    * one-row SELECT of `metaSql(N)`: THE commit, the same one tables
+    * publish through ([[Lakehouse.commitVersion]]). It keeps N, the
+    * superseded version and every version the new manifest names; the
+    * pins add every version the superseded manifest names, which a
+    * probe planned against it may still read. `metaSql` sees the
+    * version number so level lists can name the tables being committed.
     */
   private def commitVersioned(spark: SparkSession, db: String, name: String,
                               kind: String, members: Seq[Member],
                               metaSql: Int => Seq[String]): Int = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    val prevManifest = manifest(spark, db, name)
-    val prev = prevManifest.map(_.getAs[Int]("version"))
-    val next = versions(spark, db, name).maxOption.getOrElse(-1) + 1
-    members.foreach { mm =>
-      val frame =
-        if (mm.bucketKeys.isEmpty) mm.df
-        // one file per bucket, or Spark re-sorts every bucket at read
-        // time and the no-Sort half of the co-located probe is lost
-        else mm.df.repartition(mm.nBuckets, mm.bucketKeys.map(col): _*)
-      val base = frame.write.mode("overwrite")
-      val w =
-        if (mm.bucketKeys.isEmpty) base
-        else {
-          val sk = if (mm.sortKeys.nonEmpty) mm.sortKeys else mm.bucketKeys
-          base.bucketBy(mm.nBuckets, mm.bucketKeys.head,
-              mm.bucketKeys.tail: _*)
-            .sortBy(sk.head, sk.tail: _*)
-        }
-      w.saveAsTable(fq(db, name, next, mm.suffix))
+    val pinned = manifest(spark, db, name)
+      .fold(Set.empty[Int])(referencedVersions(name, _))
+    Lakehouse.commitVersion(spark, db, name, pinned) { next =>
+      members.foreach { mm =>
+        val frame =
+          if (mm.bucketKeys.isEmpty) mm.df
+          // one file per bucket, or Spark re-sorts every bucket at read
+          // time and the no-Sort half of the co-located probe is lost
+          else mm.df.repartition(mm.nBuckets, mm.bucketKeys.map(col): _*)
+        val base = frame.write.mode("overwrite")
+        val w =
+          if (mm.bucketKeys.isEmpty) base
+          else {
+            val sk = if (mm.sortKeys.nonEmpty) mm.sortKeys else mm.bucketKeys
+            base.bucketBy(mm.nBuckets, mm.bucketKeys.head,
+                mm.bucketKeys.tail: _*)
+              .sortBy(sk.head, sk.tail: _*)
+          }
+        w.saveAsTable(fq(db, name, next, mm.suffix))
+      }
+      (Seq(s"$next AS version", s"'$kind' AS kind") ++ metaSql(next))
+        .mkString("SELECT ", ", ", "")
     }
-    val meta = (Seq(s"$next AS version", s"'$kind' AS kind")
-      ++ metaSql(next)).mkString(", ")
-    Lakehouse.swapView(spark, db, name, s"AS SELECT $meta")
-    // retain the superseded version for in-flight probes, plus every
-    // version either manifest still references; GC the rest
-    val keep = Set(next) ++ prev ++
-      prevManifest.map(referencedVersions(name, _)).getOrElse(Set.empty) ++
-      referencedVersions(name, spark.table(s"$db.$name").collect().head)
-    versionTables(spark, db, name).filterNot { case (v, _) => keep(v) }
-      .foreach { case (_, t) => spark.sql(s"DROP TABLE IF EXISTS $db.$t") }
-    next
   }
 
   // ------------------------------------------------- maximal matches
@@ -234,7 +208,7 @@ object StandingIndex {
                       name: String = "match_idx"): Int = {
     val (anchors, hot, toks) = Dedup.matchIndexFrames(corpus, content, id,
       minLen, maxAnchorOccurrences)
-    commit(spark, db, name, "match", Seq(
+    commitVersioned(spark, db, name, "match", Seq(
       // bucketed on BOTH probe-join keys: bucket keys must equal the
       // join keys for EnsureRequirements to accept the bucket layout
       // as the join's partitioning (a gh-only bucketing is merely a
@@ -243,7 +217,7 @@ object StandingIndex {
       Member("anchors", anchors, Seq("gh", "sub"), nBuckets),
       Member("toks", toks, Seq("corpus_id"), nBuckets),
       Member("hot", hot)),
-      Seq(s"$minLen AS min_len",
+      _ => Seq(s"$minLen AS min_len",
         s"$maxAnchorOccurrences AS max_anchor_occurrences",
         s"$nBuckets AS n_buckets"))
   }
@@ -304,25 +278,15 @@ object StandingIndex {
         .select(col("gh"), col("doc_id").as("corpus_id"),
           col("pos").as("pos_c")))
     val (anchors, hot) = Dedup.matchIndexFromOccurrences(aU, cap)
-    commit(spark, db, name, "match", Seq(
+    commitVersioned(spark, db, name, "match", Seq(
       Member("anchors", anchors, Seq("gh", "sub"), nBuckets),
       Member("toks", oldToks.unionByName(toksD.select(
         col("doc_id").as("corpus_id"), col("toks").as("tc"))),
         Seq("corpus_id"), nBuckets),
       Member("hot", hot)),
-      Seq(s"$minLen AS min_len", s"$cap AS max_anchor_occurrences",
+      _ => Seq(s"$minLen AS min_len", s"$cap AS max_anchor_occurrences",
         s"$nBuckets AS n_buckets"))
   }
-
-  /** FQ level tables of a leveled index, falling back to the single
-    * same-version member for manifests written before levels existed.
-    */
-  private def levelsOrMember(db: String, name: String, m: Row,
-                             field: String, suffix: String): Seq[String] =
-    levelTables(m, field) match {
-      case Nil => Seq(fq(db, name, m.getAs[Int]("version"), suffix))
-      case l   => l
-    }
 
   /** Incremental publish of the live chunk index — LEVELED (round 14,
     * the verdict-r13 append-economics item): the former append
@@ -351,8 +315,8 @@ object StandingIndex {
     val m = manifestOrThrow(spark, db, name, "chunk")
     val ct = m.getAs[Int]("chunk_tokens")
     val nBuckets = m.getAs[Int]("n_buckets")
-    val old = levelsOrMember(db, name, m, "levels", "fps")
-    val oldFpdocs = chunkSidecarLevels(db, name, m)
+    val old = levelTables(m, "levels")
+    val oldFpdocs = levelTables(m, "levels_fpdocs")
     // append-only gate over the LIVE id set (the match/neardup/ANN
     // discipline, enabled for chunks by the round-17 sidecar): a
     // fully-shadowed (tombstoned) id is re-insertable — delete →
@@ -406,21 +370,6 @@ object StandingIndex {
     }
   }
 
-  /** The sidecar level tables of a delete-capable chunk index —
-    * loud-fails on a pre-round-17 layout (distinct digests only, no
-    * reference pairs): rebuild with [[buildChunkIndex]] to gain the
-    * delete/upsert lifecycle.
-    */
-  private def chunkSidecarLevels(db: String, name: String, m: Row): Seq[String] = {
-    val l = levelTables(m, "levels_fpdocs")
-    require(l.nonEmpty,
-      s"$db.$name was built before the (fp, doc_id) reference sidecar " +
-        "existed — its digest member cannot attribute digests to " +
-        "documents, so append gates and deletes are undefined on it. " +
-        "Rebuild with buildChunkIndex to get the delete-capable layout.")
-    l
-  }
-
   /** Live (unshadowed) sidecar rows of a chunk index: (fp, doc_id,
     * __lvl) minus the generations the doc tombstones kill.
     */
@@ -462,8 +411,8 @@ object StandingIndex {
                            name: String = "chunk_idx"): Int = {
     val m = manifestOrThrow(spark, db, name, "chunk")
     val del = ids.select(col("doc_id").cast(LongType).as("doc_id")).distinct()
-    val fpsLevels = levelsOrMember(db, name, m, "levels", "fps")
-    val sidecar = chunkSidecarLevels(db, name, m)
+    val fpsLevels = levelTables(m, "levels")
+    val sidecar = levelTables(m, "levels_fpdocs")
     requireLiveIds(spark, m, del,
       unionWithOrdinal(spark, sidecar).select("doc_id", "__lvl"),
       "doc_id", s"$db.$name")
@@ -510,7 +459,7 @@ object StandingIndex {
     // rows drop, and the rewritten fps member (its distinct fp set)
     // therefore drops every dead digest too — both tomb lists clear
     val foldedFpdocs = liveChunkSidecar(spark, m,
-      chunkSidecarLevels(db, name, m)).drop("__lvl")
+      levelTables(m, "levels_fpdocs")).drop("__lvl")
     commitVersioned(spark, db, name, "chunk", Seq(
       Member("fps", foldedFpdocs.select("fp").distinct(),
         Seq("fp"), nBuckets),
@@ -544,8 +493,8 @@ object StandingIndex {
     val (n, k, bands) = (m.getAs[Int]("n"), m.getAs[Int]("k"),
       m.getAs[Int]("bands"))
     val nBuckets = m.getAs[Int]("n_buckets")
-    val oldBanded = levelsOrMember(db, name, m, "levels_banded", "banded")
-    val oldBase = levelsOrMember(db, name, m, "levels_base", "base")
+    val oldBanded = levelTables(m, "levels_banded")
+    val oldBase = levelTables(m, "levels_base")
     // append-only gate over the LIVE id set (fully-shadowed ids are
     // re-insertable — the generation-stamp upsert, see the ANN twin)
     val liveIds = {
@@ -643,7 +592,7 @@ object StandingIndex {
                   name: String = "chunk_idx"): DataFrame = {
     val m = manifestOrThrow(spark, db, name, "chunk")
     TextAnalysis.chunkDedupAgainstFpLevels(
-      levelsOrMember(db, name, m, "levels", "fps").map(spark.table),
+      levelTables(m, "levels").map(spark.table),
       batch, content, id, m.getAs[Int]("chunk_tokens"),
       // dead digests (zero live referencing docs, awaiting the next
       // compaction fold) must not count as corpus hits — see
@@ -691,8 +640,8 @@ object StandingIndex {
                     db: String = "graft_idx",
                     name: String = "neardup_idx"): DataFrame = {
     val m = manifestOrThrow(spark, db, name, "neardup")
-    val banded = levelsOrMember(db, name, m, "levels_banded", "banded")
-    val base = levelsOrMember(db, name, m, "levels_base", "base")
+    val banded = levelTables(m, "levels_banded")
+    val base = levelTables(m, "levels_base")
     // tombstoned corpus docs (retired generations awaiting the next
     // compaction fold) drop out of each LEVEL's pair results: every
     // (new_id, dup_of) pair is independent — no ranking — so the
@@ -720,6 +669,36 @@ object StandingIndex {
     }.reduce(_.unionByName(_))
   }
 
+  /** Explicit compaction of the live near-dup index — the maintenance
+    * motion a pure-delete workload needs: without it, tombstones only
+    * fold when an APPEND happens to cross `maxLevels`, so a corpus
+    * that shrinks (GDPR erasure, licence withdrawal) would pay the
+    * probe-side anti-join and the retired docs' candidate generation
+    * forever. Rewrites all levels as one (minus tombstones) and
+    * clears the list — the same fold the append-triggered compaction
+    * runs, callable on its own schedule. Idempotent: compacting a
+    * 1-level tombstone-free index recommits an identical layout.
+    */
+  def compactNearDupIndex(spark: SparkSession, db: String = "graft_idx",
+                          name: String = "neardup_idx"): Int = {
+    val m = manifestOrThrow(spark, db, name, "neardup")
+    def folded(field: String): DataFrame = {
+      val unioned = unionWithOrdinal(spark, levelTables(m, field))
+      tombTable(m).fold(unioned)(t =>
+        dropShadowed(unioned, spark.table(t), "doc_id")).drop("__lvl")
+    }
+    val nBuckets = m.getAs[Int]("n_buckets")
+    commitVersioned(spark, db, name, "neardup", Seq(
+      Member("banded", folded("levels_banded"),
+        Seq("bucket"), nBuckets),
+      Member("base", folded("levels_base"),
+        Seq("doc_id"), nBuckets)),
+      v => Seq(s"${m.getAs[Int]("n")} AS n", s"${m.getAs[Int]("k")} AS k",
+        s"${m.getAs[Int]("bands")} AS bands", s"$nBuckets AS n_buckets",
+        s"'${fq(db, name, v, "banded")}' AS levels_banded",
+        s"'${fq(db, name, v, "base")}' AS levels_base"))
+  }
+
   /** Retire documents from the live near-dup index — the DELETE half
     * of its LSM lifecycle, [[deleteFromAnnIndex]]'s twin on doc_id:
     * ids land in a tombstone member (O(tombstones) publish; the band
@@ -743,43 +722,12 @@ object StandingIndex {
     * after the delete where a rebuild would uncap it) — documented
     * rebuild-instead semantics.
     */
-  /** Explicit compaction of the live near-dup index — the maintenance
-    * motion a pure-delete workload needs: without it, tombstones only
-    * fold when an APPEND happens to cross `maxLevels`, so a corpus
-    * that shrinks (GDPR erasure, licence withdrawal) would pay the
-    * probe-side anti-join and the retired docs' candidate generation
-    * forever. Rewrites all levels as one (minus tombstones) and
-    * clears the list — the same fold the append-triggered compaction
-    * runs, callable on its own schedule. Idempotent: compacting a
-    * 1-level tombstone-free index recommits an identical layout.
-    */
-  def compactNearDupIndex(spark: SparkSession, db: String = "graft_idx",
-                          name: String = "neardup_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "neardup")
-    def folded(field: String, suffix: String): DataFrame = {
-      val unioned = unionWithOrdinal(spark,
-        levelsOrMember(db, name, m, field, suffix))
-      tombTable(m).fold(unioned)(t =>
-        dropShadowed(unioned, spark.table(t), "doc_id")).drop("__lvl")
-    }
-    val nBuckets = m.getAs[Int]("n_buckets")
-    commitVersioned(spark, db, name, "neardup", Seq(
-      Member("banded", folded("levels_banded", "banded"),
-        Seq("bucket"), nBuckets),
-      Member("base", folded("levels_base", "base"),
-        Seq("doc_id"), nBuckets)),
-      v => Seq(s"${m.getAs[Int]("n")} AS n", s"${m.getAs[Int]("k")} AS k",
-        s"${m.getAs[Int]("bands")} AS bands", s"$nBuckets AS n_buckets",
-        s"'${fq(db, name, v, "banded")}' AS levels_banded",
-        s"'${fq(db, name, v, "base")}' AS levels_base"))
-  }
-
   def deleteFromNearDupIndex(spark: SparkSession, ids: DataFrame,
                              db: String = "graft_idx",
                              name: String = "neardup_idx"): Int = {
     val m = manifestOrThrow(spark, db, name, "neardup")
     val del = ids.select(col("doc_id").cast(LongType).as("doc_id")).distinct()
-    val baseLevels = levelsOrMember(db, name, m, "levels_base", "base")
+    val baseLevels = levelTables(m, "levels_base")
     requireLiveIds(spark, m, del,
       unionWithOrdinal(spark, baseLevels).select("doc_id", "__lvl"),
       "doc_id", s"$db.$name")
@@ -790,10 +738,8 @@ object StandingIndex {
     commitVersioned(spark, db, name, "neardup",
       Seq(Member("tomb", newTomb)),
       v => metaBase ++ Seq(
-        s"'${levelsOrMember(db, name, m, "levels_banded", "banded")
-          .mkString(",")}' AS levels_banded",
-        s"'${levelsOrMember(db, name, m, "levels_base", "base")
-          .mkString(",")}' AS levels_base",
+        s"'${levelTables(m, "levels_banded").mkString(",")}' AS levels_banded",
+        s"'${baseLevels.mkString(",")}' AS levels_base",
         s"'${fq(db, name, v, "tomb")}' AS tomb_tab"))
   }
 
@@ -840,10 +786,10 @@ object StandingIndex {
         s"'${fq(db, name, v, "books")}' AS books_tab"))
   }
 
-  /** FQ tombstone table of a live index version, if any — manifests
-    * written before deletes existed, or whose tombstones were folded
-    * by the last compaction, carry an empty/absent field. Shared by
-    * the ANN (vec_id) and near-dup (doc_id) delete paths.
+  /** FQ tombstone table of a live index version, if any — a manifest
+    * with no delete since its last build or compaction carries no such
+    * field. Shared by the ANN (vec_id) and near-dup (doc_id) delete
+    * paths.
     */
   private def tombTable(m: Row): Option[String] =
     metaString(m, "tomb_tab")
@@ -914,14 +860,37 @@ object StandingIndex {
       .groupBy(key).agg(max("dead_below").as("dead_below"))
   }
 
-  /** The build-parameter meta fields every ANN commit carries. */
-  private def annMetaBase(m: Row, coarseTab: String,
-                          booksTab: String): Seq[String] =
+  /** The meta fields every ANN commit carries over from the live
+    * manifest `m`: the build parameters and the quantizer tables (frozen,
+    * so carried by reference, never rewritten).
+    */
+  private def annMetaBase(m: Row): Seq[String] =
     Seq(s"${m.getAs[Int]("n_cells")} AS n_cells", s"${m.getAs[Int]("m")} AS m",
       s"${m.getAs[Int]("ksub")} AS ksub", s"${m.getAs[Int]("iters")} AS iters",
       s"${m.getAs[Int]("dim")} AS dim",
-      s"${m.getAs[Int]("n_buckets")} AS n_buckets",
-      s"'$coarseTab' AS coarse_tab", s"'$booksTab' AS books_tab")
+      s"${m.getAs[Int]("n_buckets")} AS n_buckets") ++
+      Seq("coarse_tab", "books_tab")
+        .map(f => s"'${levelTables(m, f).mkString(",")}' AS $f")
+
+  /** Explicit compaction of the live ANN index —
+    * [[compactNearDupIndex]]'s twin: all code levels rewrite as one,
+    * minus tombstones; quantizer tables carry over by reference
+    * (frozen, never rewritten). See the near-dup twin for why a
+    * pure-delete workload needs this as its own motion.
+    */
+  def compactAnnIndex(spark: SparkSession, db: String = "graft_idx",
+                      name: String = "ann_idx"): Int = {
+    val m = manifestOrThrow(spark, db, name, "ann")
+    val unioned = unionWithOrdinal(spark, levelTables(m, "levels_codes"))
+    val folded = tombTable(m).fold(unioned)(t =>
+      dropShadowed(unioned, spark.table(t), "vec_id")).drop("__lvl")
+    val nBuckets = m.getAs[Int]("n_buckets")
+    commitVersioned(spark, db, name, "ann", Seq(
+      Member("codes", folded, Seq("cell"), nBuckets,
+        sortKeys = Seq("cell", "vec_id"))),
+      v => annMetaBase(m) :+
+        s"'${fq(db, name, v, "codes")}' AS levels_codes")
+  }
 
   /** Retire vectors from the live ANN index — the DELETE half of the
     * LSM motion ([[appendAnnIndex]] is the INSERT half): the ids land
@@ -942,61 +911,34 @@ object StandingIndex {
     * deleting an unknown id or double-deleting is a pipeline bug
     * surfaced immediately, not a silent no-op.
     */
-  /** Explicit compaction of the live ANN index —
-    * [[compactNearDupIndex]]'s twin: all code levels rewrite as one,
-    * minus tombstones; quantizer tables carry over by reference
-    * (frozen, never rewritten). See the near-dup twin for why a
-    * pure-delete workload needs this as its own motion.
-    */
-  def compactAnnIndex(spark: SparkSession, db: String = "graft_idx",
-                      name: String = "ann_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "ann")
-    val unioned = unionWithOrdinal(spark,
-      levelsOrMember(db, name, m, "levels_codes", "codes"))
-    val folded = tombTable(m).fold(unioned)(t =>
-      dropShadowed(unioned, spark.table(t), "vec_id")).drop("__lvl")
-    val coarseTab = levelsOrMember(db, name, m, "coarse_tab", "coarse").head
-    val booksTab = levelsOrMember(db, name, m, "books_tab", "books").head
-    val nBuckets = m.getAs[Int]("n_buckets")
-    commitVersioned(spark, db, name, "ann", Seq(
-      Member("codes", folded, Seq("cell"), nBuckets,
-        sortKeys = Seq("cell", "vec_id"))),
-      v => annMetaBase(m, coarseTab, booksTab) :+
-        s"'${fq(db, name, v, "codes")}' AS levels_codes")
-  }
-
   def deleteFromAnnIndex(spark: SparkSession, ids: DataFrame,
                          db: String = "graft_idx",
                          name: String = "ann_idx"): Int = {
     val m = manifestOrThrow(spark, db, name, "ann")
     val del = ids.select(col("vec_id").cast(LongType).as("vec_id")).distinct()
-    val levels = levelsOrMember(db, name, m, "levels_codes", "codes")
+    val levels = levelTables(m, "levels_codes")
     requireLiveIds(spark, m, del,
       unionWithOrdinal(spark, levels).select("vec_id", "__lvl"),
       "vec_id", s"$db.$name")
-    val coarseTab = levelsOrMember(db, name, m, "coarse_tab", "coarse").head
-    val booksTab = levelsOrMember(db, name, m, "books_tab", "books").head
     commitVersioned(spark, db, name, "ann",
       Seq(Member("tomb", mergedTomb(spark, m, del, "vec_id", levels.size))),
-      v => annMetaBase(m, coarseTab, booksTab) ++ Seq(
+      v => annMetaBase(m) ++ Seq(
         s"'${levels.mkString(",")}' AS levels_codes",
         s"'${fq(db, name, v, "tomb")}' AS tomb_tab"))
   }
 
-  /** The live coarse/books quantizer tables: named by the manifest
-    * (leveled manifests carry them by reference across appends —
-    * frozen quantizers are never rewritten), falling back to the
-    * same-version member for pre-leveled manifests.
+  /** The live coarse/books quantizer tables, named by the manifest
+    * (appends carry them by reference — frozen quantizers are never
+    * rewritten).
     */
   private def annQuantizers(spark: SparkSession, db: String, name: String,
                             m: Row): (DataFrame, DataFrame) = {
-    def one(field: String, suffix: String) =
-      levelsOrMember(db, name, m, field, suffix) match {
-        case Seq(t) => spark.table(t)
-        case l => throw new IllegalStateException(
-          s"$db.$name: expected exactly one $suffix table, got $l")
-      }
-    (one("coarse_tab", "coarse"), one("books_tab", "books"))
+    def one(field: String) = levelTables(m, field) match {
+      case Seq(t) => spark.table(t)
+      case l => throw new IllegalStateException(
+        s"$db.$name: expected exactly one `$field` table, got $l")
+    }
+    (one("coarse_tab"), one("books_tab"))
   }
 
   /** Incremental publish of the live ANN index — the FROZEN-QUANTIZER
@@ -1025,7 +967,7 @@ object StandingIndex {
     val (nCells, pqM, ksub, iters, dim, nBuckets) =
       (m.getAs[Int]("n_cells"), m.getAs[Int]("m"), m.getAs[Int]("ksub"),
         m.getAs[Int]("iters"), m.getAs[Int]("dim"), m.getAs[Int]("n_buckets"))
-    val oldCodes = levelsOrMember(db, name, m, "levels_codes", "codes")
+    val oldCodes = levelTables(m, "levels_codes")
     // append-only gate over the LIVE id set: a fully-shadowed
     // (tombstoned) id is re-insertable — delete → append is the
     // first-class UPDATE the generation stamps exist for
@@ -1044,11 +986,7 @@ object StandingIndex {
       .map(r => (r.getLong(1), r.getSeq[Double](2))).sortBy(_._1).toSeq)
     val deltaCodes =
       Similarity.ivfadcEncodeDelta(delta, coarse, books, pqM, dim)
-    // re-derive the quantizer FQ names once so the new manifest keeps
-    // referencing the tables where they physically live
-    val coarseTab = levelsOrMember(db, name, m, "coarse_tab", "coarse").head
-    val booksTab = levelsOrMember(db, name, m, "books_tab", "books").head
-    val metaBase = annMetaBase(m, coarseTab, booksTab)
+    val metaBase = annMetaBase(m)
     val tomb = tombTable(m)
     if (oldCodes.size >= maxLevels) {
       // compaction FOLDS the tombstones (level-aware — a re-inserted
@@ -1103,7 +1041,7 @@ object StandingIndex {
     // is map-only work against the broadcast LUTs — the distance rank
     // exchanges on query_id either way, so levels cost no extra
     // corpus-side shuffle
-    val codes = levelsOrMember(db, name, m, "levels_codes", "codes")
+    val codes = levelTables(m, "levels_codes")
       .zipWithIndex
       .map { case (t, i) => spark.table(t)
         .filter(col("cell").isin(cells: _*)).withColumn("__lvl", lit(i)) }

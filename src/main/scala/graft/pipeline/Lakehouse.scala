@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import java.util.regex.Pattern
+
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
+import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
@@ -60,24 +63,38 @@ object Lakehouse {
       case _            => (spark.catalog.currentDatabase, fqTable)
     }
 
-  /** Version numbers of the physical tables backing `fqTable`
-    * (`<table>__v<N>` naming). Read from the session catalog directly —
-    * no data scan and no SQL command.
+  /** `<name>__v<N>` and `<name>__v<N>__<member>`: the one naming format
+    * of a versioned commit's tables (a table's version, a standing
+    * index's member). Matched whole against a catalog listing; searched
+    * for in a view body or a manifest string for the versions it names.
     */
-  private def versions(spark: SparkSession, fqTable: String): Seq[Int] = {
-    val (db, name) = dbAndName(spark, fqTable)
-    val re = (java.util.regex.Pattern.quote(name) + "__v(\\d+)").r
+  private def versionName(name: String): Regex =
+    (Pattern.quote(name) + "__v(\\d+)(?:__\\w+)?").r
+
+  /** Every table of every version of `db.name`, as (version, table
+    * name). Read from the session catalog directly: no data scan and no
+    * SQL command.
+    */
+  private def versionedTables(spark: SparkSession, db: String,
+                              name: String): Seq[(Int, String)] = {
+    val re = versionName(name)
     if (!spark.catalog.databaseExists(db)) Nil
     else spark.sessionState.catalog.listTables(db, s"${name}__v*")
-      .map(_.table).collect { case re(v) => v.toInt }
+      .map(_.table).collect { case t @ re(v) => (v.toInt, t) }
   }
 
+  /** The versions of `name` whose tables `text` names. */
+  private[graft] def namedVersions(name: String, text: String): Set[Int] =
+    versionName(name).findAllMatchIn(text).map(_.group(1).toInt).toSet
+
   /** Retained version numbers of `fqTable`, ascending — what
-    * [[readVersion]] accepts. How many exist is governed by
-    * `ctasSwap(retainVersions = …)`.
+    * [[readVersion]] accepts: the live version and the one it
+    * superseded ([[commitVersion]]'s retention rule).
     */
-  def listVersions(spark: SparkSession, fqTable: String): Seq[Int] =
-    versions(spark, fqTable).sorted
+  def listVersions(spark: SparkSession, fqTable: String): Seq[Int] = {
+    val (db, name) = dbAndName(spark, fqTable)
+    versionedTables(spark, db, name).map(_._1).distinct.sorted
+  }
 
   /** Time travel: read a specific retained version of a
     * versioned-swap table — the escape hatch when a publish has to be
@@ -90,8 +107,8 @@ object Lakehouse {
     val have = listVersions(spark, fqTable)
     require(have.contains(version),
       s"$fqTable has no retained version $version (available: " +
-        s"${have.mkString(", ")}) — raise ctasSwap(retainVersions) to " +
-        "keep more history")
+        s"${have.mkString(", ")}) — a publish keeps only the version it " +
+        "makes live and the one it supersedes")
     spark.table(s"${fqTable}__v$version")
   }
 
@@ -102,7 +119,9 @@ object Lakehouse {
   def rollbackTo(spark: SparkSession, fqTable: String, version: Int): Unit = {
     require(listVersions(spark, fqTable).contains(version),
       s"$fqTable has no retained version $version")
-    publish(spark, fqTable, version, liveVersion(spark, fqTable))
+    val (db, name) = dbAndName(spark, fqTable)
+    publish(spark, db, name, version, liveVersion(spark, fqTable),
+      selectVersion(db, name, version))
   }
 
   /** Collect table + column statistics for the LIVE version of a
@@ -123,30 +142,64 @@ object Lakehouse {
     spark.sql(s"ANALYZE TABLE ${fqTable}__v$v COMPUTE STATISTICS$forCols")
   }
 
-  /** Point the `fqTable` view at version `v`, recording `prev` (the
-    * version it served until now) as the superseded one. `cols` (when
+  /** Point the view `db.name` at version `v` as `select`, recording
+    * `prev` (the version it served until now) as the superseded one.
+    * The view records which version is live and which one it
+    * superseded in its TBLPROPERTIES, so the same single atomic catalog
+    * op carries the metadata and rollbacks don't desynchronize it. prev
+    * is what the commit's GC must protect and what versionDrift
+    * compares against; after a ROLLBACK the numerically-highest version
+    * is NOT the previously-serving one, so "max version" is not
+    * derivable.
+    */
+  private def publish(spark: SparkSession, db: String, name: String, v: Int,
+                      prev: Option[Int], select: String): Unit = {
+    val props = (Seq(s"'graft.live_version' = '$v'") ++
+      prev.filter(_ != v).map(p => s"'graft.prev_version' = '$p'"))
+      .mkString(", ")
+    swapView(spark, db, name, s"TBLPROPERTIES ($props) AS $select")
+  }
+
+  /** The SELECT a table's view serves over version `v`. `cols` (when
     * known) pins the view's column order to the producing frame's: a
     * partitioned `saveAsTable` physically moves partition columns to
     * the end of the stored schema, and the view projection is what
     * restores the declared order (silver's keys-first contract) on the
     * read surface.
     */
-  private def publish(spark: SparkSession, fqTable: String, v: Int,
-                      prev: Option[Int], cols: Seq[String] = Nil): Unit = {
+  private def selectVersion(db: String, name: String, v: Int,
+                            cols: Seq[String] = Nil): String = {
     val projection =
       if (cols.isEmpty) "*" else cols.map(c => s"`$c`").mkString(", ")
-    // the view records which version is live and which one it
-    // superseded — the same single atomic catalog op carries the
-    // metadata, so rollbacks don't desynchronize it. prev is what GC
-    // must protect and what versionDrift compares against; after a
-    // ROLLBACK the numerically-highest version is NOT the
-    // previously-serving one, so "max version" is not derivable.
-    val props = (Seq(s"'graft.live_version' = '$v'") ++
-      prev.filter(_ != v).map(p => s"'graft.prev_version' = '$p'"))
-      .mkString(", ")
-    val (db, name) = dbAndName(spark, fqTable)
-    swapView(spark, db, name,
-      s"TBLPROPERTIES ($props) AS SELECT $projection FROM ${fqTable}__v$v")
+    s"SELECT $projection FROM $db.${name}__v$v"
+  }
+
+  /** The one versioned commit behind a published name, shared by
+    * [[ctasSwap]] and the standing indexes' manifests
+    * ([[graft.operators.StandingIndex]]). In order: list the version
+    * tables of `db.name`; allocate version N = max + 1; run `write(N)`,
+    * which writes version N's tables and returns the SELECT the view
+    * `db.name` is to serve; repoint the view there ([[publish]], the
+    * commit point); drop every version table except those of N, of the
+    * version that was live before, of every version the new SELECT
+    * names, and of the `pinned` versions. Returns N.
+    *
+    * That is the whole retention rule. The superseded version survives
+    * until the next commit, so a reader that planned against it has a
+    * full commit interval to drain; a standing index pins the versions
+    * its superseded manifest still names, for the same readers.
+    */
+  private[graft] def commitVersion(spark: SparkSession, db: String,
+      name: String, pinned: Set[Int] = Set.empty)(write: Int => String): Int = {
+    val tables = versionedTables(spark, db, name)
+    val live = liveVersion(spark, s"$db.$name")
+    val next = tables.map(_._1).maxOption.getOrElse(-1) + 1
+    val select = write(next)
+    publish(spark, db, name, next, live, select)
+    val keep = pinned ++ live + next ++ namedVersions(name, select)
+    tables.collect { case (v, t) if !keep(v) => t }
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
+    next
   }
 
   /** Creates the view `db.name` as `body` (what follows the view name in
@@ -156,8 +209,8 @@ object Lakehouse {
     * between finds nothing; so an existing view is repointed by one
     * catalog `alterTable` to a side-built `<name>__publish` view.
     */
-  private[graft] def swapView(spark: SparkSession, db: String, name: String,
-                              body: String): Unit = {
+  private def swapView(spark: SparkSession, db: String, name: String,
+                       body: String): Unit = {
     val catalog = spark.sessionState.catalog
     val side = TableIdentifier(s"${name}__publish", Some(db))
     if (!catalog.tableExists(TableIdentifier(name, Some(db))))
@@ -199,7 +252,7 @@ object Lakehouse {
     * (transform/target/run/f1_transform/models/silver/laps.sql:6-20),
     * but with a SINGLE catalog operation as the commit point instead of
     * the reference's rename pair. The repoint is one atomic catalog
-    * `alterTable` (see `publish`), so there is NO window in which the live
+    * `alterTable` (see `swapView`), so there is NO window in which the live
     * name is missing: readers planning before the publish resolve the
     * old version, readers planning after resolve the new one, and a
     * crash at any point leaves the pointer on the last fully-written
@@ -221,23 +274,18 @@ object Lakehouse {
     * partition lands as one file, a large one is split) instead of one
     * file per write task per partition.
     *
-    * Superseded version tables are garbage-collected after the publish,
-    * keeping the `retainVersions` most recent ones. The pointer flip is
-    * atomic only for queries PLANNED after it — a query still executing
-    * against the old version when it is dropped would lose its files
-    * mid-scan, so the default is 1: the N-1 version survives until the
-    * NEXT publish, giving concurrent readers a full swap interval to
-    * drain. Pass 0 only for strictly single-reader builds (tests do,
-    * to assert the GC itself); size it larger to cover readers that
-    * outlive a whole publish cycle.
+    * The publish is [[commitVersion]]: after the flip it drops every
+    * version but the new one and the one it superseded. The flip is
+    * atomic only for queries PLANNED after it, and a query still
+    * executing against a version when it is dropped loses its files
+    * mid-scan; keeping the superseded version until the NEXT publish
+    * gives concurrent readers a full swap interval to drain.
     */
   def ctasSwap(spark: SparkSession, df: DataFrame, fqTable: String,
-               partitionBy: Seq[String] = Nil, retainVersions: Int = 1,
+               partitionBy: Seq[String] = Nil,
                notNull: Seq[String] = Nil): Published = {
     recoverSwap(spark, fqTable)
-    val have = versions(spark, fqTable)
-    val live = liveVersion(spark, fqTable)
-    val next = have.maxOption.getOrElse(-1) + 1
+    val (db, name) = dbAndName(spark, fqTable)
     val observation = Observation()
     val observed = df.observe(observation, count(lit(1)).as("rows"),
       notNull.map(c => Checks.nullCount(col(c)).as(s"null:$c")): _*)
@@ -245,19 +293,10 @@ object Lakehouse {
       if (partitionBy.isEmpty) observed.write
       else observed.hint("rebalance", partitionBy.map(col): _*).write
         .partitionBy(partitionBy: _*)
-    writer.mode("overwrite").saveAsTable(s"${fqTable}__v$next")
-    publish(spark, fqTable, next, live, df.columns.toSeq)    // the commit point
-    // GC superseded + stray versions. The retention window protects the
-    // PREVIOUSLY-LIVE version first (after a rollback it is not the
-    // numerically-highest one, and it is exactly the version concurrent
-    // readers may still be scanning), then the most recent others up to
-    // retainVersions total.
-    val protect = live.toSeq
-    val others = have.filter(v => !protect.contains(v)).sorted
-    val keepOthers = math.max(0, retainVersions - protect.size)
-    (others.dropRight(keepOthers) ++
-        (if (retainVersions == 0) protect else Nil))
-      .foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${fqTable}__v$v"))
+    commitVersion(spark, db, name) { v =>
+      writer.mode("overwrite").saveAsTable(s"$db.${name}__v$v")
+      selectVersion(db, name, v, df.columns.toSeq)
+    }
     new Published(fqTable, notNull, observation)
   }
 
@@ -274,22 +313,23 @@ object Lakehouse {
     * build restores it.)
     */
   def recoverSwap(spark: SparkSession, fqTable: String): Unit =
-    if (!spark.catalog.tableExists(fqTable))
-      versions(spark, fqTable).maxOption
-        .foreach(v => publish(spark, fqTable, v, None))
+    if (!spark.catalog.tableExists(fqTable)) {
+      val (db, name) = dbAndName(spark, fqTable)
+      versionedTables(spark, db, name).map(_._1).maxOption
+        .foreach(v => publish(spark, db, name, v, None, selectVersion(db, name, v)))
+    }
 
   /** Table-managed clustering rewrite — the engine's `OPTIMIZE …
     * ZORDER BY`: rewrite the live version of `fqTable` clustered on
     * `zcols` ([[graft.operators.Layout.zorderFrame]]) and publish it
     * through the SAME transactional view-pointer swap as any rebuild,
     * so readers never observe a half-clustered table and the previous
-    * version survives per `retainVersions`. Content is untouched —
+    * version survives until the next publish. Content is untouched —
     * only file layout changes (min/max pruning on every clustered
     * column); MaintenanceLawsSpec asserts the law.
     */
   def optimize(spark: SparkSession, fqTable: String, zcols: Seq[String],
-               files: Int, bins: Int = 256,
-               retainVersions: Int = 1): Unit = {
+               files: Int, bins: Int = 256): Unit = {
     // self-heal a crashed-swap layout BEFORE reading the live name —
     // zorderFrame touches spark.table(fqTable) eagerly (approxQuantile),
     // ahead of ctasSwap's own recovery call
@@ -297,7 +337,7 @@ object Lakehouse {
     ctasSwap(spark,
       graft.operators.Layout.zorderFrame(spark.table(fqTable), zcols,
         files, bins),
-      fqTable, retainVersions = retainVersions)
+      fqTable)
   }
 
   /** Full rebuild, mirroring the reference's `+materialized: table`

@@ -194,16 +194,13 @@ object EventStream {
     * a crash mid-batch leaves the previous table version intact.
     * Returns the started query; callers own awaitTermination/stop.
     *
-    * `retainVersions` (default 1) keeps that many superseded version
-    * tables behind the view pointer: a continuous writer is exactly the
-    * case where a serving query may still be SCANNING the previous
-    * version when the next micro-batch publishes — retaining one
-    * version gives readers a full swap interval to finish. Raise it if
-    * serving queries can outlive a micro-batch interval.
+    * A continuous writer is exactly the case where a serving query may
+    * still be SCANNING the previous version when the next micro-batch
+    * publishes: the swap keeps the superseded version until the
+    * following one, so a reader has one micro-batch interval to finish.
     */
   def mergeSink(stream: DataFrame, fqTable: String, keys: Seq[String],
-                checkpointDir: String, orderCol: Option[String] = None,
-                retainVersions: Int = 1)
+                checkpointDir: String, orderCol: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -231,8 +228,7 @@ object EventStream {
           if (spark.catalog.tableExists(fqTable))
             graft.operators.Merge.upsert(spark.table(fqTable), deduped, keys)
           else deduped
-        graft.pipeline.Lakehouse.ctasSwap(spark, merged, fqTable,
-          retainVersions = retainVersions)
+        graft.pipeline.Lakehouse.ctasSwap(spark, merged, fqTable)
         ()
       }
       .start()

@@ -78,10 +78,10 @@ class MaintenanceLawsSpec extends SparkSpec {
     spark.sql("CREATE DATABASE IF NOT EXISTS t_opt")
     val src = spark.range(20000).select(
       col("id"), (col("id") % 100).as("a"), ((col("id") * 31) % 100).as("b"))
-    Lakehouse.ctasSwap(spark, src, "t_opt.t", retainVersions = 0)
+    Lakehouse.ctasSwap(spark, src, "t_opt.t")
 
     Lakehouse.optimize(spark, "t_opt.t", Seq("a", "b"), files = 8,
-      bins = 32, retainVersions = 1)
+      bins = 32)
 
     // live name still a view; content identical (order-independent hash)
     assert(spark.catalog.getTable("t_opt.t").tableType === "VIEW")
@@ -91,9 +91,8 @@ class MaintenanceLawsSpec extends SparkSpec {
       .agg(count(lit(1)), sum("id"), sum(col("a") * col("b"))).head()
     assert(after === before)
     // previous version retained for in-flight readers
-    val kept = spark.catalog.listTables("t_opt").collect()
-      .map(_.name).filter(_.matches("t__v\\d+")).toSeq
-    assert(kept.length === 2, s"expected live + 1 retained, got $kept")
+    assert(Lakehouse.listVersions(spark, "t_opt.t") === Seq(0, 1))
+    assert(Lakehouse.liveVersion(spark, "t_opt.t") === Some(1))
     // the rewrite actually clustered: the live version's files each
     // cover a narrow range of `a` (min/max from parquet footers would
     // prune); cheap structural proxy — scanning with a tight predicate
@@ -107,8 +106,8 @@ class MaintenanceLawsSpec extends SparkSpec {
     spark.sql("CREATE DATABASE IF NOT EXISTS t_tt")
     val v0 = spark.range(5).select(col("id"), lit("v0").as("tag"))
     val v1 = spark.range(9).select(col("id"), lit("v1").as("tag"))
-    Lakehouse.ctasSwap(spark, v0, "t_tt.t", retainVersions = 1)
-    Lakehouse.ctasSwap(spark, v1, "t_tt.t", retainVersions = 1)
+    Lakehouse.ctasSwap(spark, v0, "t_tt.t")
+    Lakehouse.ctasSwap(spark, v1, "t_tt.t")
     assert(Lakehouse.listVersions(spark, "t_tt.t") === Seq(0, 1))
     // live = v1; time travel reads the superseded v0 unchanged
     assert(spark.table("t_tt.t").count() === 9)
@@ -129,6 +128,13 @@ class MaintenanceLawsSpec extends SparkSpec {
     val desc = spark.sql("DESCRIBE EXTENDED t_tt.t__v0").collect()
       .map(_.mkString("|")).mkString("\n")
     assert(desc.contains("Statistics"), s"expected table statistics:\n$desc")
+    // the next publish keeps the version it supersedes — v0, live
+    // after the rollback — and drops v1, numerically higher but no
+    // longer serving
+    Lakehouse.ctasSwap(spark, spark.range(3).select(col("id"), lit("v2").as("tag")),
+      "t_tt.t")
+    assert(Lakehouse.listVersions(spark, "t_tt.t") === Seq(0, 2))
+    assert(Lakehouse.prevVersion(spark, "t_tt.t") === Some(0))
   }
 
   test("concurrent reader never fails across repeated publishes (retention window)") {
@@ -141,10 +147,9 @@ class MaintenanceLawsSpec extends SparkSpec {
     val reader = new Thread(() => {
       try {
         while (!stop.get()) {
-          // plan + execute against whatever version is live; with
-          // retainVersions=1 (default) the superseded version's files
-          // survive a full publish interval, so a scan planned just
-          // before a publish still completes
+          // plan + execute against whatever version is live; the
+          // superseded version's files survive until the next publish,
+          // so a scan planned just before a publish still completes
           val n = spark.table("t_conc.t").count()
           assert(n === 1000L, s"reader saw $n rows")
         }
@@ -163,17 +168,14 @@ class MaintenanceLawsSpec extends SparkSpec {
     import graft.pipeline.Lakehouse
     import graft.quality.Checks
     spark.sql("CREATE DATABASE IF NOT EXISTS t_drift")
-    Lakehouse.ctasSwap(spark, spark.range(1000).toDF("id"), "t_drift.t",
-      retainVersions = 1)
+    Lakehouse.ctasSwap(spark, spark.range(1000).toDF("id"), "t_drift.t")
     // single version: nothing to compare
     assert(Checks.versionDrift(spark, "t_drift.t").passed)
     // growth passes
-    Lakehouse.ctasSwap(spark, spark.range(1500).toDF("id"), "t_drift.t",
-      retainVersions = 1)
+    Lakehouse.ctasSwap(spark, spark.range(1500).toDF("id"), "t_drift.t")
     assert(Checks.versionDrift(spark, "t_drift.t").passed)
     // a publish that silently lost 80% of its rows is flagged
-    Lakehouse.ctasSwap(spark, spark.range(300).toDF("id"), "t_drift.t",
-      retainVersions = 1)
+    Lakehouse.ctasSwap(spark, spark.range(300).toDF("id"), "t_drift.t")
     val drift = Checks.versionDrift(spark, "t_drift.t", shrinkTolerance = 0.5)
     assert(!drift.passed)
     assert(drift.failures === 450L) // floor 750 - live 300
@@ -190,8 +192,8 @@ class MaintenanceLawsSpec extends SparkSpec {
         when(col("id") === 3, lit("REWRITTEN"))
           .otherwise(concat(lit("t"), col("id"))).as("body"))
       .union(spark.range(9, 10).select(col("id"), lit("t9").as("body")))
-    Lakehouse.ctasSwap(spark, v0, "t_diff.t", retainVersions = 1)
-    Lakehouse.ctasSwap(spark, v1, "t_diff.t", retainVersions = 1)
+    Lakehouse.ctasSwap(spark, v0, "t_diff.t")
+    Lakehouse.ctasSwap(spark, v1, "t_diff.t")
     val d = Checks.snapshotDiff(
         Lakehouse.readVersion(spark, "t_diff.t", 0),
         spark.table("t_diff.t"), col("id"), col("body"))

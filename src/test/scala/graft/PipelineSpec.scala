@@ -271,9 +271,7 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     spark.sql("CREATE DATABASE IF NOT EXISTS t_swap")
     val v1 = spark.range(5).select(col("id"), lit("v1").as("tag"))
-    // retainVersions = 0 (single-reader opt-in) so the GC assertions
-    // below can pin "exactly one version behind the pointer"
-    Lakehouse.ctasSwap(spark, v1, "t_swap.t", retainVersions = 0)
+    Lakehouse.ctasSwap(spark, v1, "t_swap.t")
     assert(spark.table("t_swap.t").count() === 5)
     // no-window layout: the live name is a VIEW pointer; the publish is
     // ONE catalog op, so there is no state in which the name is missing
@@ -289,15 +287,15 @@ class PipelineSpec extends SparkSpec {
     assert(after.select("tag").distinct().collect().map(_.getString(0)).toSeq === Seq("v1"))
 
     // a successful rebuild swaps cleanly and drops the scaffolding:
-    // exactly one version table remains behind the pointer
+    // exactly the live version and the one it superseded remain
     val v2 = spark.range(7).select(col("id"), lit("v2").as("tag"))
-    Lakehouse.ctasSwap(spark, v2, "t_swap.t", retainVersions = 0)
+    Lakehouse.ctasSwap(spark, v2, "t_swap.t")
     assert(spark.table("t_swap.t").count() === 7)
     assert(!spark.catalog.tableExists("t_swap.t__tmp"))
     assert(!spark.catalog.tableExists("t_swap.t__backup"))
-    val versionTables = spark.catalog.listTables("t_swap").collect()
-      .map(_.name).filter(_.matches("t__v\\d+")).toSeq
-    assert(versionTables.length === 1)
+    // (the failed write registered no table, so v2 is version 1)
+    assert(Lakehouse.liveVersion(spark, "t_swap.t") === Some(1))
+    assert(Lakehouse.listVersions(spark, "t_swap.t") === Seq(0, 1))
 
     // recovery: a lost pointer (crash before the first publish, or a
     // dropped view) republishes the newest surviving version — one
@@ -310,11 +308,9 @@ class PipelineSpec extends SparkSpec {
     // retention window: long-running readers of the previous version
     // keep their files while the pointer serves the new one
     val v3 = spark.range(9).select(col("id"), lit("v3").as("tag"))
-    Lakehouse.ctasSwap(spark, v3, "t_swap.t", retainVersions = 1)
+    Lakehouse.ctasSwap(spark, v3, "t_swap.t")
     assert(spark.table("t_swap.t").count() === 9)
-    val kept = spark.catalog.listTables("t_swap").collect()
-      .map(_.name).filter(_.matches("t__v\\d+")).toSeq
-    assert(kept.length === 2, s"expected live + 1 retained, got $kept")
+    assert(Lakehouse.listVersions(spark, "t_swap.t") === Seq(1, 2))
   }
 
   test("ctasSwap: a steady-state publish runs a pinned number of SQL executions") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import graft.operators.{Dedup, StandingIndex, TextAnalysis}
+import graft.pipeline.Lakehouse
 import graft.tables.Tables
 
 /** Laws for the standing probe indexes: probe ≡ the ad-hoc incremental
@@ -142,6 +143,23 @@ class StandingIndexSpec extends SparkSpec {
       col("doc_id"), db = db, name = "m_life")) ===
       rows(TextAnalysis.chunkDedupIncremental(corpus, batch, col("text"),
         col("doc_id"))))
+  }
+
+  test("a steady-state index commit runs a pinned number of SQL executions") {
+    def build(): Int = StandingIndex.buildChunkIndex(spark, corpus, col("text"),
+      col("doc_id"), nBuckets = 2, db = db, name = "m_budget")
+    build(); build()
+    val started = sqlExecutionsStartedBy(build())
+    // tables and indexes share one versioned commit, so the table-level
+    // reads see an index's versions and its manifest's live pointer
+    assert(Lakehouse.listVersions(spark, s"$db.m_budget") === Seq(1, 2))
+    assert(Lakehouse.liveVersion(spark, s"$db.m_budget") === Some(2))
+    // CREATE DATABASE, the superseded manifest's read (its references
+    // are pinned), two member writes (3 each: save, CTAS, the write's
+    // plan), the manifest publish and one GC drop per v0 member. The
+    // new manifest's references come from the meta it wrote, not from
+    // re-reading the view: that read was a 12th execution.
+    assert(started.size === 11, started.mkString("\n"))
   }
 
   test("a manifest reader never misses the view across repeated refreshes") {
