@@ -235,7 +235,6 @@ object Fns {
     */
   def spreadIfNarrow(df: DataFrame, key: Column,
                      minBytes: Long): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Probe the partition count only for scan-shaped inputs: on a frame
     // with shuffle stages, `.rdd` under AQE materializes every upstream
@@ -244,16 +243,7 @@ object Fns {
     // so the spread is unnecessary there anyway. (Same discipline as
     // Dedup.tokenizedDocs, which predates this helper.)
     if (df.isStreaming) return df // no .rdd / batch repartition on streams
-    val scanShaped = df.queryExecution.analyzed.collectFirst {
-      case _: logical.Aggregate                  => ()
-      case _: logical.Join                       => ()
-      case _: logical.Window                     => ()
-      case _: logical.Distinct                   => ()
-      case _: logical.Deduplicate                => ()
-      case _: logical.DeduplicateWithinWatermark => ()
-      case _: logical.RepartitionOperation       => ()
-      case _: logical.Sort                       => ()
-    }.isEmpty
+    val scanShaped = isScanShaped(df)
     // Tiny-input gate (round-13 part 3): the spread is one extra stage
     // whose scheduling barrier costs ~0.3–0.5 s at local[32] REGARDLESS
     // of data size, so on a sub-megabyte scan it BUYS less single-core
@@ -285,10 +275,17 @@ object Fns {
     * StageProbe: a 0.31 s one-task fill stage on a 0.6 MB corpus that
     * r13's race overlapped to near zero).
     */
-  def tinyScan(df: DataFrame): Boolean = {
+  def tinyScan(df: DataFrame): Boolean =
+    !df.isStreaming && isScanShaped(df) &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes < SpreadMinBytes
+
+  /** True when `df`'s analyzed plan has no operator that shuffles or
+    * sorts: no aggregate, join, window, distinct, dedup, repartition or
+    * sort. Only such a frame still has its scan's partitioning.
+    */
+  private def isScanShaped(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical
-    if (df.isStreaming) return false
-    val scanShaped = df.queryExecution.analyzed.collectFirst {
+    df.queryExecution.analyzed.collectFirst {
       case _: logical.Aggregate                  => ()
       case _: logical.Join                       => ()
       case _: logical.Window                     => ()
@@ -298,8 +295,6 @@ object Fns {
       case _: logical.RepartitionOperation       => ()
       case _: logical.Sort                       => ()
     }.isEmpty
-    scanShaped &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes < SpreadMinBytes
   }
 
   /** Break-even input size for [[spreadIfNarrow]]: below this the one

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogDatabase
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.pipeline.Lakehouse
@@ -23,60 +25,68 @@ import graft.pipeline.Lakehouse
   *     and inline derivations are structurally identical;
   *   - **chunk index** ([[buildChunkIndex]]/[[probeChunks]]): the
   *     distinct chunk-digest table (fp) bucketed on fp —
-  *     `TextAnalysis.corpusChunkFps` — plus (round 17) the
-  *     (fp, doc_id) reference sidecar that makes the shared-digest
-  *     family delete-capable ([[deleteFromChunkIndex]]); probes never
-  *     read the sidecar;
+  *     `TextAnalysis.corpusChunkFps` — plus the (fp, doc_id)
+  *     reference sidecar that makes the shared-digest family
+  *     delete-capable ([[deleteFromChunkIndex]]); probes never read
+  *     the sidecar;
   *   - **near-dup index** ([[buildNearDupIndex]]/[[probeNearDups]]):
   *     the MinHash-LSH band table (doc_id, band, bucket) bucketed on
   *     bucket and the shingle-set table (doc_id, sh) bucketed on
-  *     doc_id — `Dedup.minhashBase`/`minhashBanded`, the
-  *     materialization `Dedup.MinHashIndex` documents as "the
-  *     caller's lifecycle".
+  *     doc_id — `Dedup.minhashBase`/`minhashBanded`;
+  *   - **ANN index** ([[buildAnnIndex]]/[[probeAnn]]): the IVFADC codes
+  *     bucketed on cell, plus the frozen coarse and PQ quantizer tables.
   *
   * Zero-corpus-exchange probes: every corpus-side table is bucketed
   * on exactly the key its probe join needs, so the scan's
   * HashPartitioning satisfies the join's required distribution and
   * EnsureRequirements shuffles ONLY the (small) batch side —
   * StandingIndexSpec asserts no ShuffleExchange feeds off an index
-  * scan pre-join. The anchor/toks tables are additionally
-  * repartitioned to one file per bucket before the write (the
-  * `Skew.bucketed` rule) and sorted on the join keys, so sort-merge
+  * scan pre-join. Bucketed members are repartitioned to one file per
+  * bucket before the write and sorted on the join keys, so sort-merge
   * probes read the buckets as-is.
   *
   * Versioned exactly-once commit: an index publishes through the same
   * versioned commit as a table (`Lakehouse.commitVersion`). All member
-  * tables of a build are written under `<name>__v<N>__<member>` names
+  * tables of a commit are written under `<name>__v<N>__<member>` names
   * first; the COMMIT POINT is one atomic repoint of the manifest view
-  * `<db>.<name>` — a constant one-row view carrying the live version
-  * number and the build parameters. A crash anywhere before the flip
-  * leaves the manifest on the last complete version with every one of
-  * its member tables intact (the next commit skips and drops the
-  * orphaned `__v<N>` members); probes resolve the version through the
-  * manifest and can never observe a half-built index. After the flip
-  * the commit keeps the new version, the one it superseded (concurrent
-  * probes planned against it drain) and every version either manifest
-  * names; it drops the rest.
+  * `<db>.<name>` — a constant one-row view carrying the live version,
+  * the kind, the build parameters and the FQ names of the tables the
+  * version serves. A crash before the flip leaves the manifest on the
+  * last complete version; probes resolve every table through the
+  * manifest and never observe a half-built index. The commit keeps the
+  * new version, the one it superseded and every version either
+  * manifest names; it drops the rest.
   *
-  * Refresh semantics: a rebuild is a full re-derivation from the
-  * corpus frame passed in; probes between publishes see the old
-  * version (stale by exactly the not-yet-published delta), probes
-  * after the flip see the new one. Incremental APPEND publishes
-  * (round 13) derive only the delta; since round 14 the chunk,
-  * near-dup and ANN appends are LEVELED — the delta's derived frames
-  * publish as new immutable level tables, the live levels carry over
-  * by manifest reference (`levels*` meta fields, FQ table names), and
-  * probes run per level (chained anti-joins / unioned pair results /
-  * unioned cell-pruned scans — each level keeps its own bucket
-  * layout, so the zero-corpus-exchange probe contract survives where
-  * a UNION of bucketed scans would not), with an LSM-style compaction
-  * once `maxLevels` is reached. Publish cost is therefore ∝ delta,
-  * not ∝ index. The MATCH index append alone still rewrites its
-  * members: the hot-anchor cap and sub assignments are functions of
-  * GLOBAL occurrence counts across base ∪ delta, so existing anchor
-  * rows can change on append and the bit-identical-to-rebuild
-  * contract (q201) rules leveling out — documented trade: that index
-  * pays an index-sized (but text-derivation-free) publish.
+  * One leveled lifecycle: the chunk, near-dup and ANN indexes are
+  * LSM-style. Each member is a list of immutable LEVEL tables (manifest
+  * fields `levels*`, oldest first) and every commit after the build is
+  * one of three motions, each written once for all three kinds:
+  *
+  *   - **append**: the delta must hold only ids that are not live; its
+  *     derived frames publish as one new level per member while the
+  *     live levels carry over by reference — publish cost ∝ delta.
+  *     Once `maxLevels` levels are live, the append folds instead;
+  *   - **fold** ([[compactIndex]], or an append past `maxLevels`): the
+  *     live rows of every level (plus the delta's) rewrite as one level
+  *     and the tombstone lists clear — cost ∝ index, paid once per
+  *     `maxLevels` publishes;
+  *   - **delete**: the ids must be live; they land in a
+  *     generation-stamped tombstone table (`tomb_tab`) that kills their
+  *     rows in the levels published so far, so a later re-append of the
+  *     same id (an UPDATE) survives — cost ∝ tombstones.
+  *
+  * A commit's manifest is the live manifest with only the fields it
+  * changes replaced or removed. The kind-specific parts are how a delta
+  * derives its member frames, the chunk index's derived digest member
+  * and dead-digest list (`fp_tomb_tab`), and the ANN index's frozen
+  * quantizer tables, which every commit carries by reference. Probes
+  * run per level (chained anti-joins / unioned pair results / unioned
+  * cell-pruned scans), so each level keeps its own bucket layout.
+  *
+  * The MATCH index is not leveled: its hot-anchor cap and sub
+  * assignments are functions of GLOBAL occurrence counts across base ∪
+  * delta, so an append rewrites its members (bit-identical to a rebuild,
+  * q201's contract) and it has no retire-by-id.
   */
 object StandingIndex {
 
@@ -95,18 +105,56 @@ object StandingIndex {
   val NearDupMaxLevels: Int = 4
 
   /** One persisted member table of an index build. `bucketKeys` empty
-    * = plain small table (the hot list).
+    * = plain small table (the hot list, a tombstone list).
     */
   private final case class Member(suffix: String, df: DataFrame,
                                   bucketKeys: Seq[String] = Nil,
                                   nBuckets: Int = 0,
                                   sortKeys: Seq[String] = Nil)
 
+  /** One leveled member of an index kind. A build or a fold writes it
+    * as the table `<suffix>`, an append adds the level `<suffix>_l<i>`,
+    * and the manifest field `field` lists the live level tables. A
+    * `derive`d member has no id column: a fold recomputes it from the
+    * folded id member.
+    */
+  private final case class Level(field: String, suffix: String,
+      bucketKeys: Seq[String], sortKeys: Seq[String] = Nil,
+      derive: Option[DataFrame => DataFrame] = None) {
+    def member(suffix: String, df: DataFrame, nBuckets: Int): Member =
+      Member(suffix, df, bucketKeys, nBuckets, sortKeys)
+  }
+
+  /** A leveled index kind: its members, the id column `key` that
+    * appends gate on, deletes tombstone and folds drop, and the
+    * tombstone fields a fold clears. The last member is the id member:
+    * its rows carry every published id.
+    */
+  private final case class Leveled(kind: String, key: String,
+      levels: Seq[Level], tombs: Seq[String] = Seq("tomb_tab")) {
+    def ids: Level = levels.last
+  }
+
+  private val Chunk = Leveled("chunk", "doc_id", Seq(
+    Level("levels", "fps", Seq("fp"),
+      derive = Some((fpdocs: DataFrame) => fpdocs.select("fp").distinct())),
+    // the (fp, doc_id) sidecar, bucketed on fp so delete-time liveness
+    // checks broadcast into its buckets
+    Level("levels_fpdocs", "fpdocs", Seq("fp"))),
+    tombs = Seq("tomb_tab", "fp_tomb_tab"))
+
+  private val NearDup = Leveled("neardup", "doc_id", Seq(
+    Level("levels_banded", "banded", Seq("bucket")),
+    Level("levels_base", "base", Seq("doc_id"))))
+
+  private val Ann = Leveled("ann", "vec_id", Seq(
+    Level("levels_codes", "codes", Seq("cell"), Seq("cell", "vec_id"))))
+
   private def fq(db: String, name: String, v: Int, suffix: String) =
     s"$db.${name}__v${v}__$suffix"
 
-  /** The live manifest row (version + build parameters), or None if
-    * the index has never been committed.
+  /** The live manifest row (version, kind, build parameters, table
+    * names), or None if the index has never been committed.
     */
   def manifest(spark: SparkSession, db: String,
                name: String): Option[Row] =
@@ -114,11 +162,13 @@ object StandingIndex {
         !spark.catalog.tableExists(s"$db.$name")) None
     else Some(spark.table(s"$db.$name").collect().head)
 
+  private def liveManifest(spark: SparkSession, db: String, name: String): Row =
+    manifest(spark, db, name).getOrElse(throw new IllegalArgumentException(
+      s"no standing index at $db.$name — run the matching build first"))
+
   private def manifestOrThrow(spark: SparkSession, db: String, name: String,
                               expectKind: String): Row = {
-    val m = manifest(spark, db, name).getOrElse(throw new
-      IllegalArgumentException(s"no standing index at $db.$name — run " +
-        s"the matching build$expectKind first"))
+    val m = liveManifest(spark, db, name)
     val kind = m.getAs[String]("kind")
     require(kind == expectKind,
       s"$db.$name is a $kind index, not a $expectKind index")
@@ -130,25 +180,10 @@ object StandingIndex {
                      m: Row, suffix: String): DataFrame =
     spark.table(fq(db, name, m.getAs[Int]("version"), suffix))
 
-  /** Versions whose member tables a manifest row still REFERENCES by
-    * fully-qualified name in any of its string fields — the leveled
-    * appends (chunk/neardup/ann) carry older versions' level tables
-    * forward instead of rewriting them, and the GC must treat those
-    * as live. Every string meta field is searched for the tables it
-    * names (`Lakehouse.namedVersions`), which keeps the contract
-    * generic: any future cross-version reference is GC-safe by
-    * construction.
-    */
-  private def referencedVersions(name: String, m: Row): Set[Int] =
-    (0 until m.length).flatMap(i => m.get(i) match {
-      case s: String => Lakehouse.namedVersions(name, s)
-      case _ => Nil
-    }).toSet
-
   /** The comma-joined FQ tables of manifest field `field` (a level
-    * list, or one quantizer table). Every build, append, delete and
-    * compaction writes its kind's fields, so a missing one is a broken
-    * manifest and fails naming the field.
+    * list, or one quantizer table). Every commit of a leveled kind
+    * names its kind's fields, so a missing one is a broken manifest and
+    * fails naming the field.
     */
   private def levelTables(m: Row, field: String): Seq[String] =
     metaString(m, field)
@@ -158,21 +193,18 @@ object StandingIndex {
         s"${m.getAs[String]("kind")} index manifest v${m.getAs[Int]("version")} " +
           s"has no `$field` tables"))
 
-  /** Write every member at version N and flip the manifest view to a
-    * one-row SELECT of `metaSql(N)`: THE commit, the same one tables
-    * publish through ([[Lakehouse.commitVersion]]). It keeps N, the
-    * superseded version and every version the new manifest names; the
-    * pins add every version the superseded manifest names, which a
-    * probe planned against it may still read. `metaSql` sees the
-    * version number so level lists can name the tables being committed.
+  /** Write every member at version N and flip the manifest view to the
+    * one-row SELECT of `version` and `meta(N)`: THE commit, the same one
+    * tables publish through ([[Lakehouse.commitVersion]]). `meta` sees
+    * the version number so it can name the tables being committed.
     */
   private def commitVersioned(spark: SparkSession, db: String, name: String,
-                              kind: String, members: Seq[Member],
-                              metaSql: Int => Seq[String]): Int = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    val pinned = manifest(spark, db, name)
-      .fold(Set.empty[Int])(referencedVersions(name, _))
-    Lakehouse.commitVersion(spark, db, name, pinned) { next =>
+      members: Seq[Member])(meta: Int => Seq[(String, Any)]): Int = {
+    val catalog = spark.sessionState.catalog
+    if (!catalog.databaseExists(db))
+      catalog.createDatabase(CatalogDatabase(db, "",
+        catalog.getDefaultDBPath(db), Map.empty), ignoreIfExists = true)
+    Lakehouse.commitVersion(spark, db, name) { next =>
       members.foreach { mm =>
         val frame =
           if (mm.bucketKeys.isEmpty) mm.df
@@ -190,9 +222,142 @@ object StandingIndex {
           }
         w.saveAsTable(fq(db, name, next, mm.suffix))
       }
-      (Seq(s"$next AS version", s"'$kind' AS kind") ++ metaSql(next))
+      (("version" -> next) +: meta(next))
+        .map { case (f, x) => s"${Literal(x).sql} AS $f" }
         .mkString("SELECT ", ", ", "")
     }
+  }
+
+  /** Commit `members` on top of the live manifest `m`: the new manifest
+    * is `m` with the fields `set(N)` names replaced (None removes one).
+    * Every other field — kind, build parameters, carried tables —
+    * carries over as it is, read off the row's schema.
+    */
+  private def commitOn(spark: SparkSession, db: String, name: String, m: Row,
+      members: Seq[Member])(set: Int => Seq[(String, Option[String])]): Int =
+    commitVersioned(spark, db, name, members) { v =>
+      val changed = set(v)
+      m.schema.fieldNames.toSeq
+        .filterNot(f => f == "version" || changed.exists(_._1 == f))
+        .map(f => f -> m.getAs[Any](f)).filter(_._2 != null) ++
+        changed.collect { case (f, Some(x)) => f -> x }
+    }
+
+  /** The members of a one-level layout: `frames` (one per member of
+    * `k`) under their base suffixes — what a build and a fold write.
+    */
+  private def oneLevel(k: Leveled, frames: Seq[DataFrame],
+                       nBuckets: Int): Seq[Member] =
+    k.levels.zip(frames).map { case (l, df) => l.member(l.suffix, df, nBuckets) }
+
+  private def oneLevelFields(db: String, name: String, k: Leveled,
+                             v: Int): Seq[(String, String)] =
+    k.levels.map(l => l.field -> fq(db, name, v, l.suffix))
+
+  // ---------------------------------------------- the leveled lifecycle
+
+  /** The rows of `field`'s levels that no tombstone shadows, each
+    * stamped with its LEVEL ORDINAL (position in the level list =
+    * append order) as `__lvl`, the generation axis tombstones run on.
+    * The one live-set computation: appends gate on it, deletes check
+    * and attribute against it, folds write it.
+    */
+  private def liveRows(spark: SparkSession, m: Row, field: String,
+                       key: String): DataFrame = {
+    val all = levelTables(m, field).zipWithIndex.map { case (t, i) =>
+      spark.table(t).withColumn("__lvl", lit(i))
+    }.reduce(_.unionByName(_))
+    tombTable(m).fold(all)(t => dropShadowed(all, spark.table(t), key))
+  }
+
+  /** Append: gate `deltaIds` against the live ids, then publish `delta`
+    * (frames by member suffix) as one new level per member, carrying the
+    * live levels by reference — or, once `maxLevels` levels are live,
+    * [[fold]] it in. `tombUpdates` are the tombstone tables the new
+    * level changes (a None table removes the field); the others carry
+    * over, their generation stamps already exempting the new level.
+    * `delta` and `tombUpdates` are evaluated after the gate.
+    */
+  private def appendLeveled(spark: SparkSession, db: String, name: String,
+      k: Leveled, m: Row, maxLevels: Int, deltaIds: DataFrame,
+      delta: => Map[String, DataFrame],
+      tombUpdates: => Seq[(String, Option[Member])] = Nil): Int = {
+    require(maxLevels >= 1, s"maxLevels ($maxLevels) must be >= 1")
+    requireNewIds(liveRows(spark, m, k.ids.field, k.key).select(k.key),
+      deltaIds, k.key, s"$db.$name")
+    val frames = delta
+    val n = levelTables(m, k.ids.field).size
+    if (n >= maxLevels) fold(spark, db, name, k, m, frames)
+    else {
+      val t = tombUpdates
+      def lvl(l: Level) = s"${l.suffix}_l$n"
+      commitOn(spark, db, name, m,
+        k.levels.map(l => l.member(lvl(l), frames(l.suffix),
+          m.getAs[Int]("n_buckets"))) ++ t.flatMap(_._2)) { v =>
+        k.levels.map(l => l.field ->
+          Some((levelTables(m, l.field) :+ fq(db, name, v, lvl(l))).mkString(","))) ++
+          t.map { case (f, mm) => f -> mm.map(x => fq(db, name, v, x.suffix)) }
+      }
+    }
+  }
+
+  /** The compaction fold: every member's live rows, plus `delta`'s for
+    * an append past `maxLevels`, rewrite as one level; derived members
+    * recompute from the folded id member, and the tombstone fields
+    * clear (the rewrite holds no shadowed row).
+    */
+  private def fold(spark: SparkSession, db: String, name: String, k: Leveled,
+                   m: Row, delta: Map[String, DataFrame] = Map.empty): Int = {
+    val kept = k.levels.filter(_.derive.isEmpty).map { l =>
+      val live = liveRows(spark, m, l.field, k.key).drop("__lvl")
+      l.suffix -> delta.get(l.suffix).fold(live)(live.unionByName(_))
+    }.toMap
+    val frames = k.levels.map(l =>
+      l.derive.fold(kept(l.suffix))(_(kept(k.ids.suffix))))
+    commitOn(spark, db, name, m,
+        oneLevel(k, frames, m.getAs[Int]("n_buckets"))) { v =>
+      oneLevelFields(db, name, k, v).map { case (f, t) => f -> Some(t) } ++
+        k.tombs.map(_ -> None)
+    }
+  }
+
+  /** Tombstone delete: every id must be live; the ids merge into the
+    * generation-stamped tombstone list and the levels carry over by
+    * reference. `extra` adds kind-specific tables written with it, by
+    * manifest field, from the live id-member rows and the delete set.
+    */
+  private def deleteLeveled(spark: SparkSession, db: String, name: String,
+      k: Leveled, ids: DataFrame,
+      extra: (Row, DataFrame, DataFrame) => Seq[(String, Member)] =
+        (_, _, _) => Nil): Int = {
+    val m = manifestOrThrow(spark, db, name, k.kind)
+    val del = ids.select(col(k.key).cast(LongType).as(k.key)).distinct()
+    val live = liveRows(spark, m, k.ids.field, k.key)
+    requireLiveIds(del, live.select(k.key), k.key, s"$db.$name")
+    val written = ("tomb_tab" -> Member("tomb", mergedTomb(spark, m, del,
+      k.key, levelTables(m, k.ids.field).size))) +: extra(m, live, del)
+    commitOn(spark, db, name, m, written.map(_._2)) { v =>
+      written.map { case (f, mm) => f -> Some(fq(db, name, v, mm.suffix)) }
+    }
+  }
+
+  /** Explicit compaction of a live leveled index (chunk, near-dup or
+    * ANN; the kind comes from the manifest): all levels rewrite as one,
+    * minus every tombstoned row, and the tombstone lists clear. The
+    * maintenance motion a pure-delete workload needs — without it,
+    * tombstones fold only when an append crosses `maxLevels`, so a
+    * corpus that shrinks (GDPR erasure, licence withdrawal) would pay
+    * the probe-side anti-join and the retired rows' scan forever, and
+    * an index that stopped growing would keep its per-level probe tax.
+    * Idempotent: compacting a one-level tombstone-free index recommits
+    * an identical layout.
+    */
+  def compactIndex(spark: SparkSession, db: String, name: String): Int = {
+    val m = liveManifest(spark, db, name)
+    val kind = m.getAs[String]("kind")
+    val k = Seq(Chunk, NearDup, Ann).find(_.kind == kind).getOrElse(throw new
+      IllegalArgumentException(s"$db.$name is a $kind index, which is not leveled"))
+    fold(spark, db, name, k, m)
   }
 
   // ------------------------------------------------- maximal matches
@@ -208,7 +373,7 @@ object StandingIndex {
                       name: String = "match_idx"): Int = {
     val (anchors, hot, toks) = Dedup.matchIndexFrames(corpus, content, id,
       minLen, maxAnchorOccurrences)
-    commitVersioned(spark, db, name, "match", Seq(
+    commitVersioned(spark, db, name, Seq(
       // bucketed on BOTH probe-join keys: bucket keys must equal the
       // join keys for EnsureRequirements to accept the bucket layout
       // as the join's partitioning (a gh-only bucketing is merely a
@@ -216,10 +381,11 @@ object StandingIndex {
       // spreads a capped hot gh's rows across buckets
       Member("anchors", anchors, Seq("gh", "sub"), nBuckets),
       Member("toks", toks, Seq("corpus_id"), nBuckets),
-      Member("hot", hot)),
-      _ => Seq(s"$minLen AS min_len",
-        s"$maxAnchorOccurrences AS max_anchor_occurrences",
-        s"$nBuckets AS n_buckets"))
+      Member("hot", hot))) { _ =>
+      Seq("kind" -> "match", "min_len" -> minLen,
+        "max_anchor_occurrences" -> maxAnchorOccurrences,
+        "n_buckets" -> nBuckets)
+    }
   }
 
   /** Loud append-contract gate: the delta of an incremental publish
@@ -245,11 +411,10 @@ object StandingIndex {
 
   // --------------------------------------------- incremental publish
 
-  /** Incremental publish of the live match index (round 13, the
-    * VERDICT-r12 #4 item): version N+1 is built from the CURRENT
-    * member tables ∪ the delta batch's derived frames — the indexed
-    * corpus is never re-read, re-tokenized, or re-shingled. Only the
-    * delta pays text-side derivation; the union then pays the
+  /** Incremental publish of the live match index: version N+1 is built
+    * from the CURRENT member tables ∪ the delta batch's derived frames —
+    * the indexed corpus is never re-read, re-tokenized, or re-shingled.
+    * Only the delta pays text-side derivation; the union then pays the
     * occurrence recount (over derived anchor rows, not text) and the
     * bucket rewrite the one-file-per-bucket sort contract requires.
     * The hot list and every sub assignment are pure functions of the
@@ -266,7 +431,6 @@ object StandingIndex {
                        name: String = "match_idx"): Int = {
     val m = manifestOrThrow(spark, db, name, "match")
     val minLen = m.getAs[Int]("min_len")
-    val cap = m.getAs[Int]("max_anchor_occurrences")
     val nBuckets = m.getAs[Int]("n_buckets")
     val oldAnchors = member(spark, db, name, m, "anchors")
     val oldToks = member(spark, db, name, m, "toks")
@@ -277,268 +441,111 @@ object StandingIndex {
       .unionByName(Dedup.anchorGrams(toksD, minLen)
         .select(col("gh"), col("doc_id").as("corpus_id"),
           col("pos").as("pos_c")))
-    val (anchors, hot) = Dedup.matchIndexFromOccurrences(aU, cap)
-    commitVersioned(spark, db, name, "match", Seq(
+    val (anchors, hot) = Dedup.matchIndexFromOccurrences(aU,
+      m.getAs[Int]("max_anchor_occurrences"))
+    commitOn(spark, db, name, m, Seq(
       Member("anchors", anchors, Seq("gh", "sub"), nBuckets),
       Member("toks", oldToks.unionByName(toksD.select(
         col("doc_id").as("corpus_id"), col("toks").as("tc"))),
         Seq("corpus_id"), nBuckets),
-      Member("hot", hot)),
-      _ => Seq(s"$minLen AS min_len", s"$cap AS max_anchor_occurrences",
-        s"$nBuckets AS n_buckets"))
+      Member("hot", hot)))(_ => Nil)
   }
 
-  /** Incremental publish of the live chunk index — LEVELED (round 14,
-    * the verdict-r13 append-economics item): the former append
-    * unioned the delta into the full digest member and REWROTE every
-    * bucket, so publish cost grew with INDEX size, not delta size —
-    * at 100 TB that re-pays a corpus-scale write per day. Now the
-    * delta's digests (anti-joined against every live level, so the
-    * level set stays globally distinct — each anti-join streams the
-    * bucketed level and shuffles only the delta) are written as ONE
-    * NEW LEVEL table; the live levels carry over by reference in the
-    * manifest's `levels` list, untouched on disk. Probes chain one
-    * anti-join per level ([[probeChunks]]) — still zero corpus-side
-    * exchange, the batch side pays |levels| joins instead of 1.
-    * When the list would exceed `maxLevels`, the publish COMPACTS:
-    * all levels ∪ delta rewrite as a single level (cost ∝ index, paid
-    * once per maxLevels publishes — the standard LSM amortization).
-    * Same atomic manifest flip; the GC keeps every version a live or
-    * draining manifest references.
+  /** Incremental publish of the live chunk index — LEVELED: the delta's
+    * digests, anti-joined against every live level so the level set
+    * stays globally distinct (each anti-join streams the bucketed level
+    * and shuffles only the delta), publish as ONE NEW LEVEL with the
+    * delta's sidecar rows; the live levels carry over by reference.
+    * Probes chain one anti-join per level ([[probeChunks]]) — still zero
+    * corpus-side exchange, the batch side pays |levels| joins instead
+    * of 1. Past `maxLevels` the append folds (see the header).
     */
   def appendChunkIndex(spark: SparkSession, delta: DataFrame,
                        content: Column, id: Column,
                        db: String = "graft_idx",
                        name: String = "chunk_idx",
                        maxLevels: Int = 8): Int = {
-    require(maxLevels >= 1, s"maxLevels ($maxLevels) must be >= 1")
     val m = manifestOrThrow(spark, db, name, "chunk")
-    val ct = m.getAs[Int]("chunk_tokens")
-    val nBuckets = m.getAs[Int]("n_buckets")
-    val old = levelTables(m, "levels")
-    val oldFpdocs = levelTables(m, "levels_fpdocs")
-    // append-only gate over the LIVE id set (the match/neardup/ANN
-    // discipline, enabled for chunks by the round-17 sidecar): a
-    // fully-shadowed (tombstoned) id is re-insertable — delete →
-    // append is the first-class UPDATE.
-    requireNewIds(liveChunkSidecar(spark, m, oldFpdocs).select("doc_id"),
-      delta.select(id.as("doc_id")).distinct(), "doc_id", s"$db.$name")
-    val deltaFpdocs = TextAnalysis.corpusChunkFpDocs(delta, content, id, ct)
-    val deltaFpsAll = deltaFpdocs.select("fp").distinct()
-    val deltaFps = old.foldLeft(deltaFpsAll)(
-      (acc, t) => acc.join(spark.table(t), Seq("fp"), "left_anti"))
-    val metaBase = Seq(s"$ct AS chunk_tokens", s"$nBuckets AS n_buckets")
-    if (old.size >= maxLevels) {
-      // compaction FOLDS: live sidecar rows (generation-shadowed docs
-      // dropped) ∪ the delta's; the fps member is their distinct fp
-      // set — which also folds the dead-fp list out (a dead fp has no
-      // live referencing row by the fp-tomb invariant). Tombs clear.
-      val foldedFpdocs = liveChunkSidecar(spark, m, oldFpdocs)
-        .drop("__lvl").unionByName(deltaFpdocs)
-      commitVersioned(spark, db, name, "chunk", Seq(
-        Member("fps", foldedFpdocs.select("fp").distinct(),
-          Seq("fp"), nBuckets),
-        Member("fpdocs", foldedFpdocs, Seq("fp"), nBuckets)),
-        v => metaBase ++ Seq(
-          s"'${fq(db, name, v, "fps")}' AS levels",
-          s"'${fq(db, name, v, "fpdocs")}' AS levels_fpdocs"))
-    } else {
-      val lvlF = s"fps_l${old.size}"
-      val lvlD = s"fpdocs_l${old.size}"
-      // fp-tomb REVIVAL: a delta that re-references a dead digest
-      // makes it live again — it must leave the dead list (its
-      // physical copy in an older level resumes serving probes; the
-      // level anti-join above keeps the new level globally distinct
-      // either way). The doc tombstones carry over untouched: their
-      // generation stamps already exempt the new level.
-      val fpTomb = metaString(m, "fp_tomb_tab").flatMap { t =>
-        val kept = spark.table(t)
-          .join(deltaFpsAll, Seq("fp"), "left_anti")
-        if (kept.limit(1).count() == 0) None else Some(kept)
-      }
-      commitVersioned(spark, db, name, "chunk",
-        Seq(
-          Member(lvlF, deltaFps, Seq("fp"), nBuckets),
-          Member(lvlD, deltaFpdocs, Seq("fp"), nBuckets)) ++
-          fpTomb.map(Member("fptomb", _)),
-        v => metaBase ++
-          metaString(m, "tomb_tab").map(t => s"'$t' AS tomb_tab") ++
-          fpTomb.map(_ => s"'${fq(db, name, v, "fptomb")}' AS fp_tomb_tab") ++
-          Seq(
-            s"'${(old :+ fq(db, name, v, lvlF)).mkString(",")}' AS levels",
-            s"'${(oldFpdocs :+ fq(db, name, v, lvlD)).mkString(",")}' AS levels_fpdocs"))
-    }
-  }
-
-  /** Live (unshadowed) sidecar rows of a chunk index: (fp, doc_id,
-    * __lvl) minus the generations the doc tombstones kill.
-    */
-  private def liveChunkSidecar(spark: SparkSession, m: Row,
-                               sidecarLevels: Seq[String]): DataFrame = {
-    val all = unionWithOrdinal(spark, sidecarLevels)
-      .select("fp", "doc_id", "__lvl")
-    tombTable(m).fold(all)(t => dropShadowed(all, spark.table(t), "doc_id"))
+    lazy val fpdocs = TextAnalysis.corpusChunkFpDocs(delta, content, id,
+      m.getAs[Int]("chunk_tokens"))
+    lazy val fps = fpdocs.select("fp").distinct()
+    appendLeveled(spark, db, name, Chunk, m, maxLevels,
+      delta.select(id.as("doc_id")).distinct(),
+      Map("fps" -> levelTables(m, "levels").foldLeft(fps)(
+          (acc, t) => acc.join(spark.table(t), Seq("fp"), "left_anti")),
+        "fpdocs" -> fpdocs),
+      // fp-tomb REVIVAL: a delta that re-references a dead digest makes
+      // it live again, so it leaves the dead list (its physical copy in
+      // an older level resumes serving probes)
+      metaString(m, "fp_tomb_tab").toSeq.map { t =>
+        val kept = spark.table(t).join(fps, Seq("fp"), "left_anti")
+        "fp_tomb_tab" ->
+          Option.when(kept.limit(1).count() > 0)(Member("fptomb", kept))
+      })
   }
 
   /** Retire documents from the live chunk index — the refcount-style
-    * DELETE the shared-digest layout needs (r16 verdict item 4;
-    * the Scaladoc that used to declare this impossible described the
-    * pre-sidecar layout): a digest is live while ≥ 1 LIVE document
-    * references it, so deleting ids kills exactly the digests whose
-    * referencing docs are now all retired. The publish is
-    * O(deleted docs' digests), never O(index): the corpus-sized fps
-    * and fpdocs levels carry over by manifest reference; the delete
-    * writes (a) the merged generation-stamped doc tombstones (the
-    * [[deleteFromAnnIndex]] shadow algebra on doc_id — so delete →
-    * re-append is a first-class UPDATE here too) and (b) the DEAD-FP
-    * list: digests of the deleted docs' live generations minus those
-    * any surviving live row still references — candidates broadcast
+    * DELETE the shared-digest layout needs: a digest is live while ≥ 1
+    * LIVE document references it, so deleting ids kills exactly the
+    * digests whose referencing docs are now all retired. Besides the
+    * doc tombstones of the shared delete, it writes the DEAD-FP list:
+    * digests of the deleted docs' live generations minus those any
+    * surviving live row still references — candidates broadcast
     * against the fp-bucketed sidecar scans, so nothing corpus-sized
     * shuffles. Probes treat dead digests as absent
     * ([[TextAnalysis.chunkDedupAgainstFpLevels]]'s un-kill branch),
     * making probe-after-delete EXACTLY the probe of an index rebuilt
     * over corpus-minus-deleted (q218's oracle replays that full
-    * pipeline). The next compaction folds both lists out.
+    * pipeline).
     *
     * Invariant maintained everywhere: fp_tomb = digests physically
     * present in some level with ZERO live referencing sidecar rows.
     * Appends that re-reference a dead digest revive it (remove it
-    * from the list); compactions rewrite members to the live set and
-    * clear both lists.
+    * from the list); folds rewrite members to the live set and clear
+    * both lists.
     */
   def deleteFromChunkIndex(spark: SparkSession, ids: DataFrame,
                            db: String = "graft_idx",
-                           name: String = "chunk_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "chunk")
-    val del = ids.select(col("doc_id").cast(LongType).as("doc_id")).distinct()
-    val fpsLevels = levelTables(m, "levels")
-    val sidecar = levelTables(m, "levels_fpdocs")
-    requireLiveIds(spark, m, del,
-      unionWithOrdinal(spark, sidecar).select("doc_id", "__lvl"),
-      "doc_id", s"$db.$name")
-    val live = liveChunkSidecar(spark, m, sidecar)
-    // digests the retired docs reference (their live generation only)
-    val candidates = live.join(broadcast(del), Seq("doc_id"), "left_semi")
-      .select("fp").distinct()
-    // ... minus digests any SURVIVING live row still references: the
-    // candidate list broadcasts into the fp-bucketed sidecar scans
-    // (map-only), the delete set broadcasts into the doc filter
-    val surviving = live.join(broadcast(candidates), Seq("fp"), "left_semi")
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .select("fp").distinct()
-    val dead = candidates.join(surviving, Seq("fp"), "left_anti")
-    val newFpTomb = metaString(m, "fp_tomb_tab")
-      .map(t => spark.table(t).unionByName(dead).distinct())
-      .getOrElse(dead)
-    val newDocTomb = mergedTomb(spark, m, del, "doc_id", fpsLevels.size)
-    commitVersioned(spark, db, name, "chunk",
-      Seq(Member("doctomb", newDocTomb), Member("fptomb", newFpTomb)),
-      v => Seq(s"${m.getAs[Int]("chunk_tokens")} AS chunk_tokens",
-        s"${m.getAs[Int]("n_buckets")} AS n_buckets",
-        s"'${fpsLevels.mkString(",")}' AS levels",
-        s"'${sidecar.mkString(",")}' AS levels_fpdocs",
-        s"'${fq(db, name, v, "doctomb")}' AS tomb_tab",
-        s"'${fq(db, name, v, "fptomb")}' AS fp_tomb_tab"))
-  }
+                           name: String = "chunk_idx"): Int =
+    deleteLeveled(spark, db, name, Chunk, ids, (m, live, del) => {
+      // digests the retired docs reference (their live generation only)
+      val candidates = live.join(broadcast(del), Seq("doc_id"), "left_semi")
+        .select("fp").distinct()
+      // ... minus digests any SURVIVING live row still references: the
+      // candidate list broadcasts into the fp-bucketed sidecar scans
+      // (map-only), the delete set broadcasts into the doc filter
+      val surviving = live.join(broadcast(candidates), Seq("fp"), "left_semi")
+        .join(broadcast(del), Seq("doc_id"), "left_anti")
+        .select("fp").distinct()
+      val dead = candidates.join(surviving, Seq("fp"), "left_anti")
+      Seq("fp_tomb_tab" -> Member("fptomb", metaString(m, "fp_tomb_tab")
+        .map(t => spark.table(t).unionByName(dead).distinct())
+        .getOrElse(dead)))
+    })
 
-  /** Explicit level-collapse of the live chunk index — the
-    * [[compactNearDupIndex]] maintenance motion: a probe pays one
-    * anti-join PER LEVEL (plus, after deletes, the dead-fp un-kill
-    * branch), so an index grown by many small appends that stopped
-    * arriving never amortizes its level tax without this. The live
-    * sidecar (generation-shadowed rows dropped) is the compacted
-    * reference state; its distinct fp set is the compacted digest
-    * member — which excludes every dead digest, so both tombstone
-    * lists clear. Idempotent.
-    */
-  def compactChunkIndex(spark: SparkSession, db: String = "graft_idx",
-                        name: String = "chunk_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "chunk")
-    val nBuckets = m.getAs[Int]("n_buckets")
-    // the live sidecar IS the compacted state: generation-shadowed
-    // rows drop, and the rewritten fps member (its distinct fp set)
-    // therefore drops every dead digest too — both tomb lists clear
-    val foldedFpdocs = liveChunkSidecar(spark, m,
-      levelTables(m, "levels_fpdocs")).drop("__lvl")
-    commitVersioned(spark, db, name, "chunk", Seq(
-      Member("fps", foldedFpdocs.select("fp").distinct(),
-        Seq("fp"), nBuckets),
-      Member("fpdocs", foldedFpdocs, Seq("fp"), nBuckets)),
-      v => Seq(s"${m.getAs[Int]("chunk_tokens")} AS chunk_tokens",
-        s"$nBuckets AS n_buckets",
-        s"'${fq(db, name, v, "fps")}' AS levels",
-        s"'${fq(db, name, v, "fpdocs")}' AS levels_fpdocs"))
-  }
-
-  /** Incremental publish of the live near-dup index — LEVELED (round
-    * 14, like [[appendChunkIndex]]): both members are per-document
-    * maps (band rows, shingle sets), disjoint from the live index by
-    * the id gate, so the delta's derivations publish as one new
-    * (banded, base) LEVEL PAIR and the live levels carry over by
-    * manifest reference — nothing corpus-sized rewrites, publish cost
-    * ∝ delta. The probe runs per level and unions the (small) pair
-    * results ([[probeNearDups]]) — exact, because a candidate pair's
-    * corpus document lives in exactly one level, so both the bucket
-    * collision and the Jaccard verify of that pair are contained in
-    * its level's probe. Past `maxLevels` the publish compacts (the
-    * LSM amortization).
+  /** Incremental publish of the live near-dup index — LEVELED: both
+    * members are per-document maps (band rows, shingle sets), disjoint
+    * from the live index by the id gate, so the delta's derivations
+    * publish as one new (banded, base) LEVEL PAIR — nothing
+    * corpus-sized rewrites, publish cost ∝ delta. The probe runs per
+    * level and unions the (small) pair results ([[probeNearDups]]) —
+    * exact, because a candidate pair's corpus document lives in exactly
+    * one level, so both the bucket collision and the Jaccard verify of
+    * that pair are contained in its level's probe.
     */
   def appendNearDupIndex(spark: SparkSession, delta: DataFrame,
                          content: Column, id: Column,
                          db: String = "graft_idx",
                          name: String = "neardup_idx",
                          maxLevels: Int = NearDupMaxLevels): Int = {
-    require(maxLevels >= 1, s"maxLevels ($maxLevels) must be >= 1")
     val m = manifestOrThrow(spark, db, name, "neardup")
-    val (n, k, bands) = (m.getAs[Int]("n"), m.getAs[Int]("k"),
-      m.getAs[Int]("bands"))
-    val nBuckets = m.getAs[Int]("n_buckets")
-    val oldBanded = levelTables(m, "levels_banded")
-    val oldBase = levelTables(m, "levels_base")
-    // append-only gate over the LIVE id set (fully-shadowed ids are
-    // re-insertable — the generation-stamp upsert, see the ANN twin)
-    val liveIds = {
-      val all = unionWithOrdinal(spark, oldBase).select("doc_id", "__lvl")
-      tombTable(m).fold(all)(t => dropShadowed(all, spark.table(t),
-        "doc_id"))
-    }
-    requireNewIds(liveIds,
-      delta.select(id.as("doc_id")).distinct(), "doc_id", s"$db.$name")
-    val baseD = Dedup.minhashBase(delta, content, id, n)
-    val metaBase = Seq(s"$n AS n", s"$k AS k", s"$bands AS bands",
-      s"$nBuckets AS n_buckets")
-    val tomb = tombTable(m)
-    if (oldBanded.size >= maxLevels) {
-      // compaction FOLDS the tombstones out of BOTH rewritten members
-      // and clears the list — level-aware, so a re-inserted doc's
-      // newer generation survives (the ANN-delete discipline)
-      def fold(levels: Seq[String], deltaPart: DataFrame): DataFrame = {
-        val unioned = unionWithOrdinal(spark, levels)
-          .unionByName(deltaPart.withColumn("__lvl", lit(levels.size)))
-        tomb.fold(unioned)(t =>
-          dropShadowed(unioned, spark.table(t), "doc_id")).drop("__lvl")
-      }
-      commitVersioned(spark, db, name, "neardup", Seq(
-        Member("banded",
-          fold(oldBanded, Dedup.minhashBanded(baseD, k, bands)),
-          Seq("bucket"), nBuckets),
-        Member("base",
-          fold(oldBase, baseD.select(col("doc_id"), col("sh"))),
-          Seq("doc_id"), nBuckets)),
-        v => metaBase ++ Seq(
-          s"'${fq(db, name, v, "banded")}' AS levels_banded",
-          s"'${fq(db, name, v, "base")}' AS levels_base"))
-    } else {
-      val i = oldBanded.size
-      commitVersioned(spark, db, name, "neardup", Seq(
-        Member(s"banded_l$i", Dedup.minhashBanded(baseD, k, bands),
-          Seq("bucket"), nBuckets),
-        Member(s"base_l$i", baseD.select(col("doc_id"), col("sh")),
-          Seq("doc_id"), nBuckets)),
-        v => metaBase ++ tomb.map(t => s"'$t' AS tomb_tab") ++ Seq(
-          s"'${(oldBanded :+ fq(db, name, v, s"banded_l$i")).mkString(",")}' AS levels_banded",
-          s"'${(oldBase :+ fq(db, name, v, s"base_l$i")).mkString(",")}' AS levels_base"))
-    }
+    appendLeveled(spark, db, name, NearDup, m, maxLevels,
+      delta.select(id.as("doc_id")).distinct(), {
+        val base = Dedup.minhashBase(delta, content, id, m.getAs[Int]("n"))
+        Map("banded" -> Dedup.minhashBanded(base, m.getAs[Int]("k"),
+            m.getAs[Int]("bands")),
+          "base" -> base.select(col("doc_id"), col("sh")))
+      })
   }
 
   /** Probe a batch against the live match index: every maximal
@@ -567,25 +574,19 @@ object StandingIndex {
                       content: Column, id: Column, chunkTokens: Int = 8,
                       nBuckets: Int = 64, db: String = "graft_idx",
                       name: String = "chunk_idx"): Int = {
-    // the (fp, doc_id) sidecar (round 17) is what makes the family
-    // delete-capable: digests are SHARED across documents, so
-    // retire-by-id needs reference attribution — see
-    // [[deleteFromChunkIndex]]. Probes never read it; it is bucketed
-    // on fp so delete-time liveness checks broadcast into its buckets.
     val fpdocs = TextAnalysis.corpusChunkFpDocs(corpus, content, id,
       chunkTokens)
-    commitVersioned(spark, db, name, "chunk", Seq(
-      Member("fps", fpdocs.select("fp").distinct(), Seq("fp"), nBuckets),
-      Member("fpdocs", fpdocs, Seq("fp"), nBuckets)),
-      v => Seq(s"$chunkTokens AS chunk_tokens", s"$nBuckets AS n_buckets",
-        s"'${fq(db, name, v, "fps")}' AS levels",
-        s"'${fq(db, name, v, "fpdocs")}' AS levels_fpdocs"))
+    commitVersioned(spark, db, name,
+        oneLevel(Chunk, Seq(fpdocs.select("fp").distinct(), fpdocs), nBuckets)) { v =>
+      Seq("kind" -> "chunk", "chunk_tokens" -> chunkTokens,
+        "n_buckets" -> nBuckets) ++ oneLevelFields(db, name, Chunk, v)
+    }
   }
 
   /** Probe a batch against the live chunk index —
     * `TextAnalysis.chunkDedupIncremental`'s exact output (per batch
     * doc: chunk counts and the reassembled dedup_text), corpus side =
-    * one anti-join against the bucketed digest table.
+    * one anti-join per bucketed digest level.
     */
   def probeChunks(spark: SparkSession, batch: DataFrame, content: Column,
                   id: Column, db: String = "graft_idx",
@@ -595,7 +596,7 @@ object StandingIndex {
       levelTables(m, "levels").map(spark.table),
       batch, content, id, m.getAs[Int]("chunk_tokens"),
       // dead digests (zero live referencing docs, awaiting the next
-      // compaction fold) must not count as corpus hits — see
+      // fold) must not count as corpus hits — see
       // [[deleteFromChunkIndex]]
       deadFps = metaString(m, "fp_tomb_tab").map(spark.table))
   }
@@ -614,15 +615,12 @@ object StandingIndex {
                         name: String = "neardup_idx"): Int = {
     require(k % bands == 0, "k must divide into bands")
     val base = Dedup.minhashBase(corpus, content, id, n)
-    commitVersioned(spark, db, name, "neardup", Seq(
-      Member("banded", Dedup.minhashBanded(base, k, bands),
-        Seq("bucket"), nBuckets),
-      Member("base", base.select(col("doc_id"), col("sh")),
-        Seq("doc_id"), nBuckets)),
-      v => Seq(s"$n AS n", s"$k AS k", s"$bands AS bands",
-        s"$nBuckets AS n_buckets",
-        s"'${fq(db, name, v, "banded")}' AS levels_banded",
-        s"'${fq(db, name, v, "base")}' AS levels_base"))
+    commitVersioned(spark, db, name, oneLevel(NearDup, Seq(
+        Dedup.minhashBanded(base, k, bands), base.select(col("doc_id"), col("sh"))),
+        nBuckets)) { v =>
+      Seq("kind" -> "neardup", "n" -> n, "k" -> k, "bands" -> bands,
+        "n_buckets" -> nBuckets) ++ oneLevelFields(db, name, NearDup, v)
+    }
   }
 
   /** Probe a batch against the live near-dup index —
@@ -643,14 +641,14 @@ object StandingIndex {
     val banded = levelTables(m, "levels_banded")
     val base = levelTables(m, "levels_base")
     // tombstoned corpus docs (retired generations awaiting the next
-    // compaction fold) drop out of each LEVEL's pair results: every
-    // (new_id, dup_of) pair is independent — no ranking — so the
-    // level-aware filter (a tombstone kills only pairs whose corpus
-    // doc lives in a level below its stamp; a re-inserted doc's newer
-    // level survives) is EXACTLY the probe of a rebuilt index without
-    // the retired generations (q216's gate). The filter sits on the
-    // batch-bounded per-level output; until the fold, retired docs
-    // still pay candidate generation — the documented tombstone trade.
+    // fold) drop out of each LEVEL's pair results: every (new_id,
+    // dup_of) pair is independent — no ranking — so the level-aware
+    // filter (a tombstone kills only pairs whose corpus doc lives in a
+    // level below its stamp; a re-inserted doc's newer level survives)
+    // is EXACTLY the probe of a rebuilt index without the retired
+    // generations (q216's gate). The filter sits on the batch-bounded
+    // per-level output; until the fold, retired docs still pay
+    // candidate generation — the documented tombstone trade.
     val tombDf = tombTable(m).map(t => spark.table(t))
     banded.zip(base).zipWithIndex.map { case ((bt, st), i) =>
       val p = Dedup.lookupNearDups(
@@ -669,79 +667,23 @@ object StandingIndex {
     }.reduce(_.unionByName(_))
   }
 
-  /** Explicit compaction of the live near-dup index — the maintenance
-    * motion a pure-delete workload needs: without it, tombstones only
-    * fold when an APPEND happens to cross `maxLevels`, so a corpus
-    * that shrinks (GDPR erasure, licence withdrawal) would pay the
-    * probe-side anti-join and the retired docs' candidate generation
-    * forever. Rewrites all levels as one (minus tombstones) and
-    * clears the list — the same fold the append-triggered compaction
-    * runs, callable on its own schedule. Idempotent: compacting a
-    * 1-level tombstone-free index recommits an identical layout.
-    */
-  def compactNearDupIndex(spark: SparkSession, db: String = "graft_idx",
-                          name: String = "neardup_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "neardup")
-    def folded(field: String): DataFrame = {
-      val unioned = unionWithOrdinal(spark, levelTables(m, field))
-      tombTable(m).fold(unioned)(t =>
-        dropShadowed(unioned, spark.table(t), "doc_id")).drop("__lvl")
-    }
-    val nBuckets = m.getAs[Int]("n_buckets")
-    commitVersioned(spark, db, name, "neardup", Seq(
-      Member("banded", folded("levels_banded"),
-        Seq("bucket"), nBuckets),
-      Member("base", folded("levels_base"),
-        Seq("doc_id"), nBuckets)),
-      v => Seq(s"${m.getAs[Int]("n")} AS n", s"${m.getAs[Int]("k")} AS k",
-        s"${m.getAs[Int]("bands")} AS bands", s"$nBuckets AS n_buckets",
-        s"'${fq(db, name, v, "banded")}' AS levels_banded",
-        s"'${fq(db, name, v, "base")}' AS levels_base"))
-  }
-
-  /** Retire documents from the live near-dup index — the DELETE half
-    * of its LSM lifecycle, [[deleteFromAnnIndex]]'s twin on doc_id:
-    * ids land in a tombstone member (O(tombstones) publish; the band
-    * and shingle levels carry over by manifest reference), probes
-    * anti-join the list on the corpus side of every pair, and the
-    * next compaction ([[appendNearDupIndex]] past `maxLevels`) folds
-    * the tombstones out of both rewritten members and clears the
-    * list. Unlike ANN's rank semantics, near-dup pairs are
-    * independent, so probe-after-delete is EXACTLY the probe of a
-    * full rebuild without the retired docs — the strongest possible
-    * oracle, and q216 gates it against the full SQL replay over
-    * corpus-minus-deleted.
+  /** Retire documents from the live near-dup index (the shared delete on
+    * doc_id). Unlike ANN's rank semantics, near-dup pairs are
+    * independent, so probe-after-delete is EXACTLY the probe of a full
+    * rebuild without the retired docs — q216 gates it against the full
+    * SQL replay over corpus-minus-deleted.
     *
-    * The chunk index gained its delete in round 17 via the
-    * (fp, doc_id) reference sidecar ([[deleteFromChunkIndex]]). The
-    * MATCH index remains the one family without retire-by-id: its
-    * hot-cap/sub splits are functions of GLOBAL occurrence counts, so
-    * a retire that merely removed the deleted docs' rows would drift
-    * from rebuild semantics whenever the cap binds (a gh capped
-    * because of the deleted docs' occurrences would stay split/capped
-    * after the delete where a rebuild would uncap it) — documented
-    * rebuild-instead semantics.
+    * The MATCH index has no retire-by-id: its hot-cap/sub splits are
+    * functions of GLOBAL occurrence counts, so a retire that merely
+    * removed the deleted docs' rows would drift from rebuild semantics
+    * whenever the cap binds (a gh capped because of the deleted docs'
+    * occurrences would stay split/capped after the delete where a
+    * rebuild would uncap it) — documented rebuild-instead semantics.
     */
   def deleteFromNearDupIndex(spark: SparkSession, ids: DataFrame,
                              db: String = "graft_idx",
-                             name: String = "neardup_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "neardup")
-    val del = ids.select(col("doc_id").cast(LongType).as("doc_id")).distinct()
-    val baseLevels = levelTables(m, "levels_base")
-    requireLiveIds(spark, m, del,
-      unionWithOrdinal(spark, baseLevels).select("doc_id", "__lvl"),
-      "doc_id", s"$db.$name")
-    val newTomb = mergedTomb(spark, m, del, "doc_id", baseLevels.size)
-    val metaBase = Seq(s"${m.getAs[Int]("n")} AS n",
-      s"${m.getAs[Int]("k")} AS k", s"${m.getAs[Int]("bands")} AS bands",
-      s"${m.getAs[Int]("n_buckets")} AS n_buckets")
-    commitVersioned(spark, db, name, "neardup",
-      Seq(Member("tomb", newTomb)),
-      v => metaBase ++ Seq(
-        s"'${levelTables(m, "levels_banded").mkString(",")}' AS levels_banded",
-        s"'${baseLevels.mkString(",")}' AS levels_base",
-        s"'${fq(db, name, v, "tomb")}' AS tomb_tab"))
-  }
+                             name: String = "neardup_idx"): Int =
+    deleteLeveled(spark, db, name, NearDup, ids)
 
   // ----------------------------------------------------- ANN (IVFADC)
 
@@ -772,24 +714,21 @@ object StandingIndex {
       .select(col("query_id").as("vec_id"), col("qe").as("e"))
     val (coarseDf, booksDf, codes) =
       Similarity.ivfadcEncode(base, nCells, m, ksub, corpusFrom, iters, dim)
-    commitVersioned(spark, db, name, "ann", Seq(
-      Member("codes", codes, Seq("cell"), nBuckets,
-        sortKeys = Seq("cell", "vec_id")),
+    commitVersioned(spark, db, name, oneLevel(Ann, Seq(codes), nBuckets) ++ Seq(
       // centroid self-dots (cc/bcc) are derived at probe time by the
       // same dot kernel — persisting floats twice buys nothing
       Member("coarse", coarseDf.select("cell", "ce")),
-      Member("books", booksDf.select("s", "code", "bce"))),
-      v => Seq(s"$nCells AS n_cells", s"$m AS m", s"$ksub AS ksub",
-        s"$iters AS iters", s"$dim AS dim", s"$nBuckets AS n_buckets",
-        s"'${fq(db, name, v, "codes")}' AS levels_codes",
-        s"'${fq(db, name, v, "coarse")}' AS coarse_tab",
-        s"'${fq(db, name, v, "books")}' AS books_tab"))
+      Member("books", booksDf.select("s", "code", "bce")))) { v =>
+      Seq("kind" -> "ann", "n_cells" -> nCells, "m" -> m, "ksub" -> ksub,
+        "iters" -> iters, "dim" -> dim, "n_buckets" -> nBuckets) ++
+        oneLevelFields(db, name, Ann, v) ++
+        Seq("coarse_tab" -> fq(db, name, v, "coarse"),
+          "books_tab" -> fq(db, name, v, "books"))
+    }
   }
 
   /** FQ tombstone table of a live index version, if any — a manifest
-    * with no delete since its last build or compaction carries no such
-    * field. Shared by the ANN (vec_id) and near-dup (doc_id) delete
-    * paths.
+    * with no delete since its last build or fold carries no such field.
     */
   private def tombTable(m: Row): Option[String] =
     metaString(m, "tomb_tab")
@@ -802,25 +741,13 @@ object StandingIndex {
     scala.util.Try(m.getAs[String](field)).toOption.flatMap(Option(_))
       .map(_.trim).filter(_.nonEmpty)
 
-  /** Union a leveled member's tables with every row stamped by its
-    * LEVEL ORDINAL (position in the manifest's level list = append
-    * order) as `__lvl` — the generation axis the tombstone shadow
-    * semantics run on.
-    */
-  private def unionWithOrdinal(spark: SparkSession,
-                               tables: Seq[String]): DataFrame =
-    tables.zipWithIndex.map { case (t, i) =>
-      spark.table(t).withColumn("__lvl", lit(i))
-    }.reduce(_.unionByName(_))
-
   /** Generation-stamped shadow semantics (the upsert enabler): a
     * tombstone row (key, dead_below) kills exactly the rows of `key`
     * living in levels BELOW the stamp — levels published after the
     * delete (a re-insert) are untouched, so delete → append of the
     * same id is a first-class UPDATE instead of a rebuild. `df` must
-    * carry `__lvl` ([[unionWithOrdinal]]); the tombstone list
-    * broadcasts (≪ corpus, or you'd compact), keeping the anti-join
-    * map-only.
+    * carry `__lvl`; the tombstone list broadcasts (≪ corpus, or you'd
+    * compact), keeping the anti-join map-only.
     */
   private def dropShadowed(df: DataFrame, tomb: DataFrame,
                            key: String): DataFrame =
@@ -828,18 +755,14 @@ object StandingIndex {
       df(key) === tomb(key) && df("__lvl") < tomb("dead_below"),
       "left_anti")
 
-  /** The loud liveness gate both delete paths share: every id being
-    * retired must currently be LIVE (published, and not fully
-    * shadowed by an earlier tombstone) — deleting an unknown id or
-    * double-deleting is an upstream id-bookkeeping bug surfaced
-    * immediately, never a silent no-op. `published` must carry
-    * `__lvl`.
+  /** The loud liveness gate of the delete: every id being retired must
+    * currently be LIVE (published, and not fully shadowed by an
+    * earlier tombstone) — deleting an unknown id or double-deleting is
+    * an upstream id-bookkeeping bug surfaced immediately, never a
+    * silent no-op.
     */
-  private def requireLiveIds(spark: SparkSession, m: Row, del: DataFrame,
-                             published: DataFrame, key: String,
+  private def requireLiveIds(del: DataFrame, live: DataFrame, key: String,
                              what: String): Unit = {
-    val live = tombTable(m).fold(published)(t =>
-      dropShadowed(published, spark.table(t), key)).select(key)
     val dead = del.join(live, Seq(key), "left_anti").limit(1).count()
     require(dead == 0,
       s"delete on $what: some ids are not live in the index (never " +
@@ -860,76 +783,23 @@ object StandingIndex {
       .groupBy(key).agg(max("dead_below").as("dead_below"))
   }
 
-  /** The meta fields every ANN commit carries over from the live
-    * manifest `m`: the build parameters and the quantizer tables (frozen,
-    * so carried by reference, never rewritten).
-    */
-  private def annMetaBase(m: Row): Seq[String] =
-    Seq(s"${m.getAs[Int]("n_cells")} AS n_cells", s"${m.getAs[Int]("m")} AS m",
-      s"${m.getAs[Int]("ksub")} AS ksub", s"${m.getAs[Int]("iters")} AS iters",
-      s"${m.getAs[Int]("dim")} AS dim",
-      s"${m.getAs[Int]("n_buckets")} AS n_buckets") ++
-      Seq("coarse_tab", "books_tab")
-        .map(f => s"'${levelTables(m, f).mkString(",")}' AS $f")
-
-  /** Explicit compaction of the live ANN index —
-    * [[compactNearDupIndex]]'s twin: all code levels rewrite as one,
-    * minus tombstones; quantizer tables carry over by reference
-    * (frozen, never rewritten). See the near-dup twin for why a
-    * pure-delete workload needs this as its own motion.
-    */
-  def compactAnnIndex(spark: SparkSession, db: String = "graft_idx",
-                      name: String = "ann_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "ann")
-    val unioned = unionWithOrdinal(spark, levelTables(m, "levels_codes"))
-    val folded = tombTable(m).fold(unioned)(t =>
-      dropShadowed(unioned, spark.table(t), "vec_id")).drop("__lvl")
-    val nBuckets = m.getAs[Int]("n_buckets")
-    commitVersioned(spark, db, name, "ann", Seq(
-      Member("codes", folded, Seq("cell"), nBuckets,
-        sortKeys = Seq("cell", "vec_id"))),
-      v => annMetaBase(m) :+
-        s"'${fq(db, name, v, "codes")}' AS levels_codes")
-  }
-
-  /** Retire vectors from the live ANN index — the DELETE half of the
-    * LSM motion ([[appendAnnIndex]] is the INSERT half): the ids land
-    * in a TOMBSTONE member; the corpus-sized code levels and the
-    * quantizer tables carry over by manifest reference, untouched on
-    * disk, so a delete costs O(tombstones), never O(index). Probes
-    * anti-join the tombstones BEFORE ranking ([[probeAnn]]), so top-k
-    * is computed over the surviving corpus — a tombstoned vector can
-    * never shadow a live neighbor out of the result. The next
-    * compaction ([[appendAnnIndex]] past `maxLevels`) folds the
-    * tombstones into the rewritten code level and clears the list —
-    * the standard LSM delete amortization. Quantizers are NOT
-    * retrained (production delete semantics: the trained cell/code
-    * geometry keeps the deleted vectors' influence until the next
-    * full build — q215's oracle replays exactly that).
-    *
-    * Loud gates, house style: every id must be LIVE in the index —
-    * deleting an unknown id or double-deleting is a pipeline bug
-    * surfaced immediately, not a silent no-op.
+  /** Retire vectors from the live ANN index (the shared delete on
+    * vec_id). Probes anti-join the tombstones BEFORE ranking
+    * ([[probeAnn]]), so top-k is computed over the surviving corpus — a
+    * tombstoned vector can never shadow a live neighbor out of the
+    * result. Quantizers are NOT retrained (production delete semantics:
+    * the trained cell/code geometry keeps the deleted vectors'
+    * influence until the next full build — q215's oracle replays
+    * exactly that).
     */
   def deleteFromAnnIndex(spark: SparkSession, ids: DataFrame,
                          db: String = "graft_idx",
-                         name: String = "ann_idx"): Int = {
-    val m = manifestOrThrow(spark, db, name, "ann")
-    val del = ids.select(col("vec_id").cast(LongType).as("vec_id")).distinct()
-    val levels = levelTables(m, "levels_codes")
-    requireLiveIds(spark, m, del,
-      unionWithOrdinal(spark, levels).select("vec_id", "__lvl"),
-      "vec_id", s"$db.$name")
-    commitVersioned(spark, db, name, "ann",
-      Seq(Member("tomb", mergedTomb(spark, m, del, "vec_id", levels.size))),
-      v => annMetaBase(m) ++ Seq(
-        s"'${levels.mkString(",")}' AS levels_codes",
-        s"'${fq(db, name, v, "tomb")}' AS tomb_tab"))
-  }
+                         name: String = "ann_idx"): Int =
+    deleteLeveled(spark, db, name, Ann, ids)
 
   /** The live coarse/books quantizer tables, named by the manifest
-    * (appends carry them by reference — frozen quantizers are never
-    * rewritten).
+    * (every commit after the build carries them by reference — frozen
+    * quantizers are never rewritten).
     */
   private def annQuantizers(spark: SparkSession, db: String, name: String,
                             m: Row): (DataFrame, DataFrame) = {
@@ -944,16 +814,11 @@ object StandingIndex {
   /** Incremental publish of the live ANN index — the FROZEN-QUANTIZER
     * append every production IVF system uses: new vectors are
     * assigned cells and PQ codes against the live version's trained
-    * centroids (map-only, [[Similarity.ivfadcEncodeDelta]]). LEVELED
-    * (round 14): the delta's codes publish as a new level table and
-    * the live code levels AND the quantizer tables carry over by
-    * manifest reference — the former append rewrote every code bucket
-    * plus verbatim copies of coarse/books, so publish cost grew with
-    * INDEX size; now it is ∝ delta, with the LSM compaction past
-    * `maxLevels`. Probes union the cell-pruned level scans (map-only
-    * against broadcast LUTs — no corpus-side exchange to lose).
-    * Unlike the dedup appends this is NOT bit-identical to a full
-    * rebuild (a rebuild would retrain on base ∪ delta) — it is the
+    * centroids (map-only, [[Similarity.ivfadcEncodeDelta]]) and publish
+    * as a new code level. Probes union the cell-pruned level scans
+    * (map-only against broadcast LUTs — no corpus-side exchange to
+    * lose). Unlike the dedup appends this is NOT bit-identical to a
+    * full rebuild (a rebuild would retrain on base ∪ delta) — it is the
     * documented approximation production trades for O(delta) publish
     * cost, and q207 gates it against an oracle that replays exactly
     * these semantics (train on the base slice, encode everything).
@@ -962,53 +827,19 @@ object StandingIndex {
                      db: String = "graft_idx",
                      name: String = "ann_idx",
                      maxLevels: Int = 8): Int = {
-    require(maxLevels >= 1, s"maxLevels ($maxLevels) must be >= 1")
     val m = manifestOrThrow(spark, db, name, "ann")
-    val (nCells, pqM, ksub, iters, dim, nBuckets) =
-      (m.getAs[Int]("n_cells"), m.getAs[Int]("m"), m.getAs[Int]("ksub"),
-        m.getAs[Int]("iters"), m.getAs[Int]("dim"), m.getAs[Int]("n_buckets"))
-    val oldCodes = levelTables(m, "levels_codes")
-    // append-only gate over the LIVE id set: a fully-shadowed
-    // (tombstoned) id is re-insertable — delete → append is the
-    // first-class UPDATE the generation stamps exist for
-    val liveIds = {
-      val all = unionWithOrdinal(spark, oldCodes).select("vec_id", "__lvl")
-      tombTable(m).fold(all)(t => dropShadowed(all, spark.table(t),
-        "vec_id"))
-    }
-    requireNewIds(liveIds,
-      delta.select(col("vec_id")).distinct(), "vec_id", s"$db.$name")
-    val (coarseDf, booksDf) = annQuantizers(spark, db, name, m)
-    val coarse = coarseDf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    val booksRows = booksDf.collect()
-    val books = (0 until pqM).map(s => booksRows.filter(_.getInt(0) == s)
-      .map(r => (r.getLong(1), r.getSeq[Double](2))).sortBy(_._1).toSeq)
-    val deltaCodes =
-      Similarity.ivfadcEncodeDelta(delta, coarse, books, pqM, dim)
-    val metaBase = annMetaBase(m)
-    val tomb = tombTable(m)
-    if (oldCodes.size >= maxLevels) {
-      // compaction FOLDS the tombstones (level-aware — a re-inserted
-      // id's newer generation survives): the rewritten single level
-      // drops every retired generation and the manifest clears the
-      // list — probes stop paying the anti-join until the next delete
-      val unioned = unionWithOrdinal(spark, oldCodes)
-        .unionByName(deltaCodes.withColumn("__lvl", lit(oldCodes.size)))
-      val folded = tomb.fold(unioned)(t =>
-        dropShadowed(unioned, spark.table(t), "vec_id")).drop("__lvl")
-      commitVersioned(spark, db, name, "ann", Seq(
-        Member("codes", folded, Seq("cell"), nBuckets,
-          sortKeys = Seq("cell", "vec_id"))),
-        v => metaBase :+ s"'${fq(db, name, v, "codes")}' AS levels_codes")
-    } else {
-      val lvl = s"codes_l${oldCodes.size}"
-      commitVersioned(spark, db, name, "ann", Seq(
-        Member(lvl, deltaCodes, Seq("cell"), nBuckets,
-          sortKeys = Seq("cell", "vec_id"))),
-        v => metaBase ++ tomb.map(t => s"'$t' AS tomb_tab") :+
-          s"'${(oldCodes :+ fq(db, name, v, lvl)).mkString(",")}' AS levels_codes")
-    }
+    appendLeveled(spark, db, name, Ann, m, maxLevels,
+      delta.select(col("vec_id")).distinct(), {
+        val pqM = m.getAs[Int]("m")
+        val (coarseDf, booksDf) = annQuantizers(spark, db, name, m)
+        val coarse = coarseDf.collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+        val booksRows = booksDf.collect()
+        val books = (0 until pqM).map(s => booksRows.filter(_.getInt(0) == s)
+          .map(r => (r.getLong(1), r.getSeq[Double](2))).sortBy(_._1).toSeq)
+        Map("codes" ->
+          Similarity.ivfadcEncodeDelta(delta, coarse, books, pqM, m.getAs[Int]("dim")))
+      })
   }
 
   /** Probe queries against the live ANN index —
@@ -1046,12 +877,11 @@ object StandingIndex {
       .map { case (t, i) => spark.table(t)
         .filter(col("cell").isin(cells: _*)).withColumn("__lvl", lit(i)) }
       .reduce(_.unionByName(_))
-    // tombstones (retired generations awaiting the next compaction
-    // fold) drop out BEFORE the top-k rank — level-aware: a tombstone
-    // kills only rows BELOW its stamp, so a re-inserted id's newer
-    // level survives. The id list is tiny by construction (≪ corpus,
-    // or you'd compact): the anti-join broadcasts, the scan stays
-    // map-only
+    // tombstones (retired generations awaiting the next fold) drop out
+    // BEFORE the top-k rank — level-aware: a tombstone kills only rows
+    // BELOW its stamp, so a re-inserted id's newer level survives. The
+    // id list is tiny by construction (≪ corpus, or you'd compact):
+    // the anti-join broadcasts, the scan stays map-only
     val live = tombTable(m).fold(codes)(t =>
       dropShadowed(codes, spark.table(t), "vec_id")).drop("__lvl")
     Similarity.ivfadcSearch(q, coarseDf, booksDf, live, pqM, dim / pqM, k,

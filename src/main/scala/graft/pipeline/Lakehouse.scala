@@ -8,6 +8,7 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions.{col, count, lit}
 import graft.quality.Checks
 
@@ -84,7 +85,7 @@ object Lakehouse {
   }
 
   /** The versions of `name` whose tables `text` names. */
-  private[graft] def namedVersions(name: String, text: String): Set[Int] =
+  private def namedVersions(name: String, text: String): Set[Int] =
     versionName(name).findAllMatchIn(text).map(_.group(1).toInt).toSet
 
   /** Retained version numbers of `fqTable`, ascending — what
@@ -181,22 +182,26 @@ object Lakehouse {
     * which writes version N's tables and returns the SELECT the view
     * `db.name` is to serve; repoint the view there ([[publish]], the
     * commit point); drop every version table except those of N, of the
-    * version that was live before, of every version the new SELECT
-    * names, and of the `pinned` versions. Returns N.
+    * version that was live before, and of every version the new or the
+    * superseded view's SELECT names. Returns N.
     *
     * That is the whole retention rule. The superseded version survives
     * until the next commit, so a reader that planned against it has a
-    * full commit interval to drain; a standing index pins the versions
-    * its superseded manifest still names, for the same readers.
+    * full commit interval to drain. A table's superseded view names only
+    * the version it served; a standing index's superseded manifest also
+    * names the older level tables it carried, which its readers may
+    * still scan.
     */
   private[graft] def commitVersion(spark: SparkSession, db: String,
-      name: String, pinned: Set[Int] = Set.empty)(write: Int => String): Int = {
+      name: String)(write: Int => String): Int = {
     val tables = versionedTables(spark, db, name)
-    val live = liveVersion(spark, s"$db.$name")
+    val superseded = view(spark, db, name)
+    val live = superseded.flatMap(_.properties.get("graft.live_version")).map(_.toInt)
     val next = tables.map(_._1).maxOption.getOrElse(-1) + 1
     val select = write(next)
     publish(spark, db, name, next, live, select)
-    val keep = pinned ++ live + next ++ namedVersions(name, select)
+    val keep = live.toSet + next ++ namedVersions(name, select) ++
+      superseded.flatMap(_.viewText).toSet.flatMap(namedVersions(name, _))
     tables.collect { case (v, t) if !keep(v) => t }
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
     next
@@ -223,15 +228,18 @@ object Lakehouse {
     }
   }
 
+  /** The catalog entry of the view `db.name`, if there is one. */
+  private def view(spark: SparkSession, db: String,
+                   name: String): Option[CatalogTable] =
+    if (!spark.catalog.tableExists(s"$db.$name")) None
+    else scala.util.Try(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(name, Some(db)))).toOption
+
   private def viewProp(spark: SparkSession, fqTable: String,
-                       key: String): Option[Int] =
-    if (!spark.catalog.tableExists(fqTable)) None
-    else scala.util.Try {
-      val (db, name) = dbAndName(spark, fqTable)
-      spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(name, Some(db)))
-        .properties.get(key).map(_.toInt)
-    }.toOption.flatten
+                       key: String): Option[Int] = {
+    val (db, name) = dbAndName(spark, fqTable)
+    view(spark, db, name).flatMap(_.properties.get(key)).map(_.toInt)
+  }
 
   /** The version the live view currently serves; `None` when there is
     * no view.
