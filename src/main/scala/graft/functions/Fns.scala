@@ -283,7 +283,7 @@ object Fns {
     * sorts: no aggregate, join, window, distinct, dedup, repartition or
     * sort. Only such a frame still has its scan's partitioning.
     */
-  private def isScanShaped(df: DataFrame): Boolean = {
+  private[graft] def isScanShaped(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical
     df.queryExecution.analyzed.collectFirst {
       case _: logical.Aggregate                  => ()

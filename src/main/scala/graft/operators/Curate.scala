@@ -64,7 +64,6 @@ object Curate {
   private def gramFps(df: DataFrame, content: Column, id: Column,
                       n: Int): DataFrame = {
     import org.apache.spark.sql.classic.GraftColumnBridge._
-    graft.expressions.GraftFunctions.ensureRegistered(df.sparkSession)
     graft.functions.Fns.spreadIfNarrow(
         df.select(id.as("doc_id"), content.as("__content")), col("doc_id"))
       .select(col("doc_id"), split(col("__content"), "\\s+").as("toks"))

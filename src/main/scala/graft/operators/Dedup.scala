@@ -95,31 +95,16 @@ object Dedup {
     * scan has ≥ target splits and this is a no-op.
     */
   private[operators] def spreadScan(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val scanShaped = df.queryExecution.analyzed.collectFirst {
-      case _: logical.Aggregate          => ()
-      case _: logical.Join               => ()
-      case _: logical.Window             => ()
-      case _: logical.Distinct           => ()
-      // Dataset.distinct()/dropDuplicates() plan as Deduplicate (not
-      // Distinct) — they shuffle just the same
-      case _: logical.Deduplicate        => ()
-      case _: logical.DeduplicateWithinWatermark => ()
-      case _: logical.RepartitionOperation => ()
-      case _: logical.Sort               => ()
-    }.isEmpty
-    if (scanShaped && df.rdd.getNumPartitions < target)
+    if (graft.functions.Fns.isScanShaped(df) &&
+        df.rdd.getNumPartitions < target)
       df.repartition(target)
     else df
   }
 
   private def tokenizedDocs(docs: DataFrame, content: Column,
-                            id: Column): DataFrame = {
-    // the shingle consumers resolve the native `shingles` function
-    graft.expressions.GraftFunctions.ensureRegistered(docs.sparkSession)
+                            id: Column): DataFrame =
     spreadScan(docs).select(id.as("doc_id"), barrierSplit(content).as("toks"))
-  }
 
   /** (doc_id, g) exploded shingle pairs with the generator FUSED onto
     * the shingle expression — one kernel call per document, one output

@@ -1006,17 +1006,35 @@ object Similarity {
 
   // ------------------------------------------------------- IVFADC
 
-  /** IVFADC — the published production-ANN shape ([[ivfTopK]]'s
-    * inverted file + [[pqTopK]]'s product quantizer, composed the way
-    * the ADC paper does): a coarse L2 quantizer of `nCells` full-dim
-    * centroids partitions the corpus into cells, and PQ codebooks are
-    * trained on the RESIDUALS `v − c_cell(v)` — residuals concentrate
-    * near zero, so the same `m × ksub` code budget spends its
-    * precision on the informative part (the within-cell offset), not
-    * on re-encoding the cell location PQ-on-raw wastes bits on. A
-    * query probes its `nprobe` nearest cells and scans ONLY their
-    * codes with per-(query, cell) lookup tables over the residual
-    * query `q − c_cell`.
+  /** A trained IVFADC index — the published production-ANN shape
+    * ([[ivfTopK]]'s inverted file + [[pqTopK]]'s product quantizer,
+    * composed the way the ADC paper does): a coarse L2 quantizer of
+    * `nCells` full-dim centroids partitions the corpus into cells, and
+    * PQ codebooks are trained on the RESIDUALS `v − c_cell(v)` —
+    * residuals concentrate near zero, so the same `m × ksub` code
+    * budget spends its precision on the informative part (the
+    * within-cell offset), not on re-encoding the cell location
+    * PQ-on-raw wastes bits on. A query probes its `nprobe` nearest
+    * cells and scans ONLY their codes with per-(query, cell) lookup
+    * tables over the residual query `q − c_cell`.
+    *
+    * The model is the one trained IVFADC artifact: the coarse table
+    * (cell, ce, cc), the PQ codebook table (s, code, bce, bcc), the
+    * encoded corpus codes (vec_id, cell, code_0..code_{m−1}) and the
+    * parameters that produced them. [[ivfadcTrain]] makes it;
+    * [[ivfadcTopK]], [[ivfadcRefineTopK]], [[ivfCellRecall]] and
+    * [[StandingIndex.buildAnnIndex]] (which persists it) take it, so
+    * one training serves every probe budget and every index. Codes
+    * stay lazy (a map-only encode over the embeddings frame).
+    */
+  final case class IvfadcModel private[operators] (
+      coarseDf: DataFrame, booksDf: DataFrame, codes: DataFrame,
+      nCells: Int, searchFrom: Long, m: Int, ksub: Int, subLen: Int,
+      iters: Int) {
+    def dim: Int = m * subLen
+  }
+
+  /** Train the IVFADC quantizers and encode the corpus.
     *
     * Layout (the [[pqTopK]] convention, shifted): coarse seeds =
     * vec_id < nCells, queries = [nCells, nCells+nQueries), corpus =
@@ -1032,36 +1050,8 @@ object Similarity {
     * residual encoding are map-only [[argminLit]] expression folds
     * (the residual itself is one broadcast join against the
     * nCells-row coarse table — no corpus shuffle anywhere in the
-    * encode path); the search joins the (nQueries·nprobe·ksub)-row
-    * broadcast LUTs against the code table, so ONLY probed cells'
-    * codes survive the join — at 100 TB the scan cost drops by
-    * ~nprobe/nCells versus [[pqTopK]]'s full-code scan, which is the
-    * entire point of the IVF half. Determinism: every argmin ties on
-    * cent_id/cell/neighbor_id; every float is the shared fold.
-    *
-    * @return (query_id, neighbor_id, dist, rnk), rnk ≤ k per query —
-    *         dist is the asymmetric Σ_s ‖(q−c)_s − r̂_s‖² estimate
-    */
-  /** Trained in-session IVFADC artifacts — the coarse table, PQ
-    * codebook table, and encoded corpus codes, plus the fixture
-    * layout needed to cut the query slice. Produced by [[ivfadcTrain]]
-    * and consumed by [[ivfadcTopKWith]]/[[ivfadcRefineTopKWith]]: the
-    * production retrieval shape trains ONCE and serves many probes —
-    * retraining per query re-pays the Lloyd rounds (two driver-
-    * coordinated trainings) every time. The persisted twin of this
-    * split is [[StandingIndex.buildAnnIndex]]/probeAnn; this one
-    * stays in-session (lazy frames + driver codebook rows).
-    */
-  final case class IvfadcModel private[operators] (
-      coarseDf: DataFrame, booksDf: DataFrame, codes: DataFrame,
-      nCells: Int, searchFrom: Long, m: Int, subLen: Int)
-
-  /** Train the IVFADC quantizers and encode the corpus (the expensive
-    * half of [[ivfadcTopK]], split out so several retrievals share
-    * one training). Identical arithmetic and seed layout to the fused
-    * operator — [[ivfadcTopK]] delegates here, so probes over this
-    * model are value-identical to the inline path and replay the same
-    * oracle.
+    * encode path). Determinism: every argmin ties on cent_id/cell;
+    * every float is the shared fold.
     */
   def ivfadcTrain(emb: DataFrame, nCells: Int = 16, m: Int = 4,
                   ksub: Int = 16, nQueries: Int = 8, iters: Int = 2,
@@ -1069,74 +1059,63 @@ object Similarity {
     require(m >= 1 && dim % m == 0, s"m ($m) must divide dim ($dim)")
     require(nCells >= 1 && ksub >= 1 && iters >= 0 && nQueries >= 1,
       "bad args")
-    val searchFrom = nCells + nQueries
-    val base = withNorm(emb).select(col("vec_id"), col("e"))
-    val (coarseDf, booksDf, codes) =
-      ivfadcEncode(base, nCells, m, ksub, searchFrom, iters, dim)
-    IvfadcModel(coarseDf, booksDf, codes, nCells, searchFrom.toLong, m,
-      dim / m)
-  }
-
-  /** ADC retrieval over an already-trained [[IvfadcModel]] — the
-    * probe half of [[ivfadcTopK]].
-    */
-  def ivfadcTopKWith(model: IvfadcModel, emb: DataFrame, k: Int = 5,
-                     nprobe: Int = 4): DataFrame = {
-    require(k >= 1, s"k ($k) must be >= 1")
-    require(nprobe >= 1 && nprobe <= model.nCells,
-      s"need 1 <= nprobe ($nprobe) <= nCells (${model.nCells})")
-    val base = withNorm(emb).select(col("vec_id"), col("e"))
-    val q = base.filter(col("vec_id") >= model.nCells &&
-        col("vec_id") < model.searchFrom)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"))
-    ivfadcSearch(q, model.coarseDf, model.booksDf, model.codes, model.m,
-      model.subLen, k, nprobe)
-  }
-
-  def ivfadcTopK(emb: DataFrame, nCells: Int = 16, m: Int = 4,
-                 ksub: Int = 16, nQueries: Int = 8, k: Int = 5,
-                 nprobe: Int = 4, iters: Int = 2,
-                 dim: Int = 64): DataFrame =
-    ivfadcTopKWith(ivfadcTrain(emb, nCells, m, ksub, nQueries, iters, dim),
-      emb, k, nprobe)
-
-  /** Train-and-encode half of [[ivfadcTopK]], split out (round 13) so
-    * [[StandingIndex.buildAnnIndex]] can persist its outputs: trains
-    * the coarse codebook (seeds = vec_id < nCells, train = vec_id ≥
-    * `corpusFrom`) and the residual PQ books, then encodes the corpus
-    * map-only. Returns (coarseDf(cell, ce, cc), booksDf(s, code, bce,
-    * bcc), codes(vec_id, cell, code_0..code_{m−1})).
-    */
-  private[operators] def ivfadcEncode(base: DataFrame, nCells: Int, m: Int,
-                                      ksub: Int, corpusFrom: Long,
-                                      iters: Int, dim: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val spark = base.sparkSession
+    val spark = emb.sparkSession
     import spark.implicits._
+    val searchFrom = nCells + nQueries
     val subLen = dim / m
+    val base = withNorm(emb).select(col("vec_id"), col("e"))
     // coarse codebook: ONE full-dim "subspace" through the shared
     // trainer (seeds < nCells, train = corpus)
     val fullSubs = base.select(col("vec_id"), lit(0).as("s"), col("e"))
       .withColumn("ee", dot(col("e"), col("e")))
     val coarse: Seq[(Long, Seq[Double])] =
-      lloydTrainL2All(spark, fullSubs, 1, nCells, corpusFrom.toInt, iters).head
+      lloydTrainL2All(spark, fullSubs, 1, nCells, searchFrom, iters).head
     val coarseDf = coarse.toDF("cell", "ce")
       .withColumn("cc", dot(col("ce"), col("ce")))
     // residual PQ codebooks: seeds = first ksub corpus vectors'
     // residual subvectors (cent ids = their vec_ids), train = all
-    val resid = ivfadcResiduals(base.filter(col("vec_id") >= corpusFrom),
+    val resid = ivfadcResiduals(base.filter(col("vec_id") >= searchFrom),
       coarse, coarseDf)
     val rsubs = resid.select(col("vec_id"),
         posexplode(array((0 until m).map(s =>
           slice(col("r"), s * subLen + 1, subLen)): _*)).as(Seq("s", "e")))
       .withColumn("ee", dot(col("e"), col("e")))
     val books: Seq[Seq[(Long, Seq[Double])]] =
-      lloydTrainL2All(spark, rsubs, m, corpusFrom.toInt + ksub, corpusFrom.toInt, iters)
+      lloydTrainL2All(spark, rsubs, m, searchFrom + ksub, searchFrom, iters)
     val booksDf = (0 until m)
       .flatMap(s => books(s).map { case (j, c) => (s, j, c) })
       .toDF("s", "code", "bce")
       .withColumn("bcc", dot(col("bce"), col("bce")))
-    (coarseDf, booksDf, ivfadcEncodeWith(resid, books, m, subLen))
+    IvfadcModel(coarseDf, booksDf, ivfadcEncodeWith(resid, books, m, subLen),
+      nCells, searchFrom.toLong, m, ksub, subLen, iters)
+  }
+
+  /** The model's query slice of `emb` (vec_id in [nCells, searchFrom))
+    * as the (query_id, qe) frame [[ivfadcSearch]] reads.
+    */
+  private def modelQueries(model: IvfadcModel, emb: DataFrame): DataFrame =
+    withNorm(emb).select(col("vec_id"), col("e"))
+      .filter(col("vec_id") >= model.nCells &&
+        col("vec_id") < model.searchFrom)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"))
+
+  /** ADC retrieval over a trained [[IvfadcModel]]: the model's query
+    * slice of `emb` probes its `nprobe` nearest cells. The search joins
+    * the (nQueries·nprobe·ksub)-row broadcast LUTs against the code
+    * table, so ONLY probed cells' codes survive the join — at 100 TB
+    * the scan cost drops by ~nprobe/nCells versus [[pqTopK]]'s
+    * full-code scan, which is the entire point of the IVF half.
+    *
+    * @return (query_id, neighbor_id, dist, rnk), rnk ≤ k per query —
+    *         dist is the asymmetric Σ_s ‖(q−c)_s − r̂_s‖² estimate
+    */
+  def ivfadcTopK(model: IvfadcModel, emb: DataFrame, k: Int = 5,
+                 nprobe: Int = 4): DataFrame = {
+    require(k >= 1, s"k ($k) must be >= 1")
+    require(nprobe >= 1 && nprobe <= model.nCells,
+      s"need 1 <= nprobe ($nprobe) <= nCells (${model.nCells})")
+    ivfadcSearch(modelQueries(model, emb), model.coarseDf, model.booksDf,
+      model.codes, model.m, model.subLen, k, nprobe)
   }
 
   /** Map-only cell assignment + residuals over already-trained coarse
@@ -1153,14 +1132,14 @@ object Similarity {
         zip_with(col("e"), col("ce"), (x, y) => x - y).as("r"))
 
   /** Map-only residual encoding with FROZEN codebooks — the encode
-    * kernel of [[ivfadcEncode]] and of the standing index's
+    * kernel of [[ivfadcTrain]] and of the standing index's
     * incremental append ([[StandingIndex.appendAnnIndex]]: new
     * vectors encode against the live version's trained quantizers,
     * the standard production way an IVF index grows).
     */
-  private[operators] def ivfadcEncodeWith(resid: DataFrame,
-                                          books: Seq[Seq[(Long, Seq[Double])]],
-                                          m: Int, subLen: Int): DataFrame =
+  private def ivfadcEncodeWith(resid: DataFrame,
+                               books: Seq[Seq[(Long, Seq[Double])]],
+                               m: Int, subLen: Int): DataFrame =
     resid.select(col("vec_id") +: col("cell") +:
       (0 until m).map(s =>
         argminLit(slice(col("r"), s * subLen + 1, subLen), books(s))
@@ -1191,6 +1170,22 @@ object Similarity {
   private[operators] def ivfadcQueryFrame(emb: DataFrame): DataFrame =
     withNorm(emb).select(col("vec_id").as("query_id"), col("e").as("qe"))
 
+  /** Each query's `nprobe` nearest coarse cells: the rows of
+    * `q × coarseDf` ranked by (squared L2, cell) within each query,
+    * ranks 1..nprobe kept. The one probe ranking of the IVF family
+    * ([[probedCellIds]], [[ivfadcSearch]], [[ivfCellRecall]]).
+    */
+  private def probedCells(q: DataFrame, coarseDf: DataFrame,
+                          nprobe: Int): DataFrame = {
+    val wp = Window.partitionBy("query_id")
+      .orderBy(col("pd").asc, col("cell"))
+    q.crossJoin(broadcast(coarseDf))
+      .withColumn("pd",
+        l2(dot(col("qe"), col("qe")), dot(col("qe"), col("ce")), col("cc")))
+      .withColumn("prk", row_number().over(wp))
+      .filter(col("prk") <= nprobe)
+  }
+
   /** The distinct cells any query will probe — the driver-side half
     * of [[StandingIndex.probeAnn]]'s cell-pruning pushdown. Bounded by
     * construction: the ranking frame is nQueries × nCells rows and the
@@ -1200,16 +1195,9 @@ object Similarity {
     * bucket-pruned scan of the probed cells).
     */
   private[operators] def probedCellIds(q: DataFrame, coarseDf: DataFrame,
-                                       nprobe: Int): Seq[Long] = {
-    val wp = Window.partitionBy("query_id")
-      .orderBy(col("pd").asc, col("cell"))
-    q.crossJoin(broadcast(coarseDf))
-      .withColumn("pd",
-        l2(dot(col("qe"), col("qe")), dot(col("qe"), col("ce")), col("cc")))
-      .withColumn("prk", row_number().over(wp))
-      .filter(col("prk") <= nprobe)
+                                       nprobe: Int): Seq[Long] =
+    probedCells(q, coarseDf, nprobe)
       .select("cell").distinct().collect().map(_.getLong(0)).sorted.toSeq
-  }
 
   /** Search half of [[ivfadcTopK]] (and of
     * [[StandingIndex.probeAnn]], where `coarseDf`/`booksDf`/`codes`
@@ -1224,14 +1212,7 @@ object Similarity {
                                       booksDf: DataFrame, codes: DataFrame,
                                       m: Int, subLen: Int, k: Int,
                                       nprobe: Int): DataFrame = {
-    // probed cells: nprobe nearest coarse centroids per query
-    val wp = Window.partitionBy("query_id")
-      .orderBy(col("pd").asc, col("cell"))
-    val probed = q.crossJoin(broadcast(coarseDf))
-      .withColumn("pd",
-        l2(dot(col("qe"), col("qe")), dot(col("qe"), col("ce")), col("cc")))
-      .withColumn("prk", row_number().over(wp))
-      .filter(col("prk") <= nprobe)
+    val probed = probedCells(q, coarseDf, nprobe)
       .select(col("query_id"), col("cell"),
         zip_with(col("qe"), col("ce"), (x, y) => x - y).as("rq"))
     // per-(query, cell) asymmetric LUTs over the residual query
@@ -1273,8 +1254,8 @@ object Similarity {
     * semantics of [[StandingIndex.appendAnnIndex]] (vectors arriving
     * after the build are encoded with the live version's quantizers,
     * never retrained).
-    */
-  /** `deleteWhere` (default none) excludes matching corpus vectors
+    *
+    * `deleteWhere` (default none) excludes matching corpus vectors
     * from the CANDIDATE set only — training, assignment, and encoding
     * still cover the full corpus: the tombstone-delete semantics of
     * [[StandingIndex.deleteFromAnnIndex]] (retired vectors keep their
@@ -1417,23 +1398,11 @@ object Similarity {
     * @return (query_id, neighbor_id, dist, rnk ≤ k) — dist is EXACT
     *         L2, so ranks are immune to ADC error within the pool
     */
-  def ivfadcRefineTopK(emb: DataFrame, nCells: Int = 16, m: Int = 4,
-                       ksub: Int = 16, nQueries: Int = 8, k: Int = 5,
-                       nprobe: Int = 4, iters: Int = 2, dim: Int = 64,
-                       rerank: Int = 20): DataFrame =
-    ivfadcRefineTopKWith(
-      ivfadcTrain(emb, nCells, m, ksub, nQueries, iters, dim),
-      emb, k, nprobe, rerank)
-
-  /** [[ivfadcRefineTopK]] over an already-trained [[IvfadcModel]] —
-    * ADC candidates at `rerank`, exact-L2 re-rank, one training
-    * shared across every probe budget.
-    */
-  def ivfadcRefineTopKWith(model: IvfadcModel, emb: DataFrame,
-                           k: Int = 5, nprobe: Int = 4,
-                           rerank: Int = 20): DataFrame = {
+  def ivfadcRefineTopK(model: IvfadcModel, emb: DataFrame,
+                       k: Int = 5, nprobe: Int = 4,
+                       rerank: Int = 20): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val cand = ivfadcTopKWith(model, emb, k = rerank, nprobe)
+    val cand = ivfadcTopK(model, emb, k = rerank, nprobe)
       .select("query_id", "neighbor_id")
     val base = withNorm(emb)
     val q = base.select(col("vec_id").as("query_id"), col("e").as("qe"),
@@ -1484,37 +1453,17 @@ object Similarity {
     * nprobe probed cells. Every same-budget IVFADC variant (any PQ
     * size, any re-rank) is bounded above by this number; if the
     * ceiling sits below a recall target, the honest levers are nprobe
-    * or nCells (scan budget), not encoding quality. Trains the same
-    * coarse quantizer as [[ivfadcTopK]] (same seeds, same iters).
+    * or nCells (scan budget), not encoding quality. Reads the model's
+    * coarse quantizer and cell assignment, so it measures exactly the
+    * partition [[ivfadcTopK]] probes over `model`.
     */
-  private[graft] def ivfCellRecall(emb: DataFrame, nCells: Int = 16,
-                                   nQueries: Int = 8, k: Int = 5,
-                                   nprobe: Int = 4, iters: Int = 2)
-      : DataFrame = {
-    val searchFrom = nCells + nQueries
-    val base = withNorm(emb).select(col("vec_id"), col("e"))
-    val spark = base.sparkSession
-    import spark.implicits._
-    val fullSubs = base.select(col("vec_id"), lit(0).as("s"), col("e"))
-      .withColumn("ee", dot(col("e"), col("e")))
-    val coarse: Seq[(Long, Seq[Double])] =
-      lloydTrainL2All(spark, fullSubs, 1, nCells, searchFrom, iters).head
-    val coarseDf = coarse.toDF("cell", "ce")
-      .withColumn("cc", dot(col("ce"), col("ce")))
-    val cells = base.filter(col("vec_id") >= searchFrom)
-      .select(col("vec_id").as("neighbor_id"),
-        argminLit(col("e"), coarse).as("cell"))
-    val q = base.filter(col("vec_id") >= nCells && col("vec_id") < searchFrom)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"))
-    val wp = Window.partitionBy("query_id")
-      .orderBy(col("pd").asc, col("cell"))
-    val probed = q.crossJoin(broadcast(coarseDf))
-      .withColumn("pd",
-        l2(dot(col("qe"), col("qe")), dot(col("qe"), col("ce")), col("cc")))
-      .withColumn("prk", row_number().over(wp))
-      .filter(col("prk") <= nprobe)
+  private[graft] def ivfCellRecall(model: IvfadcModel, emb: DataFrame,
+                                   k: Int = 5, nprobe: Int = 4): DataFrame = {
+    val cells = model.codes.select(col("vec_id").as("neighbor_id"), col("cell"))
+    val probed = probedCells(modelQueries(model, emb), model.coarseDf, nprobe)
       .select("query_id", "cell")
-    bruteForceTopKL2(emb, nQueries, k, queryFrom = nCells)
+    bruteForceTopKL2(emb, (model.searchFrom - model.nCells).toInt, k,
+        queryFrom = model.nCells)
       .select("query_id", "neighbor_id")
       .join(cells, Seq("neighbor_id"))
       .join(probed.withColumnRenamed("cell", "pcell"), Seq("query_id"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.CatalogDatabase
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -199,11 +198,7 @@ object StandingIndex {
     * the version number so it can name the tables being committed.
     */
   private def commitVersioned(spark: SparkSession, db: String, name: String,
-      members: Seq[Member])(meta: Int => Seq[(String, Any)]): Int = {
-    val catalog = spark.sessionState.catalog
-    if (!catalog.databaseExists(db))
-      catalog.createDatabase(CatalogDatabase(db, "",
-        catalog.getDefaultDBPath(db), Map.empty), ignoreIfExists = true)
+      members: Seq[Member])(meta: Int => Seq[(String, Any)]): Int =
     Lakehouse.commitVersion(spark, db, name) { next =>
       members.foreach { mm =>
         val frame =
@@ -226,7 +221,6 @@ object StandingIndex {
         .map { case (f, x) => s"${Literal(x).sql} AS $f" }
         .mkString("SELECT ", ", ", "")
     }
-  }
 
   /** Commit `members` on top of the live manifest `m`: the new manifest
     * is `m` with the fields `set(N)` names replaced (None removes one).
@@ -687,45 +681,36 @@ object StandingIndex {
 
   // ----------------------------------------------------- ANN (IVFADC)
 
-  /** Build/refresh the standing IVFADC retrieval index
-    * ([[Similarity.ivfadcTopK]]'s train+encode half, persisted): the
-    * coarse centroids (nCells rows), the residual PQ codebooks
-    * (m·ksub rows), and the encoded corpus — one (cell, code_0..m−1)
-    * row per vector, bucketed on `cell` so future cell-pruned scans
-    * read only probed buckets. At 100 TB the two Lloyd trainings and
-    * the corpus encode pass ARE the ANN cost; a standing index pays
-    * them once per corpus publish, and every probe is then
+  /** Build/refresh the standing IVFADC retrieval index by persisting a
+    * trained [[Similarity.IvfadcModel]]: its coarse centroids (nCells
+    * rows), its residual PQ codebooks (m·ksub rows), and its encoded
+    * corpus — one (cell, code_0..m−1) row per vector, bucketed on
+    * `cell` so cell-pruned scans read only probed buckets. The build
+    * trains nothing: the model's two Lloyd trainings are the ANN cost,
+    * and whoever trained it may share it with other consumers
+    * ([[Similarity.ivfadcTopK]] over the same model is row-identical to
+    * [[probeAnn]] over this index, q206's gate). Every probe is then
     * batch-bounded: rank cells against the tiny persisted coarse
     * table, build LUTs against the tiny persisted books, broadcast
-    * both into one scan of the codes member ([[probeAnn]]).
-    *
-    * `emb` carries the coarse seeds (vec_id < nCells) and the corpus
-    * (vec_id ≥ corpusFrom) — [[Similarity.ivfadcTopK]]'s layout, so a
-    * probe over the same split is row-identical to the inline
-    * operator (q206's gate).
+    * both into one scan of the codes member ([[probeAnn]]). The
+    * manifest's build parameters are the model's.
     */
-  def buildAnnIndex(spark: SparkSession, emb: DataFrame, nCells: Int = 16,
-                    m: Int = 4, ksub: Int = 16, corpusFrom: Long = 24,
-                    iters: Int = 2, dim: Int = 64, nBuckets: Int = 16,
-                    db: String = "graft_idx",
-                    name: String = "ann_idx"): Int = {
-    require(m >= 1 && dim % m == 0, s"m ($m) must divide dim ($dim)")
-    val base = Similarity.ivfadcQueryFrame(emb)
-      .select(col("query_id").as("vec_id"), col("qe").as("e"))
-    val (coarseDf, booksDf, codes) =
-      Similarity.ivfadcEncode(base, nCells, m, ksub, corpusFrom, iters, dim)
-    commitVersioned(spark, db, name, oneLevel(Ann, Seq(codes), nBuckets) ++ Seq(
-      // centroid self-dots (cc/bcc) are derived at probe time by the
-      // same dot kernel — persisting floats twice buys nothing
-      Member("coarse", coarseDf.select("cell", "ce")),
-      Member("books", booksDf.select("s", "code", "bce")))) { v =>
-      Seq("kind" -> "ann", "n_cells" -> nCells, "m" -> m, "ksub" -> ksub,
-        "iters" -> iters, "dim" -> dim, "n_buckets" -> nBuckets) ++
+  def buildAnnIndex(spark: SparkSession, model: Similarity.IvfadcModel,
+                    nBuckets: Int = 16, db: String = "graft_idx",
+                    name: String = "ann_idx"): Int =
+    commitVersioned(spark, db, name,
+      oneLevel(Ann, Seq(model.codes), nBuckets) ++ Seq(
+        // centroid self-dots (cc/bcc) are derived at probe time by the
+        // same dot kernel — persisting floats twice buys nothing
+        Member("coarse", model.coarseDf.select("cell", "ce")),
+        Member("books", model.booksDf.select("s", "code", "bce")))) { v =>
+      Seq("kind" -> "ann", "n_cells" -> model.nCells, "m" -> model.m,
+        "ksub" -> model.ksub, "iters" -> model.iters, "dim" -> model.dim,
+        "n_buckets" -> nBuckets) ++
         oneLevelFields(db, name, Ann, v) ++
         Seq("coarse_tab" -> fq(db, name, v, "coarse"),
           "books_tab" -> fq(db, name, v, "books"))
     }
-  }
 
   /** FQ tombstone table of a live index version, if any — a manifest
     * with no delete since its last build or fold carries no such field.

@@ -1738,7 +1738,6 @@ object TextAnalysis {
   def ngramNovelty(docs: DataFrame, content: Column, id: Column,
                    n: Int = 3): DataFrame = {
     import org.apache.spark.sql.classic.GraftColumnBridge._
-    graft.expressions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = graft.functions.Fns.spreadIfNarrow(
         docs.select(id.as("doc_id"), content.as("__content")), col("doc_id"))
       .select(col("doc_id"), tokens(col("__content")).as("toks"))

@@ -8,7 +8,7 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.catalog.{CatalogDatabase, CatalogTable}
 import org.apache.spark.sql.functions.{col, count, lit}
 import graft.quality.Checks
 
@@ -177,7 +177,8 @@ object Lakehouse {
 
   /** The one versioned commit behind a published name, shared by
     * [[ctasSwap]] and the standing indexes' manifests
-    * ([[graft.operators.StandingIndex]]). In order: list the version
+    * ([[graft.operators.StandingIndex]]). In order: create `db` if it
+    * is missing (a catalog call, no SQL command); list the version
     * tables of `db.name`; allocate version N = max + 1; run `write(N)`,
     * which writes version N's tables and returns the SELECT the view
     * `db.name` is to serve; repoint the view there ([[publish]], the
@@ -194,6 +195,10 @@ object Lakehouse {
     */
   private[graft] def commitVersion(spark: SparkSession, db: String,
       name: String)(write: Int => String): Int = {
+    val catalog = spark.sessionState.catalog
+    if (!catalog.databaseExists(db))
+      catalog.createDatabase(CatalogDatabase(db, "",
+        catalog.getDefaultDBPath(db), Map.empty), ignoreIfExists = true)
     val tables = versionedTables(spark, db, name)
     val superseded = view(spark, db, name)
     val live = superseded.flatMap(_.properties.get("graft.live_version")).map(_.toInt)
@@ -369,8 +374,6 @@ object Lakehouse {
   def build(spark: SparkSession, bronzeRoot: String,
             silverDb: String = "silver", goldDb: String = "gold",
             countRows: Boolean = true): BuildResult = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $silverDb")
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $goldDb")
     val keyCols = Seq("season", "round", "grand_prix")
 
     val silver = SilverEntities.flatMap { entity =>

@@ -3744,14 +3744,13 @@ object Extensions {
     * scan ([[graft.operators.Similarity.ivfadcTopK]]). Same layout
     * split as q199's ground truth (queries 16..23, corpus ≥ 24).
     *
-    * q204/q205/q212/q213/q214 all train nCells=16, m=4, ksub=16,
-    * iters=4 on the same embeddings, so they share one trained model:
-    * the production retrieval shape trains ONCE and serves every probe
-    * budget — per-query retraining re-paid the two Lloyd trainings
-    * (~4.4 s of each query's 5-6 s at sf1) five times. The oracles
-    * replay the full literal train per query, unchanged, and probes
-    * over the model are value-identical to the inline operators
-    * (ivfadcTopK itself delegates through the same split).
+    * q204/q205/q212/q213/q214 and the standing ANN indexes of q206,
+    * q215 and q217 all use nCells=16, m=4, ksub=16, iters=4 over the
+    * full embeddings, so they share one trained model: the production
+    * retrieval shape trains ONCE and serves every probe budget and
+    * every index build — per-consumer retraining re-paid the two Lloyd
+    * trainings (~4.4 s of each query's 5-6 s at sf1) each time. The
+    * oracles replay the full literal train per query, unchanged.
     */
   @volatile private var ivfadcModel: Similarity.IvfadcModel = _
 
@@ -3770,7 +3769,7 @@ object Extensions {
   }
 
   private val q204 = Q("q204_knn_ivfadc",
-    (s, d) => Similarity.ivfadcTopKWith(sharedIvfadcModel(s, d),
+    (s, d) => Similarity.ivfadcTopK(sharedIvfadcModel(s, d),
         Tables.embeddings(s, d), k = 5, nprobe = 2)
       .orderBy("query_id", "rnk"),
     Some(Similarity.ivfadcTopKOracle(nCells = 16, m = 4, ksub = 16,
@@ -3783,7 +3782,7 @@ object Extensions {
     */
   private val q205 = Q("q205_ivfadc_recall",
     (s, d) => Similarity.recallAtK(
-        Similarity.ivfadcTopKWith(sharedIvfadcModel(s, d),
+        Similarity.ivfadcTopK(sharedIvfadcModel(s, d),
           Tables.embeddings(s, d), k = 5, nprobe = 2),
         sharedBruteTruthL2(s, d))
       .orderBy("query_id"),
@@ -3794,23 +3793,19 @@ object Extensions {
         queryFrom = 16))))
 
   // ---- standing ANN index (q206/q207/q215/q217): the persisted IVFADC
-  // corpus side — trained quantizers + encoded codes; probes are
+  // model — trained quantizers + encoded codes; probes are
   // batch-bounded (the q192-q194 economics applied to retrieval).
 
   /** q204's exact layout: seeds < 16, queries 16..23, corpus >= 24. */
   private def annQueries(emb: DataFrame) =
     emb.filter(col("vec_id") >= 16 && col("vec_id") < 24)
 
-  private def buildAnn(s: SparkSession, emb: DataFrame, name: String) =
-    StandingIndex.buildAnnIndex(s, emb, nCells = 16, m = 4, ksub = 16,
-      corpusFrom = 24, iters = 4, nBuckets = 8, name = name)
-
   /** The delete/upsert twins' slice: every 7th corpus vector. */
   private def annRetired(emb: DataFrame) =
     emb.filter(col("vec_id") >= 24 && col("vec_id") % 7 === 3)
 
   /** q204 through the STANDING ANN index: same oracle, same output,
-    * but training and corpus encoding happened at build time — the
+    * but the shared model's quantizers and codes are persisted — the
     * probe ranks cells against the persisted coarse table, builds
     * LUTs against the persisted books, and scans only probed cells'
     * codes. The retrieval twin of the q192-q194 probe economics.
@@ -3818,7 +3813,9 @@ object Extensions {
   private val q206 = Q("q206_index_probe_ann",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val idx = indexOnce(s, d, "emb_ann")(buildAnn(s, emb, _))
+      val idx = indexOnce(s, d, "emb_ann")(name =>
+        StandingIndex.buildAnnIndex(s, sharedIvfadcModel(s, d), nBuckets = 8,
+          name = name))
       StandingIndex.probeAnn(s, annQueries(emb), k = 5, nprobe = 2,
           name = idx)
         .orderBy("query_id", "rnk")
@@ -3838,7 +3835,10 @@ object Extensions {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val idx = indexOnce(s, d, "emb_ann_inc") { name =>
-        buildAnn(s, emb.filter(col("vec_id") < 300), name)
+        StandingIndex.buildAnnIndex(s,
+          Similarity.ivfadcTrain(emb.filter(col("vec_id") < 300), nCells = 16,
+            m = 4, ksub = 16, nQueries = 8, iters = 4),
+          nBuckets = 8, name = name)
         StandingIndex.appendAnnIndex(s, emb.filter(col("vec_id") >= 300),
           name = name)
       }
@@ -3866,7 +3866,8 @@ object Extensions {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val idx = indexOnce(s, d, "emb_ann_del") { name =>
-        buildAnn(s, emb, name)
+        StandingIndex.buildAnnIndex(s, sharedIvfadcModel(s, d), nBuckets = 8,
+          name = name)
         StandingIndex.deleteFromAnnIndex(s, annRetired(emb).select("vec_id"),
           name = name)
       }
@@ -3893,7 +3894,8 @@ object Extensions {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val idx = indexOnce(s, d, "emb_ann_ups") { name =>
-        buildAnn(s, emb, name)
+        StandingIndex.buildAnnIndex(s, sharedIvfadcModel(s, d), nBuckets = 8,
+          name = name)
         StandingIndex.deleteFromAnnIndex(s, annRetired(emb).select("vec_id"),
           name = name)
         StandingIndex.appendAnnIndex(s, annRetired(emb), name = name)
@@ -3985,7 +3987,7 @@ object Extensions {
     * pruned-scan cost; quantization error gone within the pool.
     */
   private val q212 = Q("q212_knn_ivfadc_refine",
-    (s, d) => Similarity.ivfadcRefineTopKWith(sharedIvfadcModel(s, d),
+    (s, d) => Similarity.ivfadcRefineTopK(sharedIvfadcModel(s, d),
         Tables.embeddings(s, d), k = 5, nprobe = 2, rerank = 20)
       .orderBy("query_id", "rnk"),
     Some(Similarity.ivfadcRefineTopKOracle(nCells = 16, m = 4, ksub = 16,
@@ -4001,7 +4003,7 @@ object Extensions {
     */
   private val q213 = Q("q213_ivfadc_refine_recall",
     (s, d) => Similarity.recallAtK(
-        Similarity.ivfadcRefineTopKWith(sharedIvfadcModel(s, d),
+        Similarity.ivfadcRefineTopK(sharedIvfadcModel(s, d),
           Tables.embeddings(s, d), k = 5, nprobe = 2, rerank = 20),
         sharedBruteTruthL2(s, d))
       .orderBy("query_id"),
@@ -4019,7 +4021,7 @@ object Extensions {
     */
   private val q214 = Q("q214_refine_recall_nprobe4",
     (s, d) => Similarity.recallAtK(
-        Similarity.ivfadcRefineTopKWith(sharedIvfadcModel(s, d),
+        Similarity.ivfadcRefineTopK(sharedIvfadcModel(s, d),
           Tables.embeddings(s, d), k = 5, nprobe = 4, rerank = 40),
         sharedBruteTruthL2(s, d))
       .orderBy("query_id"),

@@ -622,17 +622,11 @@ object EventStream {
   private[graft] val StreamIdMarker = "_GRAFT_STREAM_ID"
 
   /** Committed state versions under a [[targetEncodingSink]] stateDir:
-    * `batch=<id>` children whose [[CommitMarker]] exists — or, for
-    * state committed BEFORE the explicit marker existed, parquet's own
-    * `_SUCCESS` (when present it means the job committed; the explicit
-    * marker exists because its emission can be config-disabled, not
-    * because it is untrustworthy when present). Without the legacy
-    * fallback, a stream resuming its checkpoint at batchId N>0 over a
-    * pre-marker stateDir would see zero committed versions and
-    * silently restart the fold from the bare delta — the exact
-    * silent-reset failure the marker change was meant to prevent. A
-    * half-written version (crash mid-write) has neither file and is
-    * invisible — the retry's overwrite replaces it.
+    * `batch=<id>` children whose [[CommitMarker]] exists.
+    * [[applyEncodingBatch]] writes the marker after each version's
+    * parquet, so a half-written version (a crash mid-write, or between
+    * the parquet commit and the marker write) has no marker and is
+    * invisible — the replay of its batchId overwrites it.
     */
   private[graft] def committedStateVersions(spark: SparkSession,
                                             stateDir: String): Seq[Long] = {
@@ -642,8 +636,7 @@ object EventStream {
     else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("batch=") &&
-          (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CommitMarker)) ||
-           fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))))
+          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CommitMarker)))
         scala.util.Try(n.stripPrefix("batch=").toLong).toOption
       else None
     }

@@ -590,8 +590,10 @@ class OperatorsSpec extends SparkSpec {
     }
     val emb = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
     // layout: coarse seeds 0..15, queries 16..35, corpus >= 36
-    val adc = Similarity.ivfadcTopK(emb, nCells = 16, m = 2, ksub = 16,
-      nQueries = 20, k = 5, nprobe = 1, iters = 2, dim = dim)
+    def model(e: org.apache.spark.sql.DataFrame) = Similarity.ivfadcTrain(e,
+      nCells = 16, m = 2, ksub = 16, nQueries = 20, iters = 2, dim = dim)
+    val trained = model(emb)
+    val adc = Similarity.ivfadcTopK(trained, emb, k = 5, nprobe = 1)
     val rows = adc.collect()
     assert(rows.length === 20 * 5)
     val byQ = rows.groupBy(_.getLong(0))
@@ -610,14 +612,13 @@ class OperatorsSpec extends SparkSpec {
     assert(same >= 80, s"ivfadc same-cluster fraction ${same / 100.0} below floor")
     // partitioning invariance: both trainings, the residual encode,
     // the probe ranking, and the final top-k are deterministic
-    val re = Similarity.ivfadcTopK(emb.repartition(7), nCells = 16, m = 2,
-      ksub = 16, nQueries = 20, k = 5, nprobe = 1, iters = 2, dim = dim)
+    val re7 = emb.repartition(7)
+    val re = Similarity.ivfadcTopK(model(re7), re7, k = 5, nprobe = 1)
       .collect()
     assert(re.map(_.toSeq).toSet === rows.map(_.toSeq).toSet)
     // widening the probe can only add candidates: nprobe=16 (all
     // cells) distances are <= the nprobe=1 winner at every rank
-    val all = Similarity.ivfadcTopK(emb, nCells = 16, m = 2, ksub = 16,
-      nQueries = 20, k = 1, nprobe = 16, iters = 2, dim = dim)
+    val all = Similarity.ivfadcTopK(trained, emb, k = 1, nprobe = 16)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     byQ.foreach { case (q, rs) =>
       val best1 = rs.map(_.getDouble(2)).min
@@ -642,8 +643,9 @@ class OperatorsSpec extends SparkSpec {
       (i, v)
     }
     val emb = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val refined = Similarity.ivfadcRefineTopK(emb, nCells = 16, m = 2,
-      ksub = 16, nQueries = 20, k = 5, nprobe = 16, iters = 2, dim = dim,
+    val model = Similarity.ivfadcTrain(emb, nCells = 16, m = 2, ksub = 16,
+      nQueries = 20, iters = 2, dim = dim)
+    val refined = Similarity.ivfadcRefineTopK(model, emb, k = 5, nprobe = 16,
       rerank = 400)
     val exact = Similarity.bruteForceTopKL2(emb, nQueries = 20, k = 5,
       queryFrom = 16)
@@ -656,11 +658,9 @@ class OperatorsSpec extends SparkSpec {
     def recall(approx: org.apache.spark.sql.DataFrame) =
       Similarity.recallAtK(approx, exact)
         .agg(avg("recall")).head().getDouble(0)
-    val plain = recall(Similarity.ivfadcTopK(emb, nCells = 16, m = 2,
-      ksub = 16, nQueries = 20, k = 5, nprobe = 1, iters = 2, dim = dim))
-    val ref1 = recall(Similarity.ivfadcRefineTopK(emb, nCells = 16, m = 2,
-      ksub = 16, nQueries = 20, k = 5, nprobe = 1, iters = 2, dim = dim,
-      rerank = 20))
+    val plain = recall(Similarity.ivfadcTopK(model, emb, k = 5, nprobe = 1))
+    val ref1 = recall(Similarity.ivfadcRefineTopK(model, emb, k = 5,
+      nprobe = 1, rerank = 20))
     info(f"plain@nprobe1 recall $plain%.3f, refine@20 $ref1%.3f")
     assert(ref1 >= plain - 1e-12,
       s"refine recall $ref1 must not trail plain ADC $plain")
@@ -687,8 +687,9 @@ class OperatorsSpec extends SparkSpec {
     val rotated = emb.select(col("vec_id"),
       transform(col("embedding"), x => -x).as("embedding"))
     def ceiling(e: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-      Similarity.ivfCellRecall(e, nCells = 16, nQueries = 8, k = 5,
-          nprobe = 2, iters = 2)
+      Similarity.ivfCellRecall(
+          Similarity.ivfadcTrain(e, nCells = 16, nQueries = 8, iters = 2), e,
+          k = 5, nprobe = 2)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
         .sortBy(_._1).toSeq
     val base = ceiling(emb)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
-import graft.operators.{Dedup, StandingIndex, TextAnalysis}
+import graft.operators.{Dedup, Similarity, StandingIndex, TextAnalysis}
 import graft.pipeline.Lakehouse
 import graft.tables.Tables
 
@@ -363,9 +363,10 @@ class StandingIndexSpec extends SparkSpec {
         Map("n" -> 2, "k" -> 6, "bands" -> 3, "n_buckets" -> 3),
         "levels_banded", Seq("tomb_tab")),
       Lifecycle("a_life",
-        () => StandingIndex.buildAnnIndex(spark, emb.filter(col("vec_id") < 200),
-          nCells = 8, m = 2, ksub = 8, corpusFrom = 24, iters = 1, nBuckets = 3,
-          db = db, name = "a_life"),
+        () => StandingIndex.buildAnnIndex(spark,
+          Similarity.ivfadcTrain(emb.filter(col("vec_id") < 200), nCells = 8,
+            m = 2, ksub = 8, nQueries = 16, iters = 1),
+          nBuckets = 3, db = db, name = "a_life"),
         i => StandingIndex.appendAnnIndex(spark, embSlice(i), db = db,
           name = "a_life", maxLevels = 2),
         () => StandingIndex.deleteFromAnnIndex(spark,
@@ -448,24 +449,60 @@ class StandingIndexSpec extends SparkSpec {
   private def emb = Tables.embeddings(spark, dir)
   private def annQueries =
     emb.filter(col("vec_id") >= 16 && col("vec_id") < 24)
+  /** The default-layout model: seeds < 16, queries 16..23, corpus >= 24. */
+  private def annModel(e: org.apache.spark.sql.DataFrame) =
+    Similarity.ivfadcTrain(e, nCells = 16, m = 4, ksub = 16, nQueries = 8,
+      iters = 2)
 
   test("probeAnn ≡ inline ivfadcTopK (training and encode persisted)") {
-    StandingIndex.buildAnnIndex(spark, emb, nCells = 16, m = 4, ksub = 16,
-      corpusFrom = 24, iters = 2, nBuckets = 4, db = db, name = "a_eq")
+    StandingIndex.buildAnnIndex(spark, annModel(emb), nBuckets = 4,
+      db = db, name = "a_eq")
     val probe = StandingIndex.probeAnn(spark, annQueries, k = 5,
       nprobe = 3, db = db, name = "a_eq")
-    val direct = graft.operators.Similarity.ivfadcTopK(emb, nCells = 16,
-      m = 4, ksub = 16, nQueries = 8, k = 5, nprobe = 3, iters = 2)
+    val direct = Similarity.ivfadcTopK(annModel(emb), emb, k = 5, nprobe = 3)
     assert(rows(probe) === rows(direct))
     assert(probe.count() === 8L * 5)
+  }
+
+  test("buildAnnIndex persists exactly the given model: members, manifest, probe") {
+    // non-default parameters, so a manifest field read from a default
+    // instead of the model cannot pass
+    val trainSlice = emb.filter(col("vec_id") < 300)
+    val model = Similarity.ivfadcTrain(trainSlice, nCells = 8, m = 2,
+      ksub = 8, nQueries = 16, iters = 1)
+    StandingIndex.buildAnnIndex(spark, model, nBuckets = 3, db = db,
+      name = "a_model")
+    val mf = StandingIndex.manifest(spark, db, "a_model").get
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def member(field: String, like: org.apache.spark.sql.DataFrame) =
+      spark.table(mf.getAs[String](field)).select(like.columns.map(col): _*)
+    val coarse = model.coarseDf.select("cell", "ce")
+    val books = model.booksDf.select("s", "code", "bce")
+    assert(sorted(member("coarse_tab", coarse)) === sorted(coarse))
+    assert(sorted(member("books_tab", books)) === sorted(books))
+    assert(sorted(member("levels_codes", model.codes)) === sorted(model.codes))
+    assert(Seq("n_cells", "m", "ksub", "iters", "dim").map(mf.getAs[Int]) ===
+      Seq(model.nCells, model.m, model.ksub, model.iters, model.dim))
+    assert(Seq(model.nCells, model.m, model.ksub, model.iters, model.dim) ===
+      Seq(8, 2, 8, 1, 64))
+    assert(mf.getAs[Int]("n_buckets") === 3)
+    // the model's query slice is [nCells, searchFrom) = [8, 24)
+    val probe = StandingIndex.probeAnn(spark,
+        emb.filter(col("vec_id") >= 8 && col("vec_id") < 24), k = 5,
+        nprobe = 3, db = db, name = "a_model")
+      .orderBy("query_id", "rnk").collect().toSeq
+    val direct = Similarity.ivfadcTopK(model, trainSlice, k = 5, nprobe = 3)
+      .orderBy("query_id", "rnk").collect().toSeq
+    assert(probe === direct)
+    assert(probe.size === 16 * 5)
   }
 
   test("appendAnnIndex: frozen quantizers, delta-only encode, loud id gate") {
     val baseSlice = emb.filter(col("vec_id") < 300)
     val deltaSlice = emb.filter(col("vec_id") >= 300)
-    StandingIndex.buildAnnIndex(spark, baseSlice, nCells = 16, m = 4,
-      ksub = 16, corpusFrom = 24, iters = 2, nBuckets = 4, db = db,
-      name = "a_app")
+    StandingIndex.buildAnnIndex(spark, annModel(baseSlice), nBuckets = 4,
+      db = db, name = "a_app")
     val v0 = StandingIndex.manifest(spark, db, "a_app").get.getAs[Int]("version")
     StandingIndex.appendAnnIndex(spark, deltaSlice, db = db, name = "a_app")
     val v1 = StandingIndex.manifest(spark, db, "a_app").get.getAs[Int]("version")
@@ -570,9 +607,8 @@ class StandingIndexSpec extends SparkSpec {
 
   test("deleteFromAnnIndex: anti-join before rank, loud gates, compaction folds") {
     val baseSlice = emb.filter(col("vec_id") < 400)
-    StandingIndex.buildAnnIndex(spark, baseSlice, nCells = 16, m = 4,
-      ksub = 16, corpusFrom = 24, iters = 2, nBuckets = 4, db = db,
-      name = "a_del")
+    StandingIndex.buildAnnIndex(spark, annModel(baseSlice), nBuckets = 4,
+      db = db, name = "a_del")
     val delIds = emb.filter(col("vec_id") >= 24 && col("vec_id") < 400 &&
       col("vec_id") % 5 === 2).select("vec_id")
     val delSet = delIds.collect().map(_.getLong(0)).toSet
@@ -642,8 +678,8 @@ class StandingIndexSpec extends SparkSpec {
     // kills only the older generation, re-encoding against the same
     // frozen quantizers reproduces the codes exactly, so the probe
     // must be bit-identical to the never-deleted index (net identity)
-    StandingIndex.buildAnnIndex(spark, emb, nCells = 16, m = 4, ksub = 16,
-      corpusFrom = 24, iters = 2, nBuckets = 4, db = db, name = "a_ups")
+    StandingIndex.buildAnnIndex(spark, annModel(emb), nBuckets = 4,
+      db = db, name = "a_ups")
     def annProbe() = rows(StandingIndex.probeAnn(spark, annQueries, k = 5,
       nprobe = 3, db = db, name = "a_ups"))
     val annBefore = annProbe()
@@ -692,8 +728,8 @@ class StandingIndexSpec extends SparkSpec {
     // must still be schedulable — and it is layout-only, so probes
     // are value-identical before and after
     // --- ANN
-    StandingIndex.buildAnnIndex(spark, emb, nCells = 16, m = 4, ksub = 16,
-      corpusFrom = 24, iters = 2, nBuckets = 4, db = db, name = "a_cmp")
+    StandingIndex.buildAnnIndex(spark, annModel(emb), nBuckets = 4,
+      db = db, name = "a_cmp")
     val annDel = emb.filter(col("vec_id") >= 24 && col("vec_id") % 9 === 4)
       .select("vec_id")
     val annDelSet = annDel.collect().map(_.getLong(0)).toSet
@@ -1233,9 +1269,11 @@ class StandingIndexSpec extends SparkSpec {
         db = db, name = "a_plain")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).toSet
-    StandingIndex.buildAnnIndex(spark, emb.filter(col("vec_id") < 300),
-      nCells = nCells, m = mSub, ksub = ksub, corpusFrom = corpusFrom,
-      iters = iters, nBuckets = 4, db = db, name = "a_plain")
+    StandingIndex.buildAnnIndex(spark,
+      Similarity.ivfadcTrain(emb.filter(col("vec_id") < 300), nCells = nCells,
+        m = mSub, ksub = ksub, nQueries = (corpusFrom - nCells).toInt,
+        iters = iters),
+      nBuckets = 4, db = db, name = "a_plain")
     // quantizer-level witness first (localizes a Lloyd/decimal drift
     // before it smears into every probe row): the persisted coarse
     // member must equal the plain model's centroids bit-for-bit
@@ -1277,8 +1315,8 @@ class StandingIndexSpec extends SparkSpec {
   }
 
   test("ANN probe plan: no shuffle between the codes member scan and its joins") {
-    StandingIndex.buildAnnIndex(spark, emb, nCells = 16, m = 4, ksub = 16,
-      corpusFrom = 24, iters = 2, nBuckets = 4, db = db, name = "a_plan")
+    StandingIndex.buildAnnIndex(spark, annModel(emb), nBuckets = 4,
+      db = db, name = "a_plan")
     // assert on the static plan tree (AQE stage wrapping hides join
     // nodes from subtree walks — the match-probe test's discipline);
     // broadcasts stay ON here: the LUT broadcast IS the design

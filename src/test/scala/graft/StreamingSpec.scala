@@ -677,7 +677,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("annProbeSink: batch parity AND a mid-stream frozen-quantizer append moves the next batch to the new version") {
-    import graft.operators.StandingIndex
+    import graft.operators.{Similarity, StandingIndex}
     import graft.tables.Tables
     val d = "/root/testdata/sf0.01"
     val emb = Tables.embeddings(spark, d)
@@ -687,9 +687,10 @@ class StreamingSpec extends SparkSpec {
     val c0 = queries.filter(col("vec_id") < 20)
     val c1 = queries.filter(col("vec_id") >= 20)
 
-    val v0 = StandingIndex.buildAnnIndex(spark, baseSlice, nCells = 16,
-      m = 4, ksub = 16, corpusFrom = 24, iters = 2, nBuckets = 4,
-      name = "stream_ann")
+    val v0 = StandingIndex.buildAnnIndex(spark,
+      Similarity.ivfadcTrain(baseSlice, nCells = 16, m = 4,
+        ksub = 16, nQueries = 8, iters = 2),
+      nBuckets = 4, name = "stream_ann")
     assert(v0 === 0)
 
     val inDir = java.nio.file.Files.createTempDirectory("graft-sann-in")
@@ -744,7 +745,7 @@ class StreamingSpec extends SparkSpec {
     // retrieval endpoint honors a GDPR erasure at the next
     // micro-batch, and the generation-stamped re-append (the q217
     // upsert) restores the vectors for the batch after that.
-    import graft.operators.StandingIndex
+    import graft.operators.{Similarity, StandingIndex}
     import graft.tables.Tables
     val d = "/root/testdata/sf0.01"
     val emb = Tables.embeddings(spark, d)
@@ -753,8 +754,10 @@ class StreamingSpec extends SparkSpec {
     val c1 = queries.filter(col("vec_id") >= 19 && col("vec_id") < 22)
     val c2 = queries.filter(col("vec_id") >= 22)
 
-    StandingIndex.buildAnnIndex(spark, emb, nCells = 16, m = 4, ksub = 16,
-      corpusFrom = 24, iters = 2, nBuckets = 4, name = "stream_ann_del")
+    StandingIndex.buildAnnIndex(spark,
+      Similarity.ivfadcTrain(emb, nCells = 16, m = 4,
+        ksub = 16, nQueries = 8, iters = 2),
+      nBuckets = 4, name = "stream_ann_del")
     def probe(qs: org.apache.spark.sql.DataFrame): Set[String] =
       StandingIndex.probeAnn(spark, qs, k = 5, nprobe = 16,
         name = "stream_ann_del").collect().map(_.toString).toSet
@@ -1214,39 +1217,6 @@ class StreamingSpec extends SparkSpec {
       EventStream.applyEncodingBatch(b, 0L, col("event_type"), label, stateDir)
     }
     assert(e.getMessage.contains("previous checkpoint"))
-  }
-
-  test("committedStateVersions: legacy _SUCCESS-only versions stay visible") {
-    import spark.implicits._
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-tenc-legacy")
-      .toString + "/state"
-    val label = (col("value") >= 0.5).cast("int")
-    def ev(eid: Long, et: String, v: Double) =
-      Seq((eid, 1700000000000000000L + eid, 20L, et, v, null: String))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    EventStream.applyEncodingBatch(ev(1L, "view", 1.0), 0L,
-      col("event_type"), label, stateDir)
-    EventStream.applyEncodingBatch(ev(2L, "view", 0.0), 1L,
-      col("event_type"), label, stateDir)
-    // simulate state committed BEFORE the explicit marker existed:
-    // parquet's _SUCCESS remains, _GRAFT_COMMIT never written
-    Seq(0L, 1L).foreach { v =>
-      val m = java.nio.file.Paths.get(stateDir, s"batch=$v", "_GRAFT_COMMIT")
-      assert(java.nio.file.Files.deleteIfExists(m))
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(stateDir, s"batch=$v", "_SUCCESS")))
-    }
-    // legacy versions must stay visible — a resume at batchId 2 folds
-    // into the accumulated state instead of silently restarting the
-    // fold from the bare delta
-    assert(EventStream.committedStateVersions(spark, stateDir).sorted
-      === Seq(0L, 1L))
-    EventStream.applyEncodingBatch(ev(3L, "view", 1.0), 2L,
-      col("event_type"), label, stateDir)
-    val state = EventStream.latestEncodingState(spark, stateDir).get
-      .collect().map(r => (r.getAs[String]("k"), r.getAs[Long]("cnt"),
-        r.getAs[Long]("sum_v"))).toSeq
-    assert(state === Seq(("view", 3L, 2L)))
   }
 
   test("targetEncodingSink: stream-id mismatch fails loudly at any batchId") {
